@@ -257,30 +257,10 @@ object Bench {
     * making each pass — and therefore the full sweep — matched by
     * construction. Status-store retention is bounded anyway so a single
     * pass over a growing registry stays flat-footed. */
-  private def makeSession(cpus: String): SparkSession = {
+  private[graft] def makeSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE partition-coalescing knobs, env-overridable for A/B runs.
-      // Defaults = Spark's own (parallelismFirst=true, advisory 64m):
-      // the r21 A/B measured parallelismFirst=false — the usual
-      // production recommendation — at +14% on a 33-query subset
-      // (dedup_hist_exact +95%: its verify/window stages shuffle ~tens
-      // of MB but are CPU-bound, and size-targeted coalescing collapsed
-      // them to 1-2 tasks). Size-driven coalescing only pays off when
-      // bytes-per-partition tracks CPU-per-partition; on this engine's
-      // compute-dense shuffles parallelism-first is the right default
-      // at every scale, so the Spark default stands (negative result
-      // recorded in OPTIMIZATION_r21.md).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      // Stateful-replay partition width override for A/B runs (read by
-      // StreamingOps.replayShufflePartitions on child sessions). Unset
-      // by default so the size-adaptive derivation engages.
-      .config("graft.replay.shufflePartitions",
-        sys.env.getOrElse("SPARK_GRAFT_REPLAY_PARTS", ""))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.ui.retainedJobs", "100")

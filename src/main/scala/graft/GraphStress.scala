@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{Graph, Lineage}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -79,12 +79,12 @@ object GraphStress {
       buildLineitem(scale, path)
       val li = spark.read.parquet(path)
       // stage volumes (untimed accounting scans)
-      val so = li.select(col("l_orderkey").as("o"), col("l_suppkey").as("s"))
-        .distinct().localCheckpoint()
+      val so = Lineage.pin(li.select(col("l_orderkey").as("o"), col("l_suppkey").as("s"))
+        .distinct())
       val nOrderPairs = so.as("x").join(so.as("y"),
         col("x.o") === col("y.o") && col("x.s") < col("y.s")).count()
       val tEdges = System.nanoTime()
-      val e = Graph.coSupplyEdges(li).localCheckpoint()
+      val e = Lineage.pin(Graph.coSupplyEdges(li))
       val nEdges = e.count()
       val edgesSec = (System.nanoTime() - tEdges) / 1e9
       val nTriangles = e.as("e1")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, SemanticDedup}
+import graft.operators.{Dedup, Lineage, SemanticDedup}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -115,8 +115,7 @@ object SemanticStress {
     val points = scales.map { scale =>
       val path = work.resolve(s"x$scale").toString
       buildCorpus(spark, srcDir, scale, path)
-      val e = spark.read.parquet(path).select("vec_id", "embedding")
-        .localCheckpoint()
+      val e = Lineage.pin(spark.read.parquet(path).select("vec_id", "embedding"))
       val n = e.count()
       // the production derived cap at this point's fitted k (the r19
       // knob rule: cap = sqrt(2·pairBudget/k), so cold candidate volume

@@ -230,12 +230,11 @@ object SparkEntry {
         .select(col("doc_id"), concat(lit("OPT "), col("text")).as("text"),
           col("lang"), col("source"), (col("n_chars") + 7).as("n_chars")),
       "doc_id")
-    // count files off a FRESH read: localCheckpoint truncates the plan
+    // count files off a FRESH read: a pin truncates the plan
     // to an RDD scan, after which inputFiles is empty
     val nFilesBefore =
       sources.VersionedTable.read(s, tbl, Some(1L)).inputFiles.length
-    val before = sources.VersionedTable.read(s, tbl, Some(1L))
-      .localCheckpoint()
+    val before = Lineage.pin(sources.VersionedTable.read(s, tbl, Some(1L)))
     val v2 = sources.VersionedTable.optimize(s, tbl)
     val after = sources.VersionedTable.read(s, tbl, Some(v2))
     val nFilesAfter = after.inputFiles.length
@@ -303,8 +302,7 @@ object SparkEntry {
     // text passes where 3 suffice). Per-row verdicts/scores restricted
     // to a subset equal the full-corpus values on that subset, so the
     // emitted rows are IDENTICAL. Metadata frames (ids, token counts,
-    // 16-byte digests) are pinned with localCheckpoint — a real cluster
-    // would use reliable checkpoint().
+    // 16-byte digests) are pinned.
     // r22: the verdict keep flag is a PER-ROW function of text, so it
     // fuses into the same single corpus scan as the token count and the
     // dedup key (TextAnalysis.verdictKeepCol seam) — two corpus text
@@ -312,13 +310,12 @@ object SparkEntry {
     // stage 1 already carries instead of a join against a third pinned
     // frame. The model score stays a separate pass: it is token-level
     // (explode + weight join + per-doc fold), not per-row.
-    val meta = docs.select(col("doc_id"),
+    val meta = Lineage.pin(docs.select(col("doc_id"),
         operators.Packing.nTokensUdf(col("text")).as("n_tokens"),
         TextAnalysis.normalizedKeyCol(col("text")).as("kh"),
-        TextAnalysis.verdictKeepCol(col("text")).as("kv"))
-      .localCheckpoint(false)
-    val keepM = Quality.scoreLinearModel(docs)
-      .filter(col("keep")).select("doc_id").localCheckpoint(false)
+        TextAnalysis.verdictKeepCol(col("text")).as("kv")), eager = false)
+    val keepM = Lineage.pin(Quality.scoreLinearModel(docs)
+      .filter(col("keep")).select("doc_id"), eager = false)
     val s1 = meta
       .join(meta.groupBy("kh").agg(min(col("doc_id")).as("doc_id")),
         Seq("kh", "doc_id"))

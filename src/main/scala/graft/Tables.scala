@@ -34,21 +34,15 @@ object Tables {
     *     TIMESTAMP_NTZ — cast to TimestampType, an exact identity on the
     *     instant because every session here pins UTC.
     *
-    * The `nanosAsLong` flag is pinned in an isolated child session
-    * (shared SparkContext and cache, separate SQLConf — the same pattern
-    * as the streaming/CC wrappers), NEVER set on the caller's session; it
-    * is a no-op for the micros vintage. The returned frame is rooted in
-    * the child; the parquet scan resolves its hadoop conf from the
-    * relation's own session, so the flag holds wherever the frame is
-    * consumed. */
+    * The `nanosAsLong` flag is pinned in a child session
+    * ([[nanosReader]]), NEVER set on the caller's session; it is a no-op
+    * for the micros vintage. The returned frame is rooted in the child;
+    * the parquet scan resolves its hadoop conf from the relation's own
+    * session, so the flag holds wherever the frame is consumed. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    val flag = "spark.sql.legacy.parquet.nanosAsLong"
-    val reader =
-      if (s.conf.getOption(flag).contains("true")) s
-      else { val child = s.newSession(); child.conf.set(flag, "true"); child }
-    val raw = apply(reader, d, "events")
+    val raw = apply(nanosReader(s), d, "events")
     raw.schema("ts").dataType match {
       case LongType =>            // TIMESTAMP(NANOS) vintage
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -57,6 +51,16 @@ object Tables {
       case _ => raw
     }
   }
+
+  /** Reads TIMESTAMP(NANOS) parquet columns as longs. */
+  val NanosFlag = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** `s` when it already carries [[NanosFlag]], else a child session
+    * that does (shared SparkContext and cache, separate SQLConf). */
+  def nanosReader(s: SparkSession): SparkSession =
+    if (s.conf.getOption(NanosFlag).contains("true")) s
+    else graft.operators.Lineage.child(s, NanosFlag -> "true")
+
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

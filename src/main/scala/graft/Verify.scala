@@ -29,35 +29,28 @@ object Verify {
     df.collect().map(_.toString).sorted.toSeq
 
   /** The two jittered config sets the gate compares under. The
-    * `graft.replay.shufflePartitions` key carries the jitter into the
-    * streaming replay harnesses' CHILD sessions, which pin their own
-    * `spark.sql.shuffle.partitions` (StreamingOps.replayShufflePartitions)
-    * — without it the gate is a no-op for exactly the streaming class
-    * whose r18 red row motivated it (r19 review finding). */
+    * [[operators.Lineage.WidthKey]] key carries the jitter into the
+    * width-sized CHILD sessions — the streaming replay harnesses and the
+    * graph/ER/CC iterations — which pin their own
+    * `spark.sql.shuffle.partitions` (a derived width that is a constant
+    * 1-2 at verification scale). Without it the gate is a no-op for
+    * exactly the streaming class whose r18 red row motivated it (r19
+    * review finding), and for pageRank's float inflow sums (r21 ADVICE). */
   private[graft] val perturbConfA: Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> "4",
-    "graft.replay.shufflePartitions" -> "4",
-    // carries the jitter into the graph/ER child sessions, whose derived
-    // width is a constant 1-2 at verification scale and would otherwise
-    // never vary under perturb (r21 ADVICE — same class as the replay
-    // override above; pageRank's float inflow sums are the invariant)
-    "graft.graph.shufflePartitions" -> "4")
+    operators.Lineage.WidthKey -> "4")
   private[graft] val perturbConfB: Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> "7",
     // smaller splits + zero open cost → more, differently-grouped scan
     // partitions where the parquet row-group layout allows it
     "spark.sql.files.maxPartitionBytes" -> "262144",
     "spark.sql.files.openCostInBytes" -> "0",
-    "graft.replay.shufflePartitions" -> "7",
-    "graft.graph.shufflePartitions" -> "7")
+    operators.Lineage.WidthKey -> "7")
 
   private def buildWith(build: (SparkSession, String) => DataFrame,
       base: SparkSession, dir: String,
-      conf: Seq[(String, String)]): DataFrame = {
-    val s = base.newSession()
-    conf.foreach { case (k, v) => s.conf.set(k, v) }
-    build(s, dir)
-  }
+      conf: Seq[(String, String)]): DataFrame =
+    build(operators.Lineage.child(base, conf: _*), dir)
 
   /** Runs `build` twice — once per jittered config set (different
     * partial-aggregation grouping and merge order) — and reports whether

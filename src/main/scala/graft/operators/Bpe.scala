@@ -74,7 +74,7 @@ object Bpe {
     * merge for merge. */
   def bpeMerges(docs: DataFrame, steps: Int = 3): DataFrame = {
     val spark = docs.sparkSession
-    val words = docs
+    val words = Lineage.pin(docs
       .select(explode(filter(split(coalesce(col("text"), lit("")), " "),
         t => t =!= "")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
@@ -85,10 +85,9 @@ object Bpe {
       // the oracle pin single-CHARACTER symbols on both engines.
       .withColumn("sym",
         concat(lit(" "), regexp_replace(col("w"), "(?s)(.)", "$1 ")))
-      .select("sym", "freq")
       // vocabulary-sized; each round rewrites it. LAZY pin: round 1's
       // aggregate materializes it — no separate checkpoint job
-      .localCheckpoint(false)
+      .select("sym", "freq"), eager = false)
     var vocab = words
     val picks = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
@@ -141,9 +140,8 @@ object Bpe {
       // lazy pin (materialized by the NEXT round's aggregate): truncates
       // lineage so the plan can't snowball over hundreds of rounds,
       // without the eager form's one-extra-driver-job-per-round
-      vocab = vocab
-        .withColumn("sym", applyMerge(col("sym"), pair, merged))
-        .localCheckpoint(false)
+      vocab = Lineage.pin(vocab
+        .withColumn("sym", applyMerge(col("sym"), pair, merged)), eager = false)
       // this round's collect was the last read of the two-rounds-back
       // copy; shift the window onto the checkpoint just created
       reapSuperseded(vocab)
@@ -211,7 +209,7 @@ object Bpe {
       cur = cur.withColumn("symc", expr)
       // pin between chunks only — a single-chunk call (≤ 256 merges)
       // keeps the original one-expression, zero-materialization plan
-      if (ci < chunks.length - 1) cur = cur.localCheckpoint(false)
+      if (ci < chunks.length - 1) cur = Lineage.pin(cur, eager = false)
     }
     cur
       .select(col("doc_id"), length(col("w")).cast("long").as("nc"),

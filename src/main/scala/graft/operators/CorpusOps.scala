@@ -534,13 +534,11 @@ object CorpusOps {
     // count, text digest). The old formulation re-evaluated the corpus
     // union + md5 + token-count UDF once per stat branch and once for
     // the threshold table (~5 text passes); pinning the metadata frame
-    // (40-ish bytes/row — a real cluster would use reliable
-    // checkpoint()) leaves exactly one. Values are unchanged: the same
+    // (40-ish bytes/row) leaves exactly one. Values are unchanged: the same
     // nTokens/md5 expressions, evaluated once instead of per-branch.
-    val meta = docs.select(col("doc_id"), col("source"),
+    val meta = Lineage.pin(docs.select(col("doc_id"), col("source"),
         nTokens(col("text")).as("n_tokens"),
-        md5(coalesce(col("text"), lit(""))).as("h"))
-      .localCheckpoint(false)
+        md5(coalesce(col("text"), lit(""))).as("h")), eager = false)
     val s1 = meta
       .join(meta.groupBy("h").agg(min(col("doc_id")).as("doc_id")),
         Seq("h", "doc_id"))

@@ -62,10 +62,9 @@ object Decontamination {
     // count, the bloomFilter treeAggregate, and the exact confirm join —
     // and an unpinned frame re-ran the benchmark shingle UDF pass for
     // each. Benchmark-scale rows (distinct shingle strings), never
-    // corpus-scale; a real cluster would use reliable checkpoint().
-    val bench = Dedup.shingleDocs(benchmark, n)
-      .select(explode(col("shingles")).as("shingle")).distinct()
-      .localCheckpoint(false)
+    // corpus-scale.
+    val bench = Lineage.pin(Dedup.shingleDocs(benchmark, n)
+      .select(explode(col("shingles")).as("shingle")).distinct(), eager = false)
     val nBench = bench.count() // action on the benchmark side only (small)
     // Empty benchmark → nothing can be contaminated. Short-circuit with
     // the output schema: stat.bloomFilter over zero rows yields a

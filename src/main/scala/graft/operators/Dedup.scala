@@ -119,11 +119,10 @@ object Dedup {
 
   /** Eagerly materialize the hot-key side of a skew guard WITHOUT ever
     * collecting it to the driver: the aggregate is computed
-    * distributively, pinned with a localCheckpoint (truncates lineage so
+    * distributively, pinned with [[Lineage.pin]] (truncates lineage so
     * the two downstream joins read the materialized blocks instead of
-    * re-running the corpus aggregation; a real cluster would use
-    * reliable `checkpoint()`), and re-rooted through `createDataFrame`
-    * so its attribute ids are fresh — both consumers join it back
+    * re-running the corpus aggregation), and re-rooted in its own
+    * session so its attribute ids are fresh — both consumers join it back
     * against the very frame it was derived from. Only a COUNT crosses to
     * the driver. On a web corpus, keys with df > cap are the entire
     * common-phrase vocabulary — easily 10⁷⁺ rows — which is why a
@@ -132,8 +131,8 @@ object Dedup {
     * the splits below are plain shuffled joins, with AQE free to
     * broadcast the hot side only when its RUNTIME size allows. */
   private def materializeHot(hotAgg: DataFrame): (DataFrame, Long) = {
-    val pinned = hotAgg.localCheckpoint()
-    (pinned.sparkSession.createDataFrame(pinned.rdd, pinned.schema),
+    val pinned = Lineage.pin(hotAgg)
+    (Lineage.reroot(pinned, pinned.sparkSession),
       pinned.count())
   }
 
@@ -277,7 +276,7 @@ object Dedup {
     // condition literally contains two sorted_intersect_count calls).
     // Projecting (ids, n_common, sizes) first drops the shingle arrays,
     // so the pin holds ~40 B/pair, and the filter above it reads the
-    // counted column. LAZY (localCheckpoint(false)): an eager pin adds
+    // counted column. LAZY (`eager = false`): an eager pin adds
     // one driver job per call, which the small-candidate callers (LSH
     // risky sets, t=0.8 pairs) measurably paid — 5-iter paired A/B:
     // lazy pin dedup_ngram_jaccard 1.81→1.49, dedup_threshold_hist
@@ -285,13 +284,12 @@ object Dedup {
     // lo=0.3 histogram's 600k pairs 0.65→0.43 s warm. (The
     // nondeterministic-projection barrier — the §4.4 idiom — measured
     // no better than baseline and was rejected.)
-    val counted = pruned
+    val counted = Lineage.pin(pruned
       .join(shSorted.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
       .join(shSorted.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         sic(col("sh_a"), col("sh_b")).as("n_common"),
-        size(col("sh_a")).as("sa"), size(col("sh_b")).as("sb"))
-      .localCheckpoint(false)
+        size(col("sh_a")).as("sa"), size(col("sh_b")).as("sb")), eager = false)
     counted
       .withColumn("jaccard", col("n_common") /
         (col("sa") + col("sb") - col("n_common")))
@@ -329,7 +327,7 @@ object Dedup {
     // hot branch's verifyJaccard reads it four more times. Pinned under
     // the same condition as the posting (cap on = multiple consumers).
     val sh0 = hashedShingleDocs(docs, n)
-    val sh = if (dfCap.isDefined) sh0.localCheckpoint(false) else sh0
+    val sh = if (dfCap.isDefined) Lineage.pin(sh0, eager = false) else sh0
     val posting1 = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
     // Same pin-once reasoning as minhashLshCore: with the cap on, the
     // posting list feeds the hot-key aggregation job and then the main
@@ -337,7 +335,7 @@ object Dedup {
     // explode pass over the corpus; with the cap off the self-join
     // shares one exchange and the checkpoint would be pure overhead.
     val posting0 =
-      if (dfCap.isDefined) posting1.localCheckpoint() else posting1
+      if (dfCap.isDefined) Lineage.pin(posting1) else posting1
     val (posting, hotSplit) = dfCap match {
       case None => (posting0, None)
       case Some(cap) =>
@@ -385,9 +383,9 @@ object Dedup {
         // docs that CONTAIN a hot shingle: only pairs touching one can
         // have undercounted intersections (the pinned posting0 makes
         // this a cheap join over materialized blocks)
-        val hotDocs = posting0
+        val hotDocs = Lineage.pin(posting0
           .join(hotKeys, Seq("shingle"), "left_semi")
-          .select("doc_id").distinct().localCheckpoint()
+          .select("doc_id").distinct())
         val hotA = hotDocs.select(col("doc_id").as("doc_a"))
         val hotB = hotDocs.select(col("doc_id").as("doc_b"))
         val safe = counted
@@ -440,8 +438,8 @@ object Dedup {
       dfCap: Option[Int] = Some(DefaultDfCap)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // one UDF pass feeds the posting, the window and the verification —
-    // pin it (a real cluster would use reliable checkpoint())
-    val sh = hashedShingleDocs(docs, n).localCheckpoint()
+    // pin it
+    val sh = Lineage.pin(hashedShingleDocs(docs, n))
     val posting = sh
       .select(col("doc_id"), size(col("shingles")).as("n_sh"),
         explode(col("shingles")).as("shingle"))
@@ -455,7 +453,7 @@ object Dedup {
       .select("doc_id", "shingle", "n_sh")
     // the prefix posting feeds the hot-key aggregation and both join
     // sides — pin it so the df-join + window chain runs once
-    val prefix = if (dfCap.isDefined) prefix0.localCheckpoint() else prefix0
+    val prefix = if (dfCap.isDefined) Lineage.pin(prefix0) else prefix0
     val (cold, hotSplit) = dfCap match {
       case None => (prefix, None)
       case Some(cap) =>
@@ -588,9 +586,8 @@ object Dedup {
     // frame four times — two narrow size joins, two array rejoins — and
     // the banding is a fifth pass; an unpinned frame re-ran the
     // HashedShingles corpus kernel for every one of them). Rows are
-    // (doc_id, array<long>) — disk-friendly at corpus scale (a real
-    // cluster would use reliable checkpoint()).
-    val sh = hashedShingleDocs(docs, n).localCheckpoint(false)
+    // (doc_id, array<long>) — disk-friendly at corpus scale.
+    val sh = Lineage.pin(hashedShingleDocs(docs, n), eager = false)
     // Pin the banded signatures too: the frame is read by the hot-key
     // aggregation job AND the main candidate query, and recomputing it
     // means a second sign-UDF pass (the CPU-dominant stage). The rows
@@ -599,7 +596,7 @@ object Dedup {
     // l/r self-join already shares one exchange, so a checkpoint would
     // only add a materialization pass)
     val banded0 = minhashBandsFromShingles(sh, numPerm, bands)
-    val banded = if (dfCap.isDefined) banded0.localCheckpoint() else banded0
+    val banded = if (dfCap.isDefined) Lineage.pin(banded0) else banded0
     val (capped, hotSplit) = dfCap match {
       case None => (banded, None)
       case Some(cap) =>
@@ -646,11 +643,10 @@ object Dedup {
       bands: Int = 32, dfCap: Option[Int] = Some(DefaultDfCap)): DataFrame = {
     // Pin the shingle pass once and share it with verification, then pin
     // the banded signatures: both feed multiple consumers (see
-    // minhashLshCore for the rationale and the cluster checkpoint()
-    // substitution).
-    val sh = hashedShingleDocs(docs, n).localCheckpoint(false)
+    // minhashLshCore for the rationale).
+    val sh = Lineage.pin(hashedShingleDocs(docs, n), eager = false)
     val banded0 = minhashBandsFromShingles(sh, numPerm, bands)
-    val banded = if (dfCap.isDefined) banded0.localCheckpoint() else banded0
+    val banded = if (dfCap.isDefined) Lineage.pin(banded0) else banded0
     val corpusB = banded.filter(!isBatch)
     val batchB = banded.filter(isBatch)
     def cross(c: DataFrame, b: DataFrame): DataFrame =
@@ -783,13 +779,12 @@ object Dedup {
     // The fingerprint frame feeds the banding (plus its hot-bucket
     // aggregation job when the cap is on) AND two verification rejoins —
     // pin it so the fingerprint UDF runs once per doc. Rows are
-    // (doc_id, simhash) = 16 bytes — disk-friendly at corpus scale (a
-    // real cluster would use reliable checkpoint()). Pinned on BOTH cap
-    // settings (r21): the two verification rejoins key on different
-    // columns (doc_a / doc_b), so their exchanges never unify and an
-    // unpinned frame re-ran the fingerprint UDF once per rejoin even in
-    // the cap-off plan.
-    val sh = fingerprints.localCheckpoint()
+    // (doc_id, simhash) = 16 bytes — disk-friendly at corpus scale.
+    // Pinned on BOTH cap settings (r21): the two verification rejoins
+    // key on different columns (doc_a / doc_b), so their exchanges never
+    // unify and an unpinned frame re-ran the fingerprint UDF once per
+    // rejoin even in the cap-off plan.
+    val sh = Lineage.pin(fingerprints)
     val banded = sh.select(col("doc_id"),
       explode(sequence(lit(0), lit(nBands - 1))).as("band"),
       col("simhash"))
@@ -943,9 +938,8 @@ object Dedup {
     def sk(f: DataFrame, id: String, tag: String) = sketches match {
       case Some(s) => s.select(col("vec_id").as(id), col("sk").as(tag))
       case None =>
-        f.select(col("vec_id").as(id),
-          verifySketchUdf(col("embedding")).as(tag))
-          .localCheckpoint()
+        Lineage.pin(f.select(col("vec_id").as(id),
+          verifySketchUdf(col("embedding")).as(tag)))
     }
     val survivors = cands
       .join(sk(aFrame, aId, "_ska"), aId)
@@ -975,7 +969,7 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
     // Checkpoint only when the guard reads the per-call banded frame
     // twice (the materialized path skips this — parquet re-reads free).
-    val banded = if (dfCap.isDefined) banded0.localCheckpoint() else banded0
+    val banded = if (dfCap.isDefined) Lineage.pin(banded0) else banded0
     bandedNearDupCore(banded, embeddings, threshold, dfCap, sketches = None)
   }
 
@@ -1078,7 +1072,7 @@ object Dedup {
     val lb0 = bandedOf(left, "vid_left")
     val rb0 = bandedOf(right, "vid_right")
     val (lb, rb) =
-      if (dfCap.isDefined) (lb0.localCheckpoint(), rb0.localCheckpoint())
+      if (dfCap.isDefined) (Lineage.pin(lb0), Lineage.pin(rb0))
       else (lb0, rb0)
     crossPairsCore(lb, rb, left, right, threshold, dfCap, sketches = None)
   }
@@ -1211,7 +1205,7 @@ object Dedup {
     val empty = p.select(col("a").as("doc_id"), col("b").as("canonical_doc_id"))
       .limit(0)
     if (nPairs == 0) { p.unpersist(); return empty }
-    val parent0 = p.sparkSession
+    val parent = p.sparkSession
     // Small-graph fast path (r22): a verified near-dup pair list under
     // [[CcLocalMaxPairs]] collapses to one bounded collect + union-find
     // on the driver — the planted-duplicate shapes every CC consumer
@@ -1223,7 +1217,7 @@ object Dedup {
           org.apache.spark.sql.types.LongType)) {
       val labeled = localComponents(p.collect())
       p.unpersist()
-      import parent0.implicits._
+      import parent.implicits._
       return labeled.toDF("doc_id", "canonical_doc_id").orderBy("doc_id")
     }
     // The CC graph (verified near-dup pairs) is orders of magnitude
@@ -1231,84 +1225,62 @@ object Dedup {
     // run the iteration's shuffles at a partition count proportional to
     // the graph (~100k pair rows per partition), not the session default
     // sized for corpus scans — each round is several joins, and per-
-    // partition fixed costs dominate on a small graph. The pinned width
-    // lives in an ISOLATED child session (newSession: shared context,
-    // cache and data, separate SQLConf), so concurrent queries on the
-    // caller's session never observe the reduced setting.
-    val parent = p.sparkSession
-    val parentParts = scala.util.Try(
-      parent.conf.get("spark.sql.shuffle.partitions").toLong).getOrElse(200L)
-    val ccParts = math.max(1L, math.min(parentParts, nPairs / 100000L + 1L))
-    val session = parent.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", ccParts.toString)
-    // Re-root the persisted pair frame in the child session: the scan
-    // reads the parent's cache; everything downstream plans under the
-    // child's conf. COALESCE to the graph-sized width immediately — the
-    // parent cache holds the pairs in parentParts partitions (32+ on a
-    // 32-thread session), and without the coalesce every iteration
-    // action re-scans all of them as separate tasks: on a small graph
-    // (the planted-duplicate shapes er_customers / dedup_semantic /
-    // dedup_clusters emit) task scheduling dominated the whole CC call
-    // (~0.4-0.5 s PER labelSum action, measured r15). At real graph
-    // sizes ccParts ≈ parentParts and this is a no-op.
-    val pc = session.createDataFrame(p.rdd, p.schema).coalesce(ccParts.toInt)
-    val edges = pc.unionAll(pc.select(col("b").as("a"), col("a").as("b")))
-      .persist()
-    var labels = edges.groupBy(col("a").as("node"))
-      .agg(least(min(col("b")), first(col("a"))).as("label"))
-      .persist()
-    // SQL sum over zero rows is null — guard so an (unexpected) empty
-    // label frame converges instead of NPE-ing on compareTo.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("node", "b"), "b")
-        .groupBy(col("a").as("node")).agg(min(col("label")).as("nlabel"))
-      // pointer jump: my label L is itself a node; adopt L's label too
-      val labelOfLabel = labels
-        .join(labels.select(col("node").as("label"), col("label").as("llabel")),
-          Seq("label"))
-        .select(col("node"), col("llabel"))
-      val stepped = labels
-        .join(neighborMin, Seq("node"), "left")
-        .join(labelOfLabel, Seq("node"), "left")
-        .select(col("node"), least(
-          col("label"),
-          coalesce(col("nlabel"), col("label")),
-          coalesce(col("llabel"), col("label"))).as("label"))
-      val next =
-        (if (iter % CcCheckpointEvery == CcCheckpointEvery - 1)
-          Lineage.pin(stepped)
-        else stepped).persist()
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels.unpersist()
-      labels = next
-      iter += 1
+    // partition fixed costs dominate on a small graph. The width lives in
+    // a child session ([[Lineage.withWidth]]), so concurrent queries on
+    // the caller's session never observe it; the persisted pairs are
+    // re-rooted there and coalesced to the graph-sized width (r15: on a
+    // small graph, re-scanning the parent's 32+ cached partitions as
+    // separate tasks dominated the whole call, ~0.4-0.5 s PER labelSum
+    // action). The result is pinned — reliable checkpoint when the
+    // context has a checkpoint dir — and re-rooted in the caller's
+    // session, so a caller's chained work plans at its own width.
+    val result = Lineage.withWidth(parent, nPairs / 100000L + 1L) { c =>
+      val pc = c.adopt(p)
+      val edges = c.persist(pc.unionAll(pc.select(col("b").as("a"), col("a").as("b"))))
+      var labels = c.persist(edges.groupBy(col("a").as("node"))
+        .agg(least(min(col("b")), first(col("a"))).as("label")))
+      // SQL sum over zero rows is null — guard so an (unexpected) empty
+      // label frame converges instead of NPE-ing on compareTo.
+      def labelSum(df: DataFrame): java.math.BigDecimal =
+        Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
+          .getOrElse(java.math.BigDecimal.ZERO)
+      var prevSum = labelSum(labels)
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        val neighborMin = edges
+          .join(labels.withColumnRenamed("node", "b"), "b")
+          .groupBy(col("a").as("node")).agg(min(col("label")).as("nlabel"))
+        // pointer jump: my label L is itself a node; adopt L's label too
+        val labelOfLabel = labels
+          .join(labels.select(col("node").as("label"), col("label").as("llabel")),
+            Seq("label"))
+          .select(col("node"), col("llabel"))
+        val stepped = labels
+          .join(neighborMin, Seq("node"), "left")
+          .join(labelOfLabel, Seq("node"), "left")
+          .select(col("node"), least(
+            col("label"),
+            coalesce(col("nlabel"), col("label")),
+            coalesce(col("llabel"), col("label"))).as("label"))
+        val next = c.persist(
+          if (iter % CcCheckpointEvery == CcCheckpointEvery - 1)
+            Lineage.pin(stepped)
+          else stepped)
+        val nextSum = labelSum(next)
+        converged = nextSum.compareTo(prevSum) == 0
+        prevSum = nextSum
+        labels.unpersist()
+        labels = next
+        iter += 1
+      }
+      if (!converged)
+        log.warn(s"connectedComponents: not converged after $maxIter rounds — " +
+          "labels may be non-canonical for components with huge diameter")
+      labels.select(col("node").as("doc_id"), col("label").as("canonical_doc_id"))
     }
-    if (!converged)
-      log.warn(s"connectedComponents: not converged after $maxIter rounds — " +
-        "labels may be non-canonical for components with huge diameter")
-    // Eagerly pin the result ([[Lineage.pin]] materializes and truncates
-    // lineage — reliable checkpoint when the context has a checkpoint
-    // dir, local otherwise), then release every cache this call created
-    // so nothing leaks into the shared session.
-    val result = Lineage.pin(labels
-      .select(col("node").as("doc_id"), col("label").as("canonical_doc_id")))
-    labels.unpersist()
-    edges.unpersist()
     p.unpersist()
-    // Re-root the (small, already-materialized) result back into the
-    // PARENT session: without this, anything a caller chains onto the
-    // returned frame would silently plan at the graph-sized ccParts width
-    // instead of the session default.
-    parent.createDataFrame(result.rdd, result.schema).orderBy("doc_id")
+    result.orderBy("doc_id")
   }
 
   /** Per-document duplicated-shingle fraction: for each doc, the share
@@ -1473,17 +1445,15 @@ object Dedup {
     // side in SEVERAL actions (missed, spurious, nExact), and unpinned
     // frames re-ran the whole banding pipeline / equality self-join per
     // action.
-    val banded = simhashPairs(corpus, maxHamming = 0, dfCap = None)
-      .select("doc_a", "doc_b")
-      .localCheckpoint()
+    val banded = Lineage.pin(simhashPairs(corpus, maxHamming = 0, dfCap = None)
+      .select("doc_a", "doc_b"))
     // exact side: fingerprint-equality self-join ([[simhash]] is
     // deterministic, so recomputing it here sees identical fingerprints)
-    val sh = simhash(corpus).localCheckpoint()
-    val exact = sh.select(col("doc_id").as("doc_a"), col("simhash"))
+    val sh = Lineage.pin(simhash(corpus))
+    val exact = Lineage.pin(sh.select(col("doc_id").as("doc_a"), col("simhash"))
       .join(sh.select(col("doc_id").as("doc_b"), col("simhash")), "simhash")
       .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .localCheckpoint()
+      .select("doc_a", "doc_b"))
     val missed = exact.exceptAll(banded).count()
     val spurious = banded.exceptAll(exact).count()
     val nExact = exact.count()

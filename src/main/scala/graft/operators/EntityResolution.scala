@@ -57,7 +57,7 @@ object EntityResolution {
     * the driver — 2 extra Spark jobs per blocking pass, paid on EVERY
     * call including the no-skew common case (the r14 clean bench showed
     * er_customers regressing 1.52 → 2.48 s on exactly that overhead).
-    * The hot aggregate is pinned LAZILY (`localCheckpoint(false)`):
+    * The hot aggregate is pinned LAZILY (`Lineage.pin(_, eager = false)`):
     * materialized by the first branch that needs it, reused by the
     * second, no driver round-trip. */
   private[graft] def blockPairs(recs: DataFrame, keys: Seq[String],
@@ -66,12 +66,11 @@ object EntityResolution {
       keys.map(col) :+ col("c_custkey").as("id") :+ col("c_name").as("nm"): _*)
     // lazy pin: read twice below (anti-join + star join) — one compute,
     // zero extra driver jobs (the eager pin/probe this replaces ran 2)
-    val hot = keyed
+    val hot = Lineage.pin(keyed
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("cnt"), min(col("id")).as("rep"))
       .filter(col("cnt") > cap)
-      .drop("cnt")
-      .localCheckpoint(false)
+      .drop("cnt"), eager = false)
     val cold = keyed.join(hot.select(keys.map(col): _*), keys, "left_anti")
     val a = cold.select(
       keys.map(col) :+ col("id").as("a") :+ col("nm").as("na"): _*)
@@ -94,45 +93,33 @@ object EntityResolution {
   def resolveCustomers(recs0: DataFrame, maxEdits: Int = 1,
       blockCap: Int = DefaultBlockCap): DataFrame = {
     // r21: run the blocking/matching joins at a partition width
-    // proportional to the RECORD COUNT, in an isolated child session —
-    // the [[Dedup.connectedComponents]] width discipline extended to
-    // the blocking stage. A customer-dimension ER input is orders of
-    // magnitude smaller than the corpus tables the session default is
-    // sized for; at the default width every blocking pass spread a few
-    // thousand rows over 32+ partitions and task scheduling dominated
-    // (er_customers was the 4th most expensive bench row). The pinned
-    // record frame is one eager pass (records are dimension-sized; a
-    // real cluster would use reliable checkpoint()); width scales back
-    // up with record count, so a corpus-sized ER input keeps the
-    // session width. Pure width/plumbing change: candidate generation,
-    // matching and clustering arithmetic are untouched.
-    val parent = recs0.sparkSession
-    val pinned = recs0.localCheckpoint()
+    // proportional to the RECORD COUNT, in a child session
+    // ([[Lineage.withWidth]], the [[Dedup.connectedComponents]] width
+    // discipline extended to the blocking stage). A customer-dimension ER
+    // input is orders of magnitude smaller than the corpus tables the
+    // session default is sized for; at the default width every blocking
+    // pass spread a few thousand rows over 32+ partitions and task
+    // scheduling dominated (er_customers was the 4th most expensive bench
+    // row). The pinned record frame is one eager pass (records are
+    // dimension-sized); width scales back up with record count, so a
+    // corpus-sized ER input keeps the session width. The result is
+    // re-rooted in the caller's session (r21 ADVICE: a composing caller
+    // must not silently keep executing at the ER-derived 1-2 partition
+    // width), with the contract ORDER BY re-asserted there.
+    val pinned = Lineage.pin(recs0)
     val nRecs = pinned.count()
-    // Shared derivation + `graft.graph.shufflePartitions` override (r21
-    // ADVICE: the perturb jitter must reach this child session too, and
-    // the fallback constant should match Graph's).
-    val erParts = Graph.derivedWidth(parent, nRecs)
-    val session = parent.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", erParts.toString)
-    val recs = session.createDataFrame(pinned.rdd, pinned.schema)
-      .coalesce(erParts)
-    val cand = blockPairs(recs, Seq("c_nationkey", "c_acctbal"), blockCap)
-      .unionByName(blockPairs(recs, Seq("c_mktsegment", "c_acctbal"), blockCap))
-      .distinct()
-    val matched = cand
-      .filter(levenshtein(col("na"), col("nb")) <= maxEdits)
-      .select("a", "b")
-    // Re-root the (dimension-sized, duplicate-bounded) result into the
-    // PARENT session, as pageRank/triangleTopNodes do (r21 ADVICE: a
-    // composing caller must not silently keep executing at the
-    // ER-derived 1-2 partition width). The contract ORDER BY is
-    // re-asserted on the parent frame.
-    val cc = Dedup.connectedComponents(matched, "a", "b")
-      .select(col("doc_id").as("c_custkey"),
-        col("canonical_doc_id").as("canonical_custkey"))
-      .localCheckpoint()
-    parent.createDataFrame(cc.rdd, cc.schema).orderBy("c_custkey")
+    Lineage.withWidth(recs0.sparkSession, nRecs / 100000L + 1L) { c =>
+      val recs = c.adopt(pinned)
+      val cand = blockPairs(recs, Seq("c_nationkey", "c_acctbal"), blockCap)
+        .unionByName(blockPairs(recs, Seq("c_mktsegment", "c_acctbal"), blockCap))
+        .distinct()
+      val matched = cand
+        .filter(levenshtein(col("na"), col("nb")) <= maxEdits)
+        .select("a", "b")
+      Dedup.connectedComponents(matched, "a", "b")
+        .select(col("doc_id").as("c_custkey"),
+          col("canonical_doc_id").as("canonical_custkey"))
+    }.orderBy("c_custkey")
   }
 
   /** Registered query (`er_customers`): the customer table with planted

@@ -20,23 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Graph-proportional child-session width: min(parent width, n/100k+1)
-    * — unless the caller set `graft.graph.shufflePartitions` on the
-    * PARENT session. The override exists for `Verify --perturb` (r21
-    * ADVICE: at bench scale the derivation is a constant 1-2 whatever
-    * the parent width, so the perturb jitter never varied these stages'
-    * accumulation partitioning — the gate-bypass class the streaming
-    * replay override already closed) and for deployment tuning. Shared
-    * by the pageRank / triangleTopNodes / resolveCustomers derivations. */
-  private[operators] def derivedWidth(parent: SparkSession, n: Long): Int =
-    parent.conf.getOption("graft.graph.shufflePartitions")
-      .filter(_.trim.nonEmpty).map(_.toInt).getOrElse {
-        val parentParts = scala.util.Try(
-          parent.conf.get("spark.sql.shuffle.partitions").toLong)
-          .getOrElse(200L)
-        math.max(1L, math.min(parentParts, n / 100000L + 1L)).toInt
-      }
-
   /** Ordered co-supply edges (a < b): supplier pairs sharing at least
     * `minShared` distinct orders. The per-order pair blowup is bounded
     * by per-order supplier count; the threshold keeps the graph sparse.
@@ -88,38 +71,33 @@ object Graph {
     * minShared-thresholded edge sparsity. */
   def triangleTopNodes(lineitem: DataFrame, minShared: Int = 25,
       k: Int = 10): DataFrame = {
-    val parent = lineitem.sparkSession
     // Pin the thresholded edge list once (it feeds three self-join
     // sides), then enumerate triangles at a partition count proportional
-    // to the EDGE LIST in an isolated child session — the
-    // [[Dedup.connectedComponents]] width discipline (r21: the corpus
+    // to the EDGE LIST in a child session ([[Lineage.withWidth]], the
+    // [[Dedup.connectedComponents]] width discipline — r21: the corpus
     // pays one full-width pass building edges; the three tiny triangle
     // joins then ran 32-wide on a few thousand rows and task overhead
     // dominated). All counts are integers — partitioning cannot perturb
     // the output.
-    val e0 = coSupplyEdges(lineitem, minShared).localCheckpoint()
+    val e0 = Lineage.pin(coSupplyEdges(lineitem, minShared))
     val nE = e0.count()
-    val eParts = derivedWidth(parent, nE)
-    val session = parent.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", eParts.toString)
-    val e = session.createDataFrame(e0.rdd, e0.schema).coalesce(eParts)
-    val tri = e.as("e1")
-      .join(e.as("e2"), col("e1.b") === col("e2.a"))
-      .join(e.as("e3"),
-        col("e2.b") === col("e3.b") && col("e1.a") === col("e3.a"))
-      .select(col("e1.a").as("n1"), col("e1.b").as("n2"),
-        col("e2.b").as("n3"))
-    val top = tri
-      .select(explode(array(col("n1"), col("n2"), col("n3"))).as("supplier"))
-      .groupBy("supplier")
-      .agg(count(lit(1)).as("n_triangles"))
-      .orderBy(col("n_triangles").desc, col("supplier"))
-      .limit(k)
-      .localCheckpoint()
-    // Re-root the k-row result into the PARENT session, re-asserting the
-    // canonical order (row order survives the re-root, but the ORDER BY
-    // is part of the query's contract).
-    parent.createDataFrame(top.rdd, top.schema)
+    Lineage.withWidth(lineitem.sparkSession, nE / 100000L + 1L) { c =>
+      val e = c.adopt(e0)
+      val tri = e.as("e1")
+        .join(e.as("e2"), col("e1.b") === col("e2.a"))
+        .join(e.as("e3"),
+          col("e2.b") === col("e3.b") && col("e1.a") === col("e3.a"))
+        .select(col("e1.a").as("n1"), col("e1.b").as("n2"),
+          col("e2.b").as("n3"))
+      tri
+        .select(explode(array(col("n1"), col("n2"), col("n3"))).as("supplier"))
+        .groupBy("supplier")
+        .agg(count(lit(1)).as("n_triangles"))
+        .orderBy(col("n_triangles").desc, col("supplier"))
+        .limit(k)
+    }
+      // row order survives the re-root into the parent, but the ORDER BY
+      // is part of the query's contract
       .orderBy(col("n_triangles").desc, col("supplier"))
   }
 
@@ -141,7 +119,6 @@ object Graph {
     * scalar — is one count over the degree table. */
   def pageRank(edgesAB: DataFrame, iters: Int = 5,
       damping: Double = 0.85): DataFrame = {
-    val parent = edgesAB.sparkSession
     val edges0 = edgesAB.select(col("a"), col("b"))
       .unionAll(edgesAB.select(col("b").as("a"), col("a").as("b")))
       .persist()
@@ -158,47 +135,42 @@ object Graph {
     // The iteration graph (thresholded co-occurrence edges) is orders of
     // magnitude smaller than the corpus that produced it, and nC is now
     // known: run the per-round joins at a partition count proportional
-    // to the GRAPH, in an isolated child session — exactly the
-    // [[Dedup.connectedComponents]] width discipline (r21: at the
+    // to the GRAPH, in a child session ([[Lineage.withWidth]], the
+    // [[Dedup.connectedComponents]] width discipline — r21: at the
     // session default width every round's handful of rows spread over
     // 32+ partitions and task scheduling dominated the iterations). The
     // per-node inflow sums are unchanged mathematically; their stability
     // under re-partitioned accumulation is the invariant Verify
     // --perturb pins for every float-outputting query.
-    val gParts = derivedWidth(parent, nC)
-    val session = parent.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", gParts.toString)
-    val edges = session.createDataFrame(edges0.rdd, edges0.schema)
-      .coalesce(gParts)
-    val deg = session.createDataFrame(deg0.rdd, deg0.schema).coalesce(gParts)
-    val nodes = deg.select(col("a").as("node"))
-    // edges ⋈ degree is loop-INVARIANT (neither side changes across
-    // iterations) — hoist and pin it once instead of re-joining it in
-    // every round's lineage segment (r22, guide §1.2-1). The per-round
-    // contribution multiset is unchanged: each (a,b,deg) row still
-    // meets the round's scores exactly once.
-    val edgesDeg = Lineage.pin(edges.join(deg, "a"))
-    val baseScore = (1.0 - damping) / nC
-    var pr = nodes.withColumn("score", lit(1.0 / nC))
-    for (i <- 1 to iters) {
-      val contrib = edgesDeg
-        .join(pr.withColumnRenamed("node", "a"), "a")
-        .select(col("b").as("node"),
-          (col("score") / col("deg")).as("c"))
-        .groupBy("node").agg(sum(col("c")).as("inflow"))
-      pr = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(baseScore) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-            .as("score"))
-      if (i % 2 == 0) pr = Lineage.pin(pr)
+    val out = Lineage.withWidth(edgesAB.sparkSession, nC / 100000L + 1L) { c =>
+      val edges = c.adopt(edges0)
+      val deg = c.adopt(deg0)
+      val nodes = deg.select(col("a").as("node"))
+      // edges ⋈ degree is loop-INVARIANT (neither side changes across
+      // iterations) — hoist and pin it once instead of re-joining it in
+      // every round's lineage segment (r22, guide §1.2-1). The per-round
+      // contribution multiset is unchanged: each (a,b,deg) row still
+      // meets the round's scores exactly once.
+      val edgesDeg = Lineage.pin(edges.join(deg, "a"))
+      val baseScore = (1.0 - damping) / nC
+      var pr = nodes.withColumn("score", lit(1.0 / nC))
+      for (i <- 1 to iters) {
+        val contrib = edgesDeg
+          .join(pr.withColumnRenamed("node", "a"), "a")
+          .select(col("b").as("node"),
+            (col("score") / col("deg")).as("c"))
+          .groupBy("node").agg(sum(col("c")).as("inflow"))
+        pr = nodes.join(contrib, Seq("node"), "left")
+          .select(col("node"),
+            (lit(baseScore) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
+              .as("score"))
+        if (i % 2 == 0) pr = Lineage.pin(pr)
+      }
+      pr.select(col("node"), round(col("score"), 6).as("pagerank"))
     }
-    val out = Lineage.pin(pr
-      .select(col("node"), round(col("score"), 6).as("pagerank")))
     edges0.unpersist()
     deg0.unpersist()
-    // Re-root the (small, materialized) result back into the PARENT
-    // session so callers chain at the session default width.
-    parent.createDataFrame(out.rdd, out.schema).orderBy("node")
+    out.orderBy("node")
   }
 
   // --- SparkEntry-facing wrappers ---------------------------------------

@@ -713,8 +713,8 @@ object Multimodal {
   def qMediaNearDupGate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id")
     val off = Dedup.plantOffset(docs, "doc_id")
-    val pairs = perceptualNearDup(plantedMedia(s, dir), "id", "bytes",
-      dfCap = None).localCheckpoint()
+    val pairs = Lineage.pin(perceptualNearDup(plantedMedia(s, dir), "id", "bytes",
+      dfCap = None))
     // One tagged frame for all three plant families (r21): the six
     // separate count()/join-count() actions each re-scanned the
     // documents id column or re-probed the pinned pair table as its own
@@ -728,10 +728,9 @@ object Multimodal {
       .select(col("doc_id").as("id_a"), (col("doc_id") + 2L * off).as("id_b"))
     val nearWanted = docs.filter(col("doc_id") % 20 === 5)
       .select(col("doc_id").as("id_a"), (col("doc_id") + 3L * off).as("id_b"))
-    val wanted = exactWanted.withColumn("fam", lit(0))
+    val wanted = Lineage.pin(exactWanted.withColumn("fam", lit(0))
       .unionByName(reencWanted.withColumn("fam", lit(1)))
-      .unionByName(nearWanted.withColumn("fam", lit(2)))
-      .localCheckpoint(false)
+      .unionByName(nearWanted.withColumn("fam", lit(2))), eager = false)
     def famCounts(df: DataFrame): Map[Int, Long] =
       df.groupBy("fam").agg(count(lit(1)).as("n")).collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap.withDefaultValue(0L)

@@ -343,7 +343,7 @@ object SemanticDedup {
     // artifact instead of re-running the prune (r16 ask #6); the
     // guard's own degradation contract is spec-pinned separately
     // (SemanticDedupSpec).
-    val out = materializedPrune(s, dir).localCheckpoint()
+    val out = Lineage.pin(materializedPrune(s, dir))
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val off = Dedup.plantOffset(e, "vec_id")
     val planted = e
@@ -443,7 +443,7 @@ object SemanticDedup {
         transform(col("embedding"), (x, i) =>
           x + lit(0.25f) * element_at(col("embedding"),
             pmod(i + 1, size(col("embedding"))) + 1)).as("embedding"))
-    val corpus = base.unionByName(restated).localCheckpoint()
+    val corpus = Lineage.pin(base.unionByName(restated))
     // Exhaustive truth via an all-pairs broadcast nested loop — with the
     // SOUND sketch upper bound ([[Dedup.verifySketchUdf]] /
     // sketchCosUpper, the bound every near-dup verify path uses)
@@ -456,8 +456,8 @@ object SemanticDedup {
     // The bound can never drop a true pair (upper ≥ cos — the
     // exact-preserving contract its scaladoc pins), so the verified
     // truth set is IDENTICAL.
-    val sk = corpus.select(col("vec_id"),
-      Dedup.verifySketchUdf(col("embedding")).as("sk")).localCheckpoint()
+    val sk = Lineage.pin(corpus.select(col("vec_id"),
+      Dedup.verifySketchUdf(col("embedding")).as("sk")))
     val skA = sk.select(col("vec_id").as("vid_a"), col("sk").as("_ska"))
     val skB = sk.select(col("vec_id").as("vid_b"), col("sk").as("_skb"))
     val allPairs = skA.join(broadcast(skB),
@@ -465,15 +465,14 @@ object SemanticDedup {
           graft.functions.VectorFunctions.sketchCosUpper(
             col("_ska"), col("_skb")) >= threshold)
       .select("vid_a", "vid_b")
-    val truth = Dedup.verifyCosinePairs(allPairs, corpus, corpus,
-      "vid_a", "vid_b", threshold, sketches = Some(sk)).localCheckpoint()
+    val truth = Lineage.pin(Dedup.verifyCosinePairs(allPairs, corpus, corpus,
+      "vid_a", "vid_b", threshold, sketches = Some(sk)))
     val nTrue = truth.count()
     // the live cluster-bounded pass, production defaults (capped — recall
     // measures the plan a pipeline actually runs, unlike qSemanticGate's
     // uncapped completeness check); the pinned sketch frame rides in so
     // the verify stage reads it instead of re-sketching the corpus twice
-    val canon = semanticPrune(corpus, threshold, sketches = Some(sk))
-      .localCheckpoint()
+    val canon = Lineage.pin(semanticPrune(corpus, threshold, sketches = Some(sk)))
     val caught = truth
       .join(canon.select(col("vec_id").as("vid_a"),
         col("canonical_vec_id").as("canon_a")), Seq("vid_a"), "left")

@@ -63,7 +63,7 @@ object GraftPlans {
     * globally opt in via [[GraftPlans.install]] or
     * [[graft.GraftExtensions]]. */
   def qRankLimit(s0: SparkSession, dir: String): DataFrame = {
-    val s = s0.newSession()
+    val s = graft.operators.Lineage.child(s0)
     install(s)
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions._

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Lineage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -360,9 +361,8 @@ object VersionedTable {
     // window over the micro-batch — was re-evaluated once for the gate,
     // once for the distinct keys and once for the rewrite; the pinned
     // per-key counts are batch-key-sized, never table-sized).
-    val keyCounts = updates.groupBy(col(keyCol))
-      .agg(count(lit(1)).as(cntAlias))
-      .localCheckpoint(false)
+    val keyCounts = Lineage.pin(updates.groupBy(col(keyCol))
+      .agg(count(lit(1)).as(cntAlias)), eager = false)
 
     // BROADCAST the key set in both snapshot joins (r22): the MERGE key
     // frame is batch-keyed by this operator's own contract (work ∝

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Lineage
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -101,45 +102,41 @@ object StreamingOps {
     else
       (false, eventsFileSchemaMicros, col("ts").cast("timestamp"))
 
-  /** Stateful-operator partition width for a replay child session:
-    * SCALE-ADAPTIVE from the replayed events file's size — one state
-    * store per ~32 MB of input, floor 2, capped at the parent session's
-    * width — unless the caller set `graft.replay.shufflePartitions` on
-    * the PARENT session. At the replay's state size the per-store
+  /** Child session for a replay harness, with `confs` set and a
+    * stateful-operator width SCALE-ADAPTIVE from the replayed events
+    * file's size: one state store per ~32 MB of input, floor 2
+    * ([[Lineage.width]] caps it at the parent's width and applies the
+    * parent's [[Lineage.WidthKey]] override, which is how the
+    * `Verify --perturb` jitter reaches these sessions — r19 review
+    * finding). A stateful streaming query's partition count is fixed at
+    * first start by its checkpoint anyway, so it is a per-query
+    * decision, not a session default; the child keeps it off the
+    * caller's session. At the replay's state size the per-store
     * setup/commit dominates wall time: r20 measured 8 partitions ~3×
     * faster than 32, and the r21 width A/B (5-iter medians, 9 queries)
     * measured the family at 22.6 s (w=8) / 16.6 s (w=2) / 18.4 s (w=1)
     * — 2 is the floor because several replays chain two stateful
     * operators whose stores commit in parallel per partition. A
     * constant would be wrong in both directions (r21 charter): this
-    * derives from input bytes, so a 100× replay widens on its own.
-    *
-    * The conf override exists for `Verify --perturb`, whose jittered
-    * `spark.sql.shuffle.partitions` would otherwise never reach these
-    * child sessions (r19 review finding), and for deployment tuning.
-    * Production callers with real volumes set it explicitly. */
-  private[graft] def replayShufflePartitions(parent: SparkSession,
-      dir: String): String =
-    parent.conf.getOption("graft.replay.shufflePartitions")
-      .filter(_.trim.nonEmpty).getOrElse {
-      // Only a MISSING file falls back to 0 bytes (→ the floor width of
-      // 2), and loudly; any other I/O failure propagates — a blanket
-      // catch silently pinned every replay to the floor whenever the
-      // layout assumption broke (r21 ADVICE).
-      val bytes =
-        try java.nio.file.Files.size(
-          java.nio.file.Paths.get(dir, "events.parquet"))
-        catch {
-          case e: java.nio.file.NoSuchFileException =>
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"replayShufflePartitions: ${e.getMessage} missing — " +
-                "replay width falls to the floor of 2")
-            0L
-        }
-      val parentParts = scala.util.Try(
-        parent.conf.get("spark.sql.shuffle.partitions").toLong).getOrElse(32L)
-      math.max(2L, math.min(parentParts, bytes / (32L << 20) + 1L)).toString
-    }
+    * derives from input bytes, so a 100× replay widens on its own. */
+  private[graft] def replayChild(s: SparkSession, dir: String,
+      confs: (String, String)*): SparkSession = {
+    // Only a MISSING file falls back to 0 bytes (→ the floor width of
+    // 2), and loudly; any other I/O failure propagates — a blanket
+    // catch silently pinned every replay to the floor whenever the
+    // layout assumption broke (r21 ADVICE).
+    val bytes =
+      try java.nio.file.Files.size(java.nio.file.Paths.get(dir, "events.parquet"))
+      catch {
+        case e: java.nio.file.NoSuchFileException =>
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"replayChild: ${e.getMessage} missing — " +
+              "replay width falls to the floor of 2")
+          0L
+      }
+    val width = Lineage.width(s, math.max(2L, bytes / (32L << 20) + 1L))
+    Lineage.child(s, confs :+ ("spark.sql.shuffle.partitions" -> width.toString): _*)
+  }
 
   /** Open the events table as a stream. `maxFilesPerTrigger=1` keeps
     * micro-batches bounded when replaying a directory. Reading the
@@ -150,10 +147,7 @@ object StreamingOps {
     * (state-store width) set the flag on their own child session first so
     * everything stays in ONE session. */
   def readEventsStream(s: SparkSession, dir: String): DataFrame = {
-    val flag = "spark.sql.legacy.parquet.nanosAsLong"
-    val reader =
-      if (s.conf.getOption(flag).contains("true")) s
-      else { val child = s.newSession(); child.conf.set(flag, "true"); child }
+    val reader = graft.Tables.nanosReader(s)
     // file stream sources need a directory: stream the sf dir, filtered
     // down to the events file (in production: a landing directory)
     val (_, schema, tsNorm) = eventsVintage(reader, s"$dir/events.parquet")
@@ -297,13 +291,10 @@ object StreamingOps {
     * stream-stream join instantiates four state stores per partition,
     * and at the replay's state size the per-store setup/commit dominates
     * — 8 partitions measured ~3× faster than 32 with identical output.
-    * The pinned width lives in an isolated child session (newSession:
-    * shared context, separate SQLConf), so concurrent queries on the
-    * caller's session never observe it. */
+    * The pinned width lives in a child session ([[replayChild]]), so
+    * concurrent queries on the caller's session never observe it. */
   def qStreamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val child = s.newSession()
-    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    child.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions(s, dir))
+    val child = replayChild(s, dir, graft.Tables.NanosFlag -> "true")
     val joined = streamStreamIntervalJoin(readEventsStream(child, dir))
     val name = s"ssjoin_${System.nanoTime()}"
     val q = joined.writeStream.format("memory").queryName(name)
@@ -334,9 +325,7 @@ object StreamingOps {
     * in its arrival micro-batch, so processAllAvailable sees the full
     * result without sentinel machinery. */
   def qStreamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val child = s.newSession()
-    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    child.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions(s, dir))
+    val child = replayChild(s, dir, graft.Tables.NanosFlag -> "true")
     val dim = graft.Tables.customer(child, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val enriched = enrichStream(
@@ -586,9 +575,7 @@ object StreamingOps {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     // Per-query state cardinality and the nanos read flag live in an
     // isolated child session, as in qStreamStreamJoin.
-    val child = s.newSession()
-    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    child.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions(s, dir))
+    val child = replayChild(s, dir, graft.Tables.NanosFlag -> "true")
     val tmp = Files.createTempDirectory("graft_stream_replay")
     // tmp holds a full copy of events.parquet: clean it up on EVERY
     // exit, including a failed query or a latch timeout — a leak here
@@ -841,8 +828,7 @@ object StreamingOps {
   def qStreamUpsert(s0: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
     import java.nio.file.attribute.FileTime
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions(s0, dir))
+    val s = replayChild(s0, dir)
     val tmp = Files.createTempDirectory("graft_stream_upsert")
     val landing = tmp.resolve("landing")
     Files.createDirectories(landing)
@@ -909,12 +895,11 @@ object StreamingOps {
     // table version. Without this each call leaked the whole tree in
     // /tmp (VERDICT r15 ask #6: accumulated checkpoint/driver residue
     // is what degraded later bench iterations, stream family worst).
-    val out = graft.sources.VersionedTable.read(s, tablePath)
+    val out = Lineage.pin(graft.sources.VersionedTable.read(s, tablePath)
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_type"), col("value").as("last_value"))
       .withColumn("n_versions", lit(nv))
-      .orderBy("user_id")
-      .localCheckpoint()
+      .orderBy("user_id"))
     val walk = Files.walk(tmp)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))

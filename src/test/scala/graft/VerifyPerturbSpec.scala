@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Lineage
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -55,19 +56,20 @@ class VerifyPerturbSpec extends AnyFunSuite with SparkFixture {
     // isolated CHILD session, so the gate's jittered session conf would
     // never reach them (leaving the gate a no-op for exactly the
     // streaming class whose r18 red row motivated it — r19 review
-    // finding). The graft.replay.shufflePartitions parent-session key is
-    // the carrier: both perturb config sets must set it, and the
-    // harness-side resolver must honor it over the pinned default.
-    assert(Verify.perturbConfA.toMap.get("graft.replay.shufflePartitions")
-      .contains("4"))
-    assert(Verify.perturbConfB.toMap.get("graft.replay.shufflePartitions")
-      .contains("7"))
+    // finding). The Lineage.WidthKey parent-session key is the carrier:
+    // both perturb config sets must set it, and the replay child must
+    // honor it over the derived width.
+    assert(Verify.perturbConfA.toMap.get(Lineage.WidthKey).contains("4"))
+    assert(Verify.perturbConfB.toMap.get(Lineage.WidthKey).contains("7"))
+    def replayWidth(parent: SparkSession): String =
+      StreamingOps.replayChild(parent, sf0001)
+        .conf.get("spark.sql.shuffle.partitions")
     val parent = spark.newSession()
-    assert(StreamingOps.replayShufflePartitions(parent, sf0001) == "2",
+    assert(replayWidth(parent) == "2",
       "unset: the size-adaptive default floors at 2 for a " +
         "verification-scale events file (r21 width A/B)")
-    parent.conf.set("graft.replay.shufflePartitions", "5")
-    assert(StreamingOps.replayShufflePartitions(parent, sf0001) == "5",
+    parent.conf.set(Lineage.WidthKey, "5")
+    assert(replayWidth(parent) == "5",
       "set: the perturb jitter must win over the derived default")
   }
 }
