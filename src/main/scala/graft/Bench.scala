@@ -129,7 +129,7 @@ object Bench {
     * Recording load at start and end makes a contended run
     * self-identifying from the artifact alone (flag runs whose load is
     * a sizable fraction of the core count). -1 where /proc is absent. */
-  private def loadAvg(): Double =
+  private[graft] def loadAvg(): Double =
     try java.nio.file.Files
       .readString(java.nio.file.Paths.get("/proc/loadavg"))
       .split(' ')(0).toDouble
@@ -273,15 +273,18 @@ object Bench {
     spark
   }
 
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** Dev aid: `SPARK_GRAFT_ONLY=substr1,substr2` restricts a run to the
+    * queries whose name contains any of the substrings (empty: no
+    * filter). Runs record the selection as `"only"`, so a partial run
+    * self-identifies. */
+  private[graft] def only: Seq[String] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    .getOrElse(Seq.empty)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Dev aid: SPARK_GRAFT_ONLY=substr1,substr2 restricts the run to
-    // queries whose name contains any of the substrings (full run default);
-    // the selection is recorded in the JSON so partial runs self-identify.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter {
       case (name, _) => only.isEmpty || only.exists(name.contains)
     }

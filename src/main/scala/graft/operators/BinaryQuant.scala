@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *
   * The trade is recall at a FIXED bit budget: 1 bit/dim Hamming is a
   * coarse angle proxy, so recall@k at constant pool degrades as the
-  * corpus grows. Measured surface (graft.BinaryRecallStress, 512-d
+  * corpus grows. Measured surface (`graft.Scale binary`, 512-d
   * distinct-mode replicas — near-uniform, the worst case for any
   * quantizer — k=3, 8 queries; SCALE_STRESS_r18 plus the r19 pool
   * ladder at n=5,000):

@@ -56,7 +56,7 @@ object Graph {
     * [[coSupplyEdges]].
     *
     * Scale envelope (VERDICT r16 ask #3, measured by
-    * [[graft.GraphStress]] on 1×/10×/100× disjoint replica graphs):
+    * [[graft.Scale]] `graph` on 1×/10×/100× disjoint replica graphs):
     * every stage volume is EXACTLY linear in the graph — order-pair
     * volume 113,589 → 11,358,900, edges 1,782 → 178,200, triangles
     * 8,574 → 857,400 at 100×, each a precise 100.00× — while wall grew

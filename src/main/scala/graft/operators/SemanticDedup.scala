@@ -167,7 +167,7 @@ object SemanticDedup {
   }
 
   /** The production bounded fit at the default envelope — exposed for
-    * the [[graft.SemanticStress]] capture, which times fit and probe
+    * the [[graft.Scale]] `semantic` capture, which times fit and probe
     * separately past the kCeiling bind point (VERDICT r16 ask #2). */
   private[graft] def fitCentroidsBounded(e: DataFrame, n: Long)
       : Array[Array[Double]] =
@@ -280,8 +280,8 @@ object SemanticDedup {
     * groups. The LIVE capped production plan stays exercised and
     * measured elsewhere: dedup_semantic_recall runs [[semanticPrune]]
     * with production defaults per call, SemanticDedupSpec pins the
-    * star-guard degradation, and the SemanticStress capture measures
-    * the capped probe past the kCeiling bind point. */
+    * star-guard degradation, and the [[graft.Scale]] `semantic` capture
+    * measures the capped probe past the kCeiling bind point. */
   private def materializedPrune(s: SparkSession, dir: String): DataFrame = {
     val (bytes, mtime) = MaterializedCache.fingerprint(
       java.nio.file.Paths.get(dir, "embeddings.parquet"))
@@ -409,7 +409,7 @@ object SemanticDedup {
     *      nested-loop pair generator into the shared sketch-prefiltered
     *      exact verify ([[Dedup.verifyCosinePairs]]). All-pairs by
     *      design → verification-scale only ([[MaxRecallCorpus]];
-    *      excluded from ScaleSmoke's family). The fixtures' natural
+    *      excluded from the `graft.Scale family` set). The fixtures' natural
     *      max off-diagonal cosine is ≤ 0.61, so the truth set is exactly
     *      the planted pairs — which is what lets the DuckDB oracle
     *      recompute `n_true_pairs` from the table (a spurious or missing

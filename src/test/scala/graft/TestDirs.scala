@@ -5,7 +5,7 @@ package graft
   * the gate specs (mm_neardup, dedup_semantic) build planted-media /
   * semantic-prune / codes artifacts for their throwaway corpora, and
   * without the sweep every `sbt test` run leaves a few hundred KB of
-  * orphaned cache entries in tmpdir forever (the ScaleSmoke
+  * orphaned cache entries in tmpdir forever (the graft.Scale
   * dropEntriesContaining discipline, applied to tests). */
 object TestDirs {
   def scratch(prefix: String): String = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{ScaleSmoke, Tables}
+import graft.{Scale, Tables}
 import graft.operators.Dedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -31,7 +31,7 @@ object ProfileEmb {
     }
     val work = java.nio.file.Files.createTempDirectory("graft_prof")
     val dir = work.resolve(s"x$scale").toString
-    ScaleSmoke.buildScaledDir(spark, srcDir, scale, dir, "distinct", vecMult)
+    Scale.replicate(spark, srcDir, scale, dir, Seq("embeddings"), "distinct", vecMult)
     val e = Tables.embeddings(spark, dir)
     val n = t("count")(e.count())
     val (bands, rpb) = Dedup.bandGeometry(n, 0.95)

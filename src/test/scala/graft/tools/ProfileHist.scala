@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{ScaleSmoke, Tables}
+import graft.{Bench, Scale}
 import graft.operators.Dedup
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -52,16 +52,12 @@ object ProfileHist {
     spark.sparkContext.addSparkListener(m)
     val work = java.nio.file.Files.createTempDirectory("graft_prof_hist")
     val dir = work.resolve(s"x$scale").toString
-    ScaleSmoke.buildScaledDir(spark, srcDir, scale, dir, "neardup")
-    def loadAvg(): Double = try java.nio.file.Files
-      .readString(java.nio.file.Paths.get("/proc/loadavg"))
-      .split(' ')(0).toDouble
-      catch { case _: Exception => -1.0 }
+    Scale.replicate(spark, srcDir, scale, dir, Seq("documents"), "neardup")
     def gb(b: Long): String = f"${b / 1e9}%7.2f GB"
     for (i <- 1 to runs) {
       m.reset()
       System.gc()
-      val load0 = loadAvg()
+      val load0 = Bench.loadAvg()
       val t0 = System.nanoTime()
       val rows = Dedup.qJaccardHistogram(spark, dir).collect()
       val sec = (System.nanoTime() - t0) / 1e9
