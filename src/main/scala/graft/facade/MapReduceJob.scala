@@ -43,14 +43,24 @@ class FirstCharPartitioner(numReducers: Int) extends Partitioner {
   *
   * Design notes for scale (this is what the reference's design could not
   * do):
-  *   - The in-map combiner is a bounded hash map per partition
-  *     ([[MapReduceJob.run]] `combine` stage), not the reference's
-  *     O(n·distinct) linear-searched parallel arrays. It spills nothing
-  *     itself: it flushes when it reaches `maxCombinerEntries`, keeping
-  *     memory bounded regardless of input size.
+  *   - The in-map combiner is bounded, not the reference's O(n·distinct)
+  *     linear-searched parallel arrays. It spills nothing itself: it
+  *     flushes when it holds `maxCombinerEntries` keys, keeping memory
+  *     bounded regardless of input size. [[run]] combines with a hash
+  *     map, for any key type.
+  *   - [[MapReduceJob.wordCount]] combines with [[WordCombiner]], which
+  *     keeps no object per word: it scans each line by index, keeps the
+  *     keys in one char arena and their hashes, offsets and counts in
+  *     primitive arrays, and makes a `String` only when a flush emits the
+  *     key. It flushes at the same bound, so the shuffle carries the same
+  *     records.
+  *   - Each [[WordCombiner]] flush is emitted in key order (the reducer's
+  *     `Ordering[String]`), so every reducer's sort receives a few sorted
+  *     runs to merge rather than records in random order.
   *   - The shuffle is Spark's (sort-based, spillable, fault-tolerant) —
   *     the reference's `.tmp`-files-over-NFS shuffle is not ported.
-  *   - `repartitionAndSortWithinPartitions` gives the reducer sorted input
+  *   - One tail, shared by [[run]] and [[MapReduceJob.wordCount]]:
+  *     `repartitionAndSortWithinPartitions` gives the reducer sorted input
   *     (reference SortFunction), and the reduce phase streams over groups
   *     of consecutive equal keys — no per-partition materialization, so a
   *     single reducer partition larger than memory still works.
@@ -59,12 +69,15 @@ class FirstCharPartitioner(numReducers: Int) extends Partitioner {
   * @param reduceFn  key + all values → output values (reference GroupReduceFunction)
   * @param combineFn optional associative pre-aggregation (reference's in-map
   *                  combining, thread_pool.cc:90-98)
+  * @param maxCombinerEntries keys the combiner holds before it flushes; positive
   */
 class MapReduceJob[K1, V1, K2: ClassTag: Ordering, V2: ClassTag](
     mapFn: (K1, V1) => IterableOnce[(K2, V2)],
     reduceFn: (K2, Iterator[V2]) => IterableOnce[(K2, V2)],
     combineFn: Option[(V2, V2) => V2] = None,
-    maxCombinerEntries: Int = 1 << 20) extends Serializable {
+    maxCombinerEntries: Int = MapReduceJob.MaxCombinerEntries) extends Serializable {
+  require(maxCombinerEntries > 0,
+    s"maxCombinerEntries must be positive: $maxCombinerEntries")
 
   def run(input: RDD[(K1, V1)], partitioner: Partitioner): RDD[(K2, V2)] = {
     val mapped = input.flatMap { case (k, v) => mapFn(k, v) }
@@ -92,9 +105,21 @@ class MapReduceJob[K1, V1, K2: ClassTag: Ordering, V2: ClassTag](
         }
       }
     }
+    MapReduceJob.shuffleReduce(combined, partitioner, reduceFn)
+  }
+}
 
-    // Reference phases 3-7 (partition, shuffle, sort) in one shuffle; then
-    // a streaming group-reduce over runs of equal keys.
+object MapReduceJob {
+
+  /** The in-map combiner's default bound, in keys. */
+  private[graft] val MaxCombinerEntries = 1 << 20
+
+  /** Reference phases 3-7 (partition, shuffle, sort) in one shuffle, then
+    * a streaming group-reduce over runs of equal keys: the tail that
+    * [[MapReduceJob.run]] and [[wordCount]] share. */
+  private def shuffleReduce[K2: ClassTag: Ordering, V2: ClassTag](
+      combined: RDD[(K2, V2)], partitioner: Partitioner,
+      reduceFn: (K2, Iterator[V2]) => IterableOnce[(K2, V2)]): RDD[(K2, V2)] =
     combined
       .repartitionAndSortWithinPartitions(partitioner)
       .mapPartitions { it =>
@@ -118,10 +143,18 @@ class MapReduceJob[K1, V1, K2: ClassTag: Ordering, V2: ClassTag](
           def next(): (K2, V2) = { advance(); out.next() }
         }
       }
-  }
-}
 
-object MapReduceJob {
+  /** Writes `key value\n` per record, UTF-8 whatever the JVM's default
+    * charset, without building a line per record. */
+  private def writeRecords[K2, V2](out: java.io.OutputStream,
+      it: Iterator[(K2, V2)]): Unit = {
+    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      out, java.nio.charset.StandardCharsets.UTF_8))
+    try it.foreach { case (k, v) =>
+      w.write(String.valueOf(k)); w.write(' ')
+      w.write(String.valueOf(v)); w.write('\n')
+    } finally w.close()
+  }
 
   /** Write reducer output in the reference's final layout
     * (thread_pool.cc:232-242): one text file `<job>-<reducerID>.out` per
@@ -149,10 +182,7 @@ object MapReduceJob {
       val dir = new java.io.File(outDir)
       val tmp = new java.io.File(dir, s".$jobName-${pid + 1}.out.$attempt.tmp")
       try {
-        val w = new java.io.PrintWriter(
-          new java.io.BufferedWriter(new java.io.FileWriter(tmp, false)))
-        try it.foreach { case (k, v) => w.print(s"$k $v\n") }
-        finally w.close()
+        writeRecords(new java.io.FileOutputStream(tmp, false), it)
         java.nio.file.Files.move(tmp.toPath,
           new java.io.File(dir, s"$jobName-${pid + 1}.out").toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
@@ -194,11 +224,7 @@ object MapReduceJob {
       val fs = dir.getFileSystem(conf)
       val tmp = new Path(dir, s".$jobName-${pid + 1}.out.$attempt.tmp")
       try {
-        val w = new java.io.PrintWriter(new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(
-            fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8)))
-        try it.foreach { case (k, v) => w.print(s"$k $v\n") }
-        finally w.close()
+        writeRecords(fs.create(tmp, true), it)
         FileContext.getFileContext(dir.toUri, conf).rename(
           tmp, new Path(dir, s"$jobName-${pid + 1}.out"),
           Options.Rename.OVERWRITE)
@@ -243,19 +269,18 @@ object MapReduceJob {
     })
   }
 
-  /** Word count through the facade — the reference's one job, end to end.
-    * Tokenization matches MapFunction (thread_pool.cc:87-101): split on
-    * single spaces; the reference's appended trailing `" "`
-    * (thread_pool.cc:58) exists so its last token is counted — `split`
+  /** Word count through the facade — the reference's one job, end to end,
+    * and one Spark job. Tokenization matches MapFunction
+    * (thread_pool.cc:87-101): words are the runs of non-space characters
+    * between single spaces; the reference's appended trailing `" "`
+    * (thread_pool.cc:58) exists so its last token is counted — the scan
     * counts it naturally, and empty tokens (which crash the reference's
-    * partitioner) are dropped.
+    * partitioner) are dropped. The map side is [[WordCombiner]], flushed
+    * at [[MaxCombinerEntries]] keys in key order.
     */
-  def wordCount(lines: RDD[String], numReducers: Int): RDD[(String, Long)] = {
-    val job = new MapReduceJob[Long, String, String, Long](
-      mapFn = (_, line) => line.split(" ").iterator
-        .filter(_.nonEmpty).map(w => (w, 1L)),
-      reduceFn = (word, counts) => Iterator((word, counts.sum)),
-      combineFn = Some(_ + _))
-    job.run(lines.zipWithIndex().map(_.swap), new FirstCharPartitioner(numReducers))
-  }
+  def wordCount(lines: RDD[String], numReducers: Int): RDD[(String, Long)] =
+    shuffleReduce[String, Long](
+      lines.mapPartitions(WordCombiner.flushes(_, MaxCombinerEntries).flatMap(_.iterator)),
+      new FirstCharPartitioner(numReducers),
+      (word, counts) => Iterator((word, counts.sum)))
 }

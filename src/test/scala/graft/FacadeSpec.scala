@@ -1,6 +1,8 @@
 package graft
 
-import graft.facade.{FirstCharPartitioner, MapReduceJob}
+import graft.facade.{FirstCharPartitioner, MapReduceJob, WordCombiner}
+import org.apache.spark.ListenerBusTestAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class FacadeSpec extends AnyFunSuite with SparkFixture {
@@ -72,8 +74,12 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
     val base = java.nio.file.Files.createTempDirectory("graft_facade_hfs")
     val local = base.resolve("local")
     val hfs = base.resolve("hfs")
+    // non-ASCII words, one of them a surrogate pair: both sinks write
+    // UTF-8 whatever the JVM's default charset
+    val nonAscii = Seq("café", "naïve", "日本", "\uD834\uDD1E")
     val rdd = MapReduceJob.wordCount(
-      Tables.documents(spark, sf0001).select("text").as[String].rdd, 3)
+      Tables.documents(spark, sf0001).select("text").as[String].rdd
+        .union(spark.sparkContext.parallelize(Seq(nonAscii.mkString(" ")), 1)), 3)
     MapReduceJob.writeReferenceLayout(rdd, local.toString, "wc")
     // drive the Hadoop variant through an explicit file:// URI so the
     // path actually resolves via a Hadoop FileSystem, not java.io.File
@@ -86,6 +92,11 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
     def visible(d: java.io.File) =
       d.listFiles().map(_.getName).filterNot(_.startsWith(".")).sorted.toSeq
     assert(visible(hfs.toFile) === names)
+    val localKeys = names.flatMap { n =>
+      new String(java.nio.file.Files.readAllBytes(local.resolve(n)),
+        java.nio.charset.StandardCharsets.UTF_8).split("\n").map(_.split(" ")(0))
+    }.toSet
+    nonAscii.foreach(w => assert(localKeys(w), s"$w missing from the local sink"))
     for (n <- names) {
       val a = java.nio.file.Files.readAllBytes(local.resolve(n))
       val b = java.nio.file.Files.readAllBytes(hfs.resolve(n))
@@ -97,6 +108,39 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
       java.nio.file.Files.readAllBytes(local.resolve(names.head))))
     // no temp litter left behind
     assert(!hfs.toFile.listFiles().exists(_.getName.endsWith(".tmp")))
+  }
+
+  test("word count into the reference layout runs one Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft_facade_jobs")
+    val lines = sc.parallelize(Seq("d d h", "h x d", "y d h"), 3)
+    ListenerBusTestAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      MapReduceJob.writeReferenceLayout(
+        MapReduceJob.wordCount(lines, 3), out.toString, "wc")
+      ListenerBusTestAccess.drain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get === 1)
+    val counts = out.toFile.listFiles().toSeq.flatMap { f =>
+      scala.io.Source.fromFile(f).getLines()
+        .map { l => val Array(w, c) = l.split(" "); w -> c.toLong }
+    }.toMap
+    assert(counts === Map("d" -> 4L, "h" -> 3L, "x" -> 1L, "y" -> 1L))
+    out.toFile.listFiles().foreach(_.delete()); out.toFile.delete()
+  }
+
+  test("a combiner bound of 0 is rejected, not an empty result") {
+    intercept[IllegalArgumentException](new MapReduceJob[Long, String, String, Long](
+      mapFn = (_, l) => l.split(" ").map(w => (w, 1L)),
+      reduceFn = (w, vs) => Iterator((w, vs.sum)),
+      combineFn = Some(_ + _),
+      maxCombinerEntries = 0))
+    intercept[IllegalArgumentException](new WordCombiner(0))
   }
 
   test("locality config parse folds out-of-range nodes; RDD carries hints") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.facade.{FirstCharPartitioner, MapReduceJob}
+import graft.facade.{FirstCharPartitioner, MapReduceJob, WordCombiner}
 import graft.operators.Dedup
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
@@ -66,6 +66,61 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
         .groupMapReduce(_._1)(_._2)(_ + _)
       wc(a ++ b) == merged
     }, n = 6)
+  }
+
+  /** Words that stress the word-count kernel: prefix pairs, equal-hash
+    * pairs (`"Aa".hashCode == "BB".hashCode`), non-ASCII and surrogate
+    * pairs, the largest char, and words longer than the key arena's
+    * initial 4096 chars that share a long prefix. */
+  private val kernelWord: Gen[String] = Gen.frequency(
+    6 -> Gen.oneOf("a", "aa", "aaa", "Aa", "BB", "AaAa", "BBBB", "AaBB",
+      "café", "naïve", "日本", "\uD834\uDD1E", "x\uD83D\uDE00"),
+    3 -> Gen.choose(1, 5).flatMap(Gen.listOfN(_,
+      Gen.oneOf('a', 'b', 'é', '日', '\uFFFF'))).map(_.mkString),
+    1 -> Gen.zip(Gen.choose(4097, 4100), Gen.oneOf("", "b", "c"))
+      .map { case (n, tail) => "w" * n + tail })
+
+  /** Lines with runs of spaces, leading and trailing spaces, and empty
+    * lines. */
+  private val kernelLine: Gen[String] = for {
+    words <- Gen.listOf(kernelWord).map(_.take(6))
+    gaps <- Gen.listOfN(words.size + 1, Gen.choose(0, 3))
+  } yield {
+    val inner = words.zip(gaps.tail).map { case (w, g) => w + " " * math.max(1, g) }
+    " " * gaps.head + inner.mkString.dropRight(if (words.isEmpty) 0 else 1)
+  }
+
+  test("property: word-count kernel equals a driver-side split count") {
+    check(Prop.forAll(Gen.listOf(kernelLine).map(_.take(8)), Gen.choose(1, 3)) {
+      (lines, bound) =>
+        val flushes = WordCombiner.flushes(lines.iterator, bound).toVector
+        val got = flushes.flatten.groupMapReduce(_._1)(_._2)(_ + _)
+        val expected = lines.flatMap(_.split(" ").filter(_.nonEmpty))
+          .groupMapReduce(identity)(_ => 1L)(_ + _)
+        flushes.forall(f => f.nonEmpty && f.length <= bound) && got == expected
+    }, n = 200)
+  }
+
+  test("word-count kernel emits each flush in strictly increasing key order") {
+    val rng = new scala.util.Random(11)
+    val alphabet = "abé日\uD834\uDD1E\uFFFF".toVector
+    // shared prefixes past the packed sort's reach force full-key ties
+    val prefixes = Vector("", "interna", "internat", "日本日本日本")
+    val lines = Vector.fill(3000) {
+      Vector.fill(rng.nextInt(6))(prefixes(rng.nextInt(prefixes.size)) +
+        Vector.fill(1 + rng.nextInt(4))(alphabet(rng.nextInt(alphabet.size))).mkString)
+        .mkString(" ")
+    }
+    val flushes = WordCombiner.flushes(lines.iterator, 1500).toVector
+    assert(flushes.size > 2)
+    flushes.foreach { f =>
+      val keys = f.map(_._1)
+      keys.iterator.zip(keys.iterator.drop(1)).foreach { case (a, b) =>
+        assert(Ordering[String].lt(a, b), s"$a then $b")
+      }
+    }
+    assert(flushes.flatten.groupMapReduce(_._1)(_._2)(_ + _) ===
+      lines.flatMap(_.split(" ").filter(_.nonEmpty)).groupMapReduce(identity)(_ => 1L)(_ + _))
   }
 
   test("property: packSequences equals a sequential driver-side fold") {
