@@ -1,7 +1,8 @@
 package graft
 
-/** JVM-wide, targeted log hygiene for the two driver surfaces
-  * (Verify/Bench). */
+/** JVM-wide, targeted log hygiene for three surfaces: the two driver
+  * mains (Bench, and Verify on Bench's session) and the test suites
+  * (SparkFixture). */
 object Logs {
 
   /** Silence WindowExec's "No Partition Defined for Window operation!"

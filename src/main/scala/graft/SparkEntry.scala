@@ -67,19 +67,21 @@ object SparkEntry {
       .orderBy("event_id")
   }
 
-  /** Copy-on-write upsert E2E THROUGH STORAGE: documents written as a
-    * range-clustered parquet table, a mixed update+insert batch merged
-    * via [[graft.sources.CopyOnWrite.upsert]] (only key-containing
-    * files rewritten), read back and fingerprinted. Oracle = the same
-    * merge in SQL over the raw table, so the file-level rewrite
-    * machinery is content-checked row for row; CopyOnWriteSpec pins the
-    * untouched-files-stay-untouched property the 100 TB cost model
-    * depends on. */
+  /** Copy-on-write upsert E2E THROUGH STORAGE: documents committed as
+    * version 0 of a range-clustered [[graft.sources.VersionedTable]], a
+    * mixed update+insert batch merged by
+    * [[graft.sources.VersionedTable.upsert]] (only key-containing files
+    * rewritten, one atomic manifest commit), the new version read back
+    * and fingerprinted. Oracle = the same merge in SQL over the raw
+    * table, so the file-level rewrite machinery is content-checked row
+    * for row; VersionedTableSpec pins the untouched-files-stay-untouched
+    * property the 100 TB cost model depends on. */
   private def qCowUpsert(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val tbl = TmpDirs.scratch("graft_cow")
       .resolve("tbl").toString
-    docs.repartitionByRange(8, col("doc_id")).write.parquet(tbl)
+    sources.VersionedTable.init(s, tbl,
+      docs.repartitionByRange(8, col("doc_id")))
     val updates = docs.filter(col("doc_id") % 7 === 0)
       .select(col("doc_id"), concat(lit("V2 "), col("text")).as("text"),
         col("lang"), col("source"), (col("n_chars") + 3).as("n_chars"))
@@ -90,8 +92,8 @@ object SparkEntry {
         .select((col("doc_id") + 1000000).as("doc_id"), col("text"),
           col("lang"), col("source"),
           length(col("text")).cast("long").as("n_chars")))
-    sources.CopyOnWrite.upsert(s, tbl, updates, "doc_id")
-    s.read.parquet(tbl)
+    sources.VersionedTable.upsert(s, tbl, updates, "doc_id")
+    sources.VersionedTable.read(s, tbl)
       .select(col("doc_id"), md5(col("text")).as("text_md5"),
         col("lang"), col("source"), col("n_chars"))
       .orderBy("doc_id")

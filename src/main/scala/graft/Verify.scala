@@ -83,15 +83,7 @@ object Verify {
       case p if p == "--perturb" => None
       case names => Some(names.split(',').toSet)
     }.getOrElse(None)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.suppressBoundedWindowWarning()
+    val spark = Bench.makeSession(Bench.cpus)
     if (perturb) { sys.exit(runPerturb(spark, sfDir, only)) }
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -12,21 +12,20 @@ import org.apache.spark.sql.functions._
   *   - Every version is a MANIFEST (a JSON file listing data-file names).
   *     Readers resolve one manifest and read exactly its files — never a
   *     directory listing — so a reader sees a consistent snapshot no
-  *     matter what a concurrent writer is mid-way through. This closes
-  *     the documented mid-commit duplicate window of the bare-directory
-  *     [[CopyOnWrite]]: there, add-then-delete means a row can appear
-  *     twice to a lister; here, uncommitted data files are invisible
-  *     until the manifest lands.
+  *     matter what a concurrent writer is mid-way through. Uncommitted
+  *     data files are invisible until the manifest lands, so no reader
+  *     ever sees a row twice or a row missing mid-commit, and a writer
+  *     that dies before its commit leaves the prior version intact.
   *   - A commit is ONE atomic rename of a staged manifest to the next
   *     version slot (`_manifests/v%08d.json`). Rename-if-absent doubles
   *     as optimistic concurrency control: two writers racing to the same
   *     version — one rename wins, the loser gets a loud error instead of
   *     a silent lost update.
-  *   - Upserts rewrite only key-containing files (same cost model as
-  *     [[CopyOnWrite]]: work ∝ touched bytes, never table bytes), but
-  *     originals are NOT deleted — prior manifests still reference them.
-  *     Space is reclaimed explicitly by [[vacuum]], exactly the
-  *     retention model of a production table format.
+  *   - Upserts rewrite only key-containing files (work ∝ touched
+  *     bytes, never table bytes), and originals are NOT deleted — prior
+  *     manifests still reference them. Space is reclaimed explicitly
+  *     by [[vacuum]], exactly the retention model of a production table
+  *     format.
   *
   * The manifest holds file NAMES (all data files live flat in the table
   * directory), so the table relocates with a plain directory copy.
@@ -132,7 +131,8 @@ object VersionedTable {
       txt.contains("\"merge\":true"))
   }
 
-  private def readManifest(spark: SparkSession, table: Path,
+  /** Package-visible so the spec can pin manifest deltas directly. */
+  private[graft] def readManifest(spark: SparkSession, table: Path,
       v: Long): Seq[String] = readManifestData(spark, table, v).files
 
   /** Stage-then-rename manifest commit. Fails loudly if `v` was committed

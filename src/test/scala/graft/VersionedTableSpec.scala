@@ -16,6 +16,13 @@ class VersionedTableSpec extends AnyFunSuite with SparkFixture {
     new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
 
+  private def manifestFiles(tbl: String, v: Long): Set[String] =
+    VersionedTable.readManifest(spark, new org.apache.hadoop.fs.Path(tbl), v)
+      .toSet
+
+  private def fileSizes(tbl: String, files: Set[String]): Map[String, Long] =
+    files.map(f => f -> new java.io.File(tbl, f).length()).toMap
+
   private def docs = Tables.documents(spark, sf0001)
 
   test("init → upsert: time travel reads each snapshot exactly; old files survive") {
@@ -77,28 +84,60 @@ class VersionedTableSpec extends AnyFunSuite with SparkFixture {
   test("upsert rewrites only key-containing files (manifest delta is minimal)") {
     val tbl = freshTable()
     VersionedTable.init(spark, tbl, docs.repartitionByRange(8, col("doc_id")))
-    val v0Files = dataFiles(tbl)
-    VersionedTable.upsert(spark, tbl,
-      docs.filter(col("doc_id") < 10)
-        .withColumn("n_chars", col("n_chars") + 1)
-        .select(docs.columns.map(col).toIndexedSeq: _*), "doc_id")
-    // keys 0..9 live in the first range file(s): most of v0's files must
-    // be carried into v1's manifest unchanged
-    val v1Reads = VersionedTable.read(spark, tbl, Some(1L))
+    val v0Files = manifestFiles(tbl, 0)
+    assert(v0Files.size >= 8)
+    val v0Sizes = fileSizes(tbl, v0Files)
+    // keys 0..9 live in the first range file(s): exactly those files
+    // leave the manifest, every other v0 file is carried unchanged
+    val touched = VersionedTable.read(spark, tbl, Some(0L))
+      .filter(col("doc_id") < 10)
       .select(input_file_name()).distinct()
       .collect().map(r => r.getString(0).split('/').last).toSet
-    val carried = v0Files.intersect(v1Reads)
-    assert(carried.size >= v0Files.size - 2,
-      s"expected ≥${v0Files.size - 2} carried files, got ${carried.size}")
+    assert(touched.nonEmpty && touched.size < v0Files.size,
+      s"expected a strict subset of ${v0Files.size} files touched, got $touched")
+    val updates = docs.filter(col("doc_id") < 10)
+      .select(col("doc_id"), concat(lit("V2 "), col("text")).as("text"),
+        col("lang"), col("source"), (col("n_chars") + 3).as("n_chars"))
+    VersionedTable.upsert(spark, tbl, updates, "doc_id")
+
+    val v1Files = manifestFiles(tbl, 1)
+    assert(v1Files.intersect(v0Files) === v0Files -- touched,
+      "v1 must drop exactly the key-containing files and carry the rest")
+    assert((v1Files -- v0Files).nonEmpty, "the rewrite must add a file")
+    (v0Files -- touched).foreach(f => assert(
+      new java.io.File(tbl, f).length() === v0Sizes(f),
+      s"carried file $f changed size"))
+
+    // Merge semantics: the new version == anti-join + union over the
+    // logical table.
+    val expected = docs.join(updates.select("doc_id"), Seq("doc_id"), "left_anti")
+      .unionByName(updates)
+      .select(col("doc_id"), md5(col("text")).as("h"), col("n_chars"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val got = VersionedTable.read(spark, tbl)
+      .select(col("doc_id"), md5(col("text")).as("h"), col("n_chars"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(got === expected)
   }
 
   test("insert-only upsert appends without dropping any manifest entry") {
     val tbl = freshTable()
     VersionedTable.init(spark, tbl, docs.repartitionByRange(4, col("doc_id")))
+    val v0Files = manifestFiles(tbl, 0)
+    val v0Sizes = fileSizes(tbl, v0Files)
     val inserts = docs.limit(5)
       .withColumn("doc_id", col("doc_id") + 5000000)
       .select(docs.columns.map(col).toIndexedSeq: _*)
     VersionedTable.upsert(spark, tbl, inserts, "doc_id")
+    // no file rewritten: every v0 file stays listed, byte-for-byte, and
+    // the batch lands as new files
+    val v1Files = manifestFiles(tbl, 1)
+    v0Files.foreach { f =>
+      assert(v1Files(f), s"v0 file $f dropped from v1's manifest")
+      assert(new java.io.File(tbl, f).length() === v0Sizes(f),
+        s"v0 file $f was disturbed")
+    }
+    assert((v1Files -- v0Files).nonEmpty, "the batch must add a file")
     assert(VersionedTable.read(spark, tbl).count() === docs.count() + 5)
     assert(VersionedTable.read(spark, tbl, Some(0L)).count() === docs.count())
   }
@@ -134,8 +173,7 @@ class VersionedTableSpec extends AnyFunSuite with SparkFixture {
     assert(writeHappens === 1L)
     // The pre-resolved frame still evaluates against v0's files — they
     // were retained, not deleted, so the reader never sees a torn or
-    // duplicated state (the bare-directory COW cannot make this
-    // guarantee mid-commit).
+    // duplicated state.
     assert(reader.filter(col("text") === "OVERWRITTEN").count() === 0L)
     assert(reader.count() === docs.count())
   }
