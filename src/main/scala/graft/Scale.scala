@@ -163,10 +163,7 @@ object Scale {
           Files.move(part, Paths.get(outDir, "events.parquet"),
             StandardCopyOption.REPLACE_EXISTING)
         } finally parts.close()
-        val walk = Files.walk(stage)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
+        TmpDirs.delete(stage)
         Files.copy(Paths.get(srcDir, "customer.parquet"),
           Paths.get(outDir, "customer.parquet"),
           StandardCopyOption.REPLACE_EXISTING)
@@ -458,15 +455,11 @@ object Scale {
       .split(',').map(_.trim.toInt).toSeq
     val loadStart = Bench.loadAvg()
     val spark = Bench.makeSession(Bench.cpus)
+    // the work dir and the cache entries keyed on it go at JVM exit
     val work = TmpDirs.scratch("graft_scale")
-    // the work dir goes at JVM exit via TmpDirs; its cache entries, keyed
-    // on the unique dir name, would otherwise outlive it
     val line =
       try body(Run(spark, src, scales, work, loadStart))
-      finally {
-        spark.stop()
-        MaterializedCache.dropEntriesContaining(work.getFileName.toString)
-      }
+      finally spark.stop()
     println(line)
   }
 }

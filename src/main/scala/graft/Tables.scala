@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -22,17 +24,16 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = apply(s, d, "lineitem")
   /** events.parquet has shipped `ts` in two physical vintages, and the
-    * driver may regenerate the tables between rounds, so the loader
-    * detects which one it was handed rather than assuming either:
+    * tables may be regenerated in either, so every events
+    * reader (this loader, the stream readers, the sentinel replay)
+    * detects which one it was handed through [[eventsFile]] and
+    * normalizes through [[eventsTs]] rather than assuming either:
     *
     *   - TIMESTAMP(NANOS): Spark's parquet reader rejects it
     *     ([PARQUET_TYPE_ILLEGAL]) unless the `nanosAsLong` legacy flag is
-    *     set, under which it surfaces as LongType — convert to a
-    *     microsecond TimestampType with integer division (a double-typed
-    *     `/ 1000` would lose precision on ~1.7e18 ns values).
+    *     set, under which it surfaces as LongType;
     *   - TIMESTAMP(MICROS, isAdjustedToUTC=false): reads natively as
-    *     TIMESTAMP_NTZ — cast to TimestampType, an exact identity on the
-    *     instant because every session here pins UTC.
+    *     TIMESTAMP_NTZ.
     *
     * The `nanosAsLong` flag is pinned in a child session
     * ([[nanosReader]]), NEVER set on the caller's session; it is a no-op
@@ -40,16 +41,24 @@ object Tables {
     * the parquet scan resolves its hadoop conf from the relation's own
     * session, so the flag holds wherever the frame is consumed. */
   def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    val raw = apply(nanosReader(s), d, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>            // TIMESTAMP(NANOS) vintage
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>    // plain-micros vintage, UTC wall time
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    val raw = eventsFile(s, s"$d/events.parquet")
+    raw.withColumn("ts", eventsTs(raw.schema("ts").dataType))
+  }
+
+  /** The events file at `path` as stored, read under [[NanosFlag]]: its
+    * schema (footer only, no job) is the vintage probe — `ts` is
+    * LongType for the nanos vintage, TIMESTAMP_NTZ for the micros one. */
+  def eventsFile(s: SparkSession, path: String): DataFrame =
+    nanosReader(s).read.parquet(path)
+
+  /** `ts` as TimestampType from its stored type `tsType`: nanos-as-long
+    * by integer division (a double-typed `/ 1000` would lose precision
+    * on ~1.7e18 ns values); TIMESTAMP_NTZ by a cast, an exact identity on
+    * the instant because every session here pins UTC. */
+  def eventsTs(tsType: DataType): Column = tsType match {
+    case LongType => timestamp_micros(expr("ts div 1000"))
+    case TimestampNTZType => col("ts").cast("timestamp")
+    case _ => col("ts")
   }
 
   /** Reads TIMESTAMP(NANOS) parquet columns as longs. */

@@ -1,37 +1,56 @@
 package graft
 
-/** Scratch directories for query-harness wrappers (the through-storage
-  * queries build a real table/layout under tmpdir per call and return a
-  * LAZY frame reading it, so the tree cannot be deleted before the
-  * caller consumes the frame). Every scratch dir is registered with ONE
-  * JVM shutdown hook that deletes it recursively at process exit — a
-  * bench/verify invocation cleans up after itself instead of
-  * accumulating harness residue in tmpdir (measured ~1 GB across one
-  * round's runs: cow/vt/zorder/out tables × 148 queries × warm-up + 3
-  * passes — the disk half of the per-iteration-degradation chase;
-  * VERDICT r15 ask #6). Within-process accumulation across bench passes
-  * is bounded by the same measurement: the trees are small (sf-scale
-  * tables); it is the cross-invocation leak that compounded. */
+import java.nio.file.{Files, Path}
+
+/** Owner of every scratch tree under java.io.tmpdir, and of the one
+  * recursive delete. A tree has one of two lifetimes:
+  *
+  *   - [[scratch]]: until JVM exit. For trees a LAZY frame still reads
+  *     after the call returns (the through-storage harness queries build
+  *     a real table/layout per call), for the scale harness's replicated
+  *     corpora and for spec fixtures. One shutdown hook deletes them all,
+  *     and first drops every [[graft.operators.MaterializedCache]] entry
+  *     keyed on a scratch dir's name, so artifacts built for a throwaway
+  *     corpus go with it (measured ~1 GB of harness residue across one
+  *     round's bench runs before the hook, and 631 MB of stale cache
+  *     entries keyed on past scale corpora).
+  *   - [[scoped]]: until its body returns or throws. For harness trees
+  *     nothing reads after the call (the stream replays' landing dirs,
+  *     checkpoints and table versions), so a failed query leaks nothing.
+  */
 object TmpDirs {
-  private val created =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val created = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    created.forEach { p =>
-      try {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      } catch { case _: Exception => () } // exit-path: best effort
-    }
+    val dirs = created.toArray(Array.empty[Path]).toSeq
+    // exit path: best effort
+    try graft.operators.MaterializedCache
+      .dropEntriesContaining(dirs.map(_.getFileName.toString): _*)
+    catch { case _: Exception => () }
+    dirs.foreach(p => try delete(p) catch { case _: Exception => () })
   }, "graft-tmpdir-cleanup"))
 
-  /** `Files.createTempDirectory(prefix)` + registered recursive delete
-    * at JVM exit. */
-  def scratch(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+  /** A fresh `prefix…` dir under tmpdir, deleted at JVM exit together
+    * with the cache entries keyed on its name. */
+  def scratch(prefix: String): Path = {
+    val p = Files.createTempDirectory(prefix)
     created.add(p)
     p
   }
+
+  /** `body` on a fresh `prefix…` dir under tmpdir, deleted when `body`
+    * returns or throws. */
+  def scoped[A](prefix: String)(body: Path => A): A = {
+    val p = Files.createTempDirectory(prefix)
+    try body(p) finally delete(p)
+  }
+
+  /** Delete the tree at `p` (children first); a missing tree is a no-op. */
+  def delete(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.deleteIfExists(f))
+      finally walk.close()
+    }
 }

@@ -158,12 +158,8 @@ object BinaryQuant {
   /** The materialized bits table for `dir`, building it on first use
     * (cache key/build/race discipline = [[MaterializedCache]]'s). */
   private def materializedBits(s: SparkSession, dir: String): DataFrame = {
-    val (bytes, mtime) = MaterializedCache.fingerprint(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"))
-    val stem = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_bin"
-    val idx = MaterializedCache.getOrBuild(
-        "graft_bin_codes", stem, s"${stem}_v${CodesVersion}_${bytes}_$mtime",
-        "_SUCCESS") { tmp =>
+    val idx = MaterializedCache.artifact(MaterializedCache.Kind.BinCodes,
+        dir, "embeddings.parquet", CodesVersion) { tmp =>
       writeBinaryCodes(Tables.embeddings(s, dir), tmp.toString)
     }
     s.read.parquet(idx.toString)

@@ -1490,13 +1490,9 @@ object Dedup {
     * call is probe-only. Returns (banded, sketches) frames. */
   private def materializedLshTables(s: SparkSession, dir: String,
       bands: Int, rowsPerBand: Int, dim: Int = 64): (DataFrame, DataFrame) = {
-    val (bytes, mtime) = MaterializedCache.fingerprint(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"))
-    val stem = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_lsh"
-    val key =
-      s"${stem}_v${LshTableVersion}_b${bands}x${rowsPerBand}d${dim}_${bytes}_$mtime"
-    val idx = MaterializedCache.getOrBuild("graft_lsh_bands", stem, key,
-        "sketch/_SUCCESS") { tmp =>
+    val idx = MaterializedCache.artifact(MaterializedCache.Kind.LshBands,
+        dir, "embeddings.parquet", LshTableVersion,
+        s"b${bands}x${rowsPerBand}d$dim", "sketch/_SUCCESS") { tmp =>
       val e = Tables.embeddings(s, dir)
       val sketch = hyperplaneSketch(bands, rowsPerBand, dim)
       e.select(col("vec_id"), posexplode(sketch(col("embedding"))))

@@ -136,27 +136,23 @@ object Embeddings {
     s.read.parquet(path)
       .select(col("vec_id"), col("qv").cast("array<float>").as("qv"))
 
+  /** The materialized codes table for `dir`, building it on first use
+    * (cache key/build/race discipline = [[MaterializedCache]]'s, the
+    * IVF index pattern). */
+  private def materializedCodes(s: SparkSession, dir: String): DataFrame = {
+    val idx = MaterializedCache.artifact(MaterializedCache.Kind.Int8Codes,
+        dir, "embeddings.parquet", CodesVersion) { tmp =>
+      writeQuantizedCodes(Tables.embeddings(s, dir), tmp.toString)
+    }
+    readQuantizedCodes(s, idx.toString)
+  }
+
   /** Registered write-once/probe-many query (`sim_quantized_probe`):
     * same answer as `sim_quantized_topk` (one shared oracle), but the
     * timed path reads the MATERIALIZED int8 table instead of
     * re-quantizing the corpus per call — the serving shape at 100 TB.
     * Cache key/build/race discipline is [[MaterializedCache]]'s (the
     * IVF index pattern). */
-  /** The materialized codes table for `dir`, building it on first use
-    * (cache key/build/race discipline = [[MaterializedCache]]'s, the
-    * IVF index pattern). */
-  private def materializedCodes(s: SparkSession, dir: String): DataFrame = {
-    val (bytes, mtime) = MaterializedCache.fingerprint(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"))
-    val stem = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_int8"
-    val key = s"${stem}_v${CodesVersion}_${bytes}_$mtime"
-    val idx = MaterializedCache.getOrBuild(
-        "graft_int8_codes", stem, key, "_SUCCESS") { tmp =>
-      writeQuantizedCodes(Tables.embeddings(s, dir), tmp.toString)
-    }
-    readQuantizedCodes(s, idx.toString)
-  }
-
   def qQuantizedProbe(s: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 5): DataFrame =
     topKOverCodes(materializedCodes(s, dir), queryId, k)

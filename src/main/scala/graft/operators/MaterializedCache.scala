@@ -3,31 +3,82 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import graft.TmpDirs
+
 /** Write-once/probe-many cache for derived artifacts (the IVF index, the
-  * quantized-codes table): a keyed directory under java.io.tmpdir, built
-  * atomically on first use and reused by every later probe — the
-  * build-amortization shape a 100 TB serving path needs (the index/codes
-  * build is one corpus scan per INGEST, not one per query).
+  * quantized-codes tables, the LSH band/sketch tables, the semantic
+  * centroids and prune table, the planted media corpus): a keyed
+  * directory under java.io.tmpdir, built atomically on first use and
+  * reused by every later probe — the build-amortization shape a 100 TB
+  * serving path needs (the index/codes build is one corpus scan per
+  * INGEST, not one per query).
   *
-  * Key discipline (shared by every artifact kind):
-  *   - `stem` names the (corpus, config) family; superseded siblings of
-  *     the same stem (older algorithm version or data fingerprint) are
-  *     pruned on rebuild so regenerated testdata can't accumulate stale
-  *     trees in tmpdir forever.
-  *   - `key` embeds an ALGORITHM VERSION and a DATA FINGERPRINT
-  *     ([[fingerprint]]: total bytes + max mtime), so changed semantics
-  *     or regenerated data get a fresh build instead of silently serving
-  *     a stale artifact (several consumers are no-oracle queries where a
-  *     stale probe would go undetected).
-  *   - Builds land in a unique temp sibling then ATOMIC_MOVE into place:
-  *     two concurrent first-builds race safely (the loser discards its
-  *     tree iff the winner's `donePath` actually landed).
+  * Every artifact goes through [[artifact]], which derives the whole
+  * on-disk name from its arguments, so no call site spells a key:
+  *   - root: `java.io.tmpdir/graft_<kind>`, one per [[Kind]];
+  *   - stem: `{dir}_{tag}`, the corpus dir with every character outside
+  *     `[A-Za-z0-9._-]` replaced by `_`, then the kind's tag (a kind
+  *     without a tag, the IVF index, puts its params there instead: a
+  *     different centroid count is another family, not a superseded
+  *     sibling). The stem names the (corpus, config) family;
+  *   - key: `{stem}_v{V}[_{params}]_{bytes}_{mtime}`. `V` is the
+  *     ALGORITHM VERSION, bumped whenever the artifact's semantics
+  *     change; `bytes`/`mtime` are the DATA FINGERPRINT ([[fingerprint]]:
+  *     total bytes + max mtime of the source table, file or directory).
+  *     Regenerated testdata or changed semantics therefore get a fresh
+  *     build instead of silently reusing a stale artifact (several
+  *     consumers are no-oracle queries where a stale probe would go
+  *     undetected), and the fingerprint also disambiguates distinct dirs
+  *     that sanitize to the same stem.
+  *
+  * Superseded siblings of the same stem (older algorithm version or data
+  * fingerprint) are pruned on rebuild, so regenerated testdata cannot
+  * accumulate stale trees in tmpdir forever. Builds land in a unique
+  * temp sibling, then ATOMIC_MOVE into place: two concurrent first-builds
+  * race safely (the loser discards its tree iff the winner's done marker
+  * actually landed).
   */
 private[graft] object MaterializedCache {
 
+  /** The closed set of artifact kinds: [[artifact]] takes one, and
+    * [[dropEntriesContaining]] walks `Kind.values`, so no cache root can
+    * exist that the sweep does not know. */
+  object Kind extends Enumeration {
+    final class Kind(name: String, val tag: Option[String])
+        extends Val(name) {
+      def root: Path = Paths.get(sys.props("java.io.tmpdir"), s"graft_$this")
+    }
+    val IvfIndex     = new Kind("ivf_index", None)
+    val Int8Codes    = new Kind("int8_codes", Some("int8"))
+    val BinCodes     = new Kind("bin_codes", Some("bin"))
+    val LshBands     = new Kind("lsh_bands", Some("lsh"))
+    val SemCentroids = new Kind("sem_centroids", Some("semcent"))
+    val SemPrune     = new Kind("sem_prune", Some("semprune"))
+    val PlantedMedia = new Kind("planted_media", Some("media"))
+  }
+  type Kind = Kind.Kind
+
+  /** The `kind` artifact of corpus `dir`, built from its table `source`
+    * (e.g. `embeddings.parquet`) by `build` on first use; `params` are
+    * the build's key parameters (e.g. `b48x14d64`), `doneMarker` a file
+    * that exists only in a complete build. */
+  def artifact(kind: Kind, dir: String, source: String, version: Int,
+      params: String = "", doneMarker: String = "_SUCCESS")
+      (build: Path => Unit): Path = {
+    val (bytes, mtime) = fingerprint(Paths.get(dir, source))
+    val corpus = dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    val (stem, keyParams) = kind.tag match {
+      case Some(tag) => (s"${corpus}_$tag", params)
+      case None => (s"${corpus}_$params", "")
+    }
+    val mid = if (keyParams.isEmpty) "" else s"_$keyParams"
+    getOrBuild(kind.root, stem, s"${stem}_v$version${mid}_${bytes}_$mtime",
+      doneMarker)(build)
+  }
+
   /** (total bytes, max mtime millis) over a parquet file or directory —
     * the cheap content fingerprint for cache keys. */
-  def fingerprint(path: Path): (Long, Long) = {
+  private[graft] def fingerprint(path: Path): (Long, Long) = {
     val walk = Files.walk(path)
     try walk.iterator().asScala.filter(Files.isRegularFile(_))
       .foldLeft((0L, 0L)) { case ((b, m), p) =>
@@ -50,53 +101,36 @@ private[graft] object MaterializedCache {
       }
     }
 
-  /** Known cache roots — kept in sync with the [[getOrBuild]] call sites
-    * (IVF index, int8 codes, LSH band/sketch tables, semantic
-    * centroids). */
-  private[graft] val Roots = Seq("graft_ivf_index", "graft_int8_codes",
-    "graft_lsh_bands", "graft_sem_centroids", "graft_planted_media",
-    "graft_sem_prune")
-
-  /** Drop every cache entry (across all [[Roots]]) whose key embeds
-    * `token`. Scale harnesses call this on exit with their unique work
-    * dir name, so artifacts built for throwaway replicated corpora do
-    * not accumulate in tmpdir forever (measured 631 MB of stale
-    * graft_ivf_index entries across past capture runs — each run's
-    * random scaled-dir path is a fresh stem the sibling prune can never
-    * match). Requires a token of ≥ 8 chars (r16 ADVICE): callers pass
-    * unique random temp-dir names today, but a short or generic token
-    * from a future caller would silently reclaim live artifacts for
-    * other corpora — fail loudly instead. */
-  private[graft] def dropEntriesContaining(token: String): Unit = {
-    require(token.length >= 8,
-      s"dropEntriesContaining token '$token' too short (< 8 chars) — " +
-        "a generic token would reclaim live cache entries for other corpora")
-    Roots.foreach { rootName =>
-      val root = Paths.get(sys.props("java.io.tmpdir"), rootName)
-      if (Files.isDirectory(root)) {
-        val ls = Files.list(root)
-        try ls.iterator().asScala
-          .filter(_.getFileName.toString.contains(token))
-          .foreach(p => try deleteTree(p)
-            catch { case _: java.io.IOException => () })
-        finally ls.close()
-      }
+  /** Drop every cache entry, under every [[Kind]]'s root, whose key
+    * embeds one of `tokens`. [[graft.TmpDirs]] calls this at JVM exit
+    * with the names of its scratch dirs: a key embeds its corpus dir, so
+    * artifacts built for a throwaway corpus (a replicated scale corpus,
+    * a spec fixture) go with it instead of accumulating in tmpdir forever
+    * (measured 631 MB of stale graft_ivf_index entries across past
+    * capture runs — each run's random scratch path is a fresh stem the
+    * sibling prune can never match). Every token must be ≥ 8 chars: a
+    * short or generic token would silently reclaim live artifacts for
+    * other corpora, so it fails loudly instead. */
+  private[graft] def dropEntriesContaining(tokens: String*): Unit = {
+    tokens.foreach(t => require(t.length >= 8,
+      s"dropEntriesContaining token '$t' too short (< 8 chars) — " +
+        "a generic token would reclaim live cache entries for other corpora"))
+    Kind.values.iterator.collect { case k: Kind => k.root }
+      .filter(Files.isDirectory(_)).foreach { root =>
+      val ls = Files.list(root)
+      try ls.iterator().asScala
+        .filter(p => tokens.exists(p.getFileName.toString.contains))
+        .foreach(p => try TmpDirs.delete(p)
+          catch { case _: java.io.IOException => () })
+      finally ls.close()
     }
-  }
-
-  private def deleteTree(p: Path): Unit = {
-    val walk = Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => Files.deleteIfExists(f))
-    finally walk.close()
   }
 
   /** Return the cached directory for `key`, building it first if absent.
     * `doneMarker` is a file that exists only in a complete build (e.g.
     * the `_centroids.csv` sidecar, or parquet's `_SUCCESS`). */
-  def getOrBuild(rootName: String, stem: String, key: String,
+  private[graft] def getOrBuild(root: Path, stem: String, key: String,
       doneMarker: String)(build: Path => Unit): Path = {
-    val root = Paths.get(sys.props("java.io.tmpdir"), rootName)
     val idx = root.resolve(key)
     if (!Files.exists(idx.resolve(doneMarker))) {
       Files.createDirectories(root)
@@ -136,7 +170,7 @@ private[graft] object MaterializedCache {
                catch { case _: java.io.IOException => false })
           supersededSibling || crashedBuild
         }
-        .foreach(p => try deleteTree(p) catch { case _: java.io.IOException => () })
+        .foreach(p => try TmpDirs.delete(p) catch { case _: java.io.IOException => () })
       finally ls.close()
       val tmp = Files.createTempDirectory(root, ".build_")
       try {
@@ -149,9 +183,9 @@ private[graft] object MaterializedCache {
         // landed; otherwise the failure must surface.
         case _: java.nio.file.FileSystemException
             if Files.exists(idx.resolve(doneMarker)) =>
-          try deleteTree(tmp) catch { case _: java.io.IOException => () }
+          try TmpDirs.delete(tmp) catch { case _: java.io.IOException => () }
         case e: Throwable =>
-          try deleteTree(tmp) catch { case _: java.io.IOException => () }
+          try TmpDirs.delete(tmp) catch { case _: java.io.IOException => () }
           throw e
       }
     }

@@ -654,12 +654,8 @@ object Multimodal {
     * not PNG/WAV codec throughput (re-encoding the plants per call was
     * the one true r16 bench regression, ~3.3 s/sweep). */
   private def plantedMedia(s: SparkSession, dir: String): DataFrame = {
-    val (bytes, mtime) = MaterializedCache.fingerprint(
-      java.nio.file.Paths.get(dir, "documents.parquet"))
-    val stem = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_media"
-    val key = s"${stem}_v${MediaVersion}_${bytes}_$mtime"
-    val idx = MaterializedCache.getOrBuild(
-        "graft_planted_media", stem, key, "_SUCCESS") { tmp =>
+    val idx = MaterializedCache.artifact(MaterializedCache.Kind.PlantedMedia,
+        dir, "documents.parquet", MediaVersion) { tmp =>
       val base = Tables.documents(s, dir).select("doc_id", "n_chars")
       val off = Dedup.plantOffset(base, "doc_id")
       val docs = base

@@ -241,12 +241,8 @@ object SemanticDedup {
     * (version, k, data fingerprint). */
   private def materializedCentroids(s: SparkSession, dir: String,
       n: Long, k: Int): Array[Array[Double]] = {
-    val (bytes, mtime) = MaterializedCache.fingerprint(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"))
-    val stem = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_semcent"
-    val key = s"${stem}_v${CentroidsVersion}_k${k}_${bytes}_$mtime"
-    val idx = MaterializedCache.getOrBuild("graft_sem_centroids", stem, key,
-        "_SUCCESS") { tmp =>
+    val idx = MaterializedCache.artifact(MaterializedCache.Kind.SemCentroids,
+        dir, "embeddings.parquet", CentroidsVersion, s"k$k") { tmp =>
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val cents = boundedFit(e, n, k, DefaultMaxFitRows)
       import s.implicits._
@@ -283,12 +279,8 @@ object SemanticDedup {
     * star-guard degradation, and the [[graft.Scale]] `semantic` capture
     * measures the capped probe past the kCeiling bind point. */
   private def materializedPrune(s: SparkSession, dir: String): DataFrame = {
-    val (bytes, mtime) = MaterializedCache.fingerprint(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"))
-    val stem = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_semprune"
-    val key = s"${stem}_v${PruneVersion}_${bytes}_$mtime"
-    val idx = MaterializedCache.getOrBuild("graft_sem_prune", stem, key,
-        "_SUCCESS") { tmp =>
+    val idx = MaterializedCache.artifact(MaterializedCache.Kind.SemPrune,
+        dir, "embeddings.parquet", PruneVersion) { tmp =>
       val base = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val n = base.count()
       val out =

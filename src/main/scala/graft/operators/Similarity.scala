@@ -592,37 +592,26 @@ object Similarity {
       .toDF("k", "n_queries", "bound", "pass")
   }
 
-  /** Registered write-once/probe-many query (`sim_ivf_probe`): builds the
-    * materialized index for `dir` on first use (fit + assign + partitioned
-    * write, amortized over every later probe — in the bench the build
-    * lands in the untimed warm-up, so the timed iterations measure what a
-    * 100 TB user pays per query: centroid sidecar read + one predicate-
-    * pushdown lookup of the query vector + a PartitionFilters-pruned read
-    * of nprobe buckets). The index lives under java.io.tmpdir keyed by the
-    * corpus path + a data fingerprint; both the fit and the assignment are
-    * deterministic, so a rebuild is bit-identical to a cache hit. */
   /** Bumped whenever fit/assignment SEMANTICS change (zero-norm handling,
     * scoring expression, banding): the version rides in the cache key so a
     * pre-existing index built by older code can never be served for the
     * same data. */
   private val IndexVersion = 3
 
+  /** Registered write-once/probe-many query (`sim_ivf_probe`): builds the
+    * materialized index for `dir` on first use (fit + assign + partitioned
+    * write, amortized over every later probe — in the bench the build
+    * lands in the untimed warm-up, so the timed iterations measure what a
+    * 100 TB user pays per query: centroid sidecar read + one predicate-
+    * pushdown lookup of the query vector + a PartitionFilters-pruned read
+    * of nprobe buckets). Cache key, build and prune are
+    * [[MaterializedCache]]'s; both the fit and the assignment are
+    * deterministic, so a rebuild is bit-identical to a cache hit. */
   def qIvfProbe(s: SparkSession, dir: String, queryId: Long = 0L, k: Int = 5,
       numCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
-    import java.nio.file.Paths
-    // Cache key = corpus path + ALGORITHM VERSION + a DATA FINGERPRINT
-    // (total bytes + max mtime of embeddings.parquet, file or directory):
-    // regenerated testdata or changed fit/assignment semantics get a
-    // fresh index instead of silently reusing a stale one (this query has
-    // no oracle, so a stale probe would go undetected), and the
-    // fingerprint also disambiguates distinct dirs that sanitize to the
-    // same string. Build/prune/race mechanics live in [[MaterializedCache]].
-    val (bytes, mtime) =
-      MaterializedCache.fingerprint(Paths.get(dir, "embeddings.parquet"))
-    val stem = dir.replaceAll("[^A-Za-z0-9._-]", "_") + s"_c$numCentroids"
-    val key = s"${stem}_v${IndexVersion}_${bytes}_$mtime"
-    val idx = MaterializedCache.getOrBuild(
-        "graft_ivf_index", stem, key, "_centroids.csv") { tmp =>
+    val idx = MaterializedCache.artifact(MaterializedCache.Kind.IvfIndex,
+        dir, "embeddings.parquet", IndexVersion, s"c$numCentroids",
+        "_centroids.csv") { tmp =>
       val e = Tables.embeddings(s, dir)
       writeIvfIndex(e, fitCentroids(e, numCentroids), tmp.toString)
     }

@@ -207,7 +207,7 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     val rows = (0 until 25).map(i => (i.toLong, vec())) :+
       (100L, base) :+ (101L, base.map(_ + 0.01f))
     val emb = rows.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshmat").toString
+    val dir = TmpDirs.scratch("graft_lshmat").toString
     emb.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val (bands, rpb) = Dedup.bandGeometry(emb.count(), 0.95)
     val expect = Dedup.embeddingNearDupPairs(
@@ -650,7 +650,7 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     ).toDF("doc_id", "text")
       .withColumn("source", lit("web"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_surv").toString
+    val dir = TmpDirs.scratch("graft_surv").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val kept = Dedup.qDedupSurvivors(spark, dir)
       .collect().map(_.getLong(0)).toSet

@@ -116,8 +116,7 @@ class EmbeddingsSpec extends AnyFunSuite with SparkFixture {
 
   test("materialized int8 codes: tinyint round-trip + probe ≡ in-memory search") {
     val emb = Tables.embeddings(spark, sf0001)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_codes_spec").toString
+    val dir = TmpDirs.scratch("graft_codes_spec").toString
     Embeddings.writeQuantizedCodes(emb, dir)
     // storage schema is REALLY int8 — the 4×-at-rest claim
     val onDisk = spark.read.parquet(dir)

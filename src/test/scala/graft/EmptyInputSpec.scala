@@ -37,7 +37,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkFixture {
     else spark.read.parquet(s"$sf0001/$t.parquet")
 
   private lazy val emptyDir: String = {
-    val dir = TestDirs.scratch("graft_empty")
+    val dir = TmpDirs.scratch("graft_empty").toString
     tables.foreach { t =>
       loadTable(t).limit(0)
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
@@ -83,7 +83,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkFixture {
     * has all three). Every documents-reading query must still run —
     * null text is data, not an error. */
   private lazy val nullDocsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nulls").toString
+    val dir = TmpDirs.scratch("graft_nulls").toString
     tables.foreach { t =>
       val base = loadTable(t)
       if (t == "documents") {

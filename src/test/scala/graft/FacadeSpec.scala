@@ -45,7 +45,7 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
 
   test("reference-layout sink writes <job>-<reducerID>.out as 'key value' lines") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_facade_out")
+    val out = TmpDirs.scratch("graft_facade_out")
     val rdd = MapReduceJob.wordCount(
       Tables.documents(spark, sf0001).select("text").as[String].rdd, 3)
     MapReduceJob.writeReferenceLayout(rdd, out.toString, "wc")
@@ -66,12 +66,11 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
     val expected = operators.Relational.q1Wordcount(spark, sf0001)
       .agg(org.apache.spark.sql.functions.sum("cnt")).head.getLong(0)
     assert(total === expected)
-    out.toFile.listFiles().foreach(_.delete()); out.toFile.delete()
   }
 
   test("Hadoop-FS reference-layout sink is byte-identical to the local one") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_facade_hfs")
+    val base = TmpDirs.scratch("graft_facade_hfs")
     val local = base.resolve("local")
     val hfs = base.resolve("hfs")
     // non-ASCII words, one of them a surrogate pair: both sinks write
@@ -116,7 +115,7 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    val out = java.nio.file.Files.createTempDirectory("graft_facade_jobs")
+    val out = TmpDirs.scratch("graft_facade_jobs")
     val lines = sc.parallelize(Seq("d d h", "h x d", "y d h"), 3)
     ListenerBusTestAccess.drain(sc)
     sc.addSparkListener(l)
@@ -131,7 +130,6 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
         .map { l => val Array(w, c) = l.split(" "); w -> c.toLong }
     }.toMap
     assert(counts === Map("d" -> 4L, "h" -> 3L, "x" -> 1L, "y" -> 1L))
-    out.toFile.listFiles().foreach(_.delete()); out.toFile.delete()
   }
 
   test("a combiner bound of 0 is rejected, not an empty result") {
@@ -156,7 +154,7 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ReferenceCli: reference argv surface end to end on a text file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cli")
+    val dir = TmpDirs.scratch("graft_cli")
     val input = dir.resolve("in.txt")
     // trailing spaces per README.md:9 of the reference; counts unaffected
     java.nio.file.Files.writeString(input,
@@ -174,9 +172,6 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
         .map { l => val Array(w, c) = l.split(" "); w -> c.toLong }
     }.toMap
     assert(counts === Map("d" -> 4L, "h" -> 3L, "x" -> 1L, "y" -> 1L))
-    out.toFile.listFiles().foreach(_.delete())
-    Seq(out, input, loc).foreach(p => java.nio.file.Files.deleteIfExists(p))
-    java.nio.file.Files.deleteIfExists(dir)
   }
 
   test("property: wordcount(a ++ b) == merge(wordcount(a), wordcount(b))") {

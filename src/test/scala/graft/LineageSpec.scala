@@ -25,20 +25,14 @@ class LineageSpec extends AnyFunSuite with SparkFixture {
     finally walk.close()
   }
 
-  private def withCheckpointDir[A](f: java.nio.file.Path => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    try f(dir)
-    finally {
-      org.apache.spark.CheckpointDirTestAccess.clear(spark.sparkContext)
-      // delete the checkpoint tree — every run writes rdd-N partition
-      // files and nothing else reclaims them
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
+  /** `f` with a checkpoint dir set; the tree (every run writes rdd-N
+    * partition files and nothing else reclaims them) goes afterwards. */
+  private def withCheckpointDir[A](f: java.nio.file.Path => A): A =
+    TmpDirs.scoped("graft_ckpt") { dir =>
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      try f(dir)
+      finally org.apache.spark.CheckpointDirTestAccess.clear(spark.sparkContext)
     }
-  }
 
   /** The `spark.sql.shuffle.partitions` of every SQL job `f` runs (SQL
     * confs ride each job's local properties), whichever session ran it. */

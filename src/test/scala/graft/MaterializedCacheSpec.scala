@@ -10,11 +10,10 @@ import graft.operators.MaterializedCache
   * pinned at the unit seam, not only through the queries). */
 class MaterializedCacheSpec extends AnyFunSuite {
 
-  private def freshRoot(): String =
-    "mcache_spec_" + java.util.UUID.randomUUID.toString.take(8)
-
-  private def rootPath(rootName: String) =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), rootName)
+  /** A cache root that does not exist yet (inside a scratch tree, so it
+    * goes at exit): the first build must create it. */
+  private def freshRoot(): java.nio.file.Path =
+    TmpDirs.scratch("mcache_spec").resolve("root")
 
   test("builds once, then serves the cached tree without re-building") {
     val root = freshRoot()
@@ -34,7 +33,7 @@ class MaterializedCacheSpec extends AnyFunSuite {
 
   test("an incomplete tree (no done marker) is rebuilt, not served") {
     val root = freshRoot()
-    val idx = rootPath(root).resolve("stemB_v1_5_5")
+    val idx = root.resolve("stemB_v1_5_5")
     java.nio.file.Files.createDirectories(idx)
     java.nio.file.Files.writeString(idx.resolve("payload"), "torn write")
     var builds = 0
@@ -55,10 +54,10 @@ class MaterializedCacheSpec extends AnyFunSuite {
 
   test("superseded siblings of the same stem are pruned; other stems kept") {
     val root = freshRoot()
-    val stale = rootPath(root).resolve("stemC_v1_OLD_0")
+    val stale = root.resolve("stemC_v1_OLD_0")
     java.nio.file.Files.createDirectories(stale)
     java.nio.file.Files.writeString(stale.resolve("junk"), "old fingerprint")
-    val other = rootPath(root).resolve("stemD_v1_1_1")
+    val other = root.resolve("stemD_v1_1_1")
     java.nio.file.Files.createDirectories(other)
     java.nio.file.Files.writeString(other.resolve("done.marker"), "ok")
     MaterializedCache.getOrBuild(root, "stemC", "stemC_v1_NEW_1",
@@ -80,7 +79,7 @@ class MaterializedCacheSpec extends AnyFunSuite {
     // stem-colliding live corpus case — survives our build.
     val root = freshRoot()
     def mk(name: String): java.nio.file.Path = {
-      val p = rootPath(root).resolve(name)
+      val p = root.resolve(name)
       java.nio.file.Files.createDirectories(p)
       java.nio.file.Files.writeString(p.resolve("done.marker"), "ok")
       p
@@ -111,16 +110,16 @@ class MaterializedCacheSpec extends AnyFunSuite {
 
   test("crashed-build residue is pruned after an hour; a live build tree is not") {
     val root = freshRoot()
-    java.nio.file.Files.createDirectories(rootPath(root))
+    java.nio.file.Files.createDirectories(root)
     val dead = java.nio.file.Files
-      .createTempDirectory(rootPath(root), ".build_")
+      .createTempDirectory(root, ".build_")
     java.nio.file.Files.writeString(dead.resolve("partial"), "crashed")
     // age it past the 1h cutoff (tree mtime is the directory's)
     val old = java.nio.file.attribute.FileTime
       .fromMillis(System.currentTimeMillis() - 2 * 3600000L)
     java.nio.file.Files.setLastModifiedTime(dead, old)
     val live = java.nio.file.Files
-      .createTempDirectory(rootPath(root), ".build_")
+      .createTempDirectory(root, ".build_")
     MaterializedCache.getOrBuild(root, "stemE", "stemE_v1_1_1",
         "done.marker") { tmp =>
       java.nio.file.Files.writeString(tmp.resolve("done.marker"), "ok")
@@ -132,7 +131,7 @@ class MaterializedCacheSpec extends AnyFunSuite {
   }
 
   test("fingerprint sums bytes and maxes mtime over a tree") {
-    val dir = java.nio.file.Files.createTempDirectory("mcache_fp")
+    val dir = TmpDirs.scratch("mcache_fp")
     java.nio.file.Files.writeString(dir.resolve("a"), "12345")
     java.nio.file.Files.writeString(dir.resolve("b"), "678")
     val (bytes, mtime) = MaterializedCache.fingerprint(dir)

@@ -46,7 +46,7 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
     val raw = Array.tabulate[Byte](256)(_.toByte)
     val png = Array[Byte](0x89.toByte, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a,
       0x0a) ++ Array.fill[Byte](64)(0xff.toByte)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mm")
+    val tmp = TmpDirs.scratch("graft_mm")
       .resolve("blobs.parquet").toString
     Seq(MediaRecord(1L, "image", png, "synthetic://png"),
       MediaRecord(2L, "bin", raw, "synthetic://raw")).toDS()
@@ -75,7 +75,7 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("binaryFile directory ingest: glob-pruned listing, stable ids, decodable blobs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media")
+    val dir = TmpDirs.scratch("graft_media")
     def put(name: String, bytes: Array[Byte]): Unit =
       java.nio.file.Files.write(dir.resolve(name), bytes)
     put("a.img", Array[Byte](1, 2, 3, 4, 5))
@@ -107,7 +107,7 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
 
   test("real image decode: ImageIO kinds get true dimensions, corrupt payloads fall back") {
     import java.awt.image.BufferedImage
-    val dir = java.nio.file.Files.createTempDirectory("graft_img")
+    val dir = TmpDirs.scratch("graft_img")
     def write(name: String, w: Int, h: Int, fmt: String): Unit = {
       val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
       for (x <- 0 until w; y <- 0 until h) img.setRGB(x, y, (x * 31 + y) & 0xffffff)
@@ -336,7 +336,7 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
       .toDF("doc_id", "text", "source")
       .withColumn("n_chars", org.apache.spark.sql.functions
         .length($"text").cast("long"))
-    val dir = TestDirs.scratch("graft_mmnd")
+    val dir = TmpDirs.scratch("graft_mmnd").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val row = graft.operators.Multimodal.qMediaNearDupGate(spark, dir).head()
     assert(row.getLong(0) === 2L)
@@ -378,7 +378,7 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
       .toDF("doc_id", "text", "source")
       .withColumn("n_chars", org.apache.spark.sql.functions
         .length($"text").cast("long"))
-    val dir = TestDirs.scratch("graft_mmnd_off")
+    val dir = TmpDirs.scratch("graft_mmnd_off").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val row = graft.operators.Multimodal.qMediaNearDupGate(spark, dir).head()
     // ids are i·10⁶: 10⁶ ≡ 10 (mod 30) → %30 hits every 3rd i; 10⁶ ≡ 0

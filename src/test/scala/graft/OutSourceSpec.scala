@@ -14,7 +14,7 @@ class OutSourceSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   private lazy val outDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_out_src")
+    val dir = TmpDirs.scratch("graft_out_src")
       .toString
     val lines = Tables.documents(spark, sf0001)
       .select("text").as[String].rdd

@@ -210,7 +210,7 @@ class RelationalSpec extends AnyFunSuite with SparkFixture {
     // identical tokenize semantics (split on ' ', drop empties)
     val longDoc = (Seq.fill(3000)("the") ++ Seq.tabulate(2000)(i => s"w$i")
       ++ Seq("", "x")).mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q22").toString
+    val tmp = TmpDirs.scratch("graft_q22").toString
     Seq((1L, "the the  a"), (2L, longDoc)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val rows = Relational.q22MapScalars(spark, tmp).collect()

@@ -17,7 +17,7 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
     "lineitem" -> Seq("l_orderkey", "l_suppkey"))
 
   test("scale 3: every table has 3x the rows and 3x the distinct ids") {
-    val out = TestDirs.scratch("graft_scale_spec")
+    val out = TmpDirs.scratch("graft_scale_spec").toString
     Scale.replicate(spark, sf0001, 3, out, idCols.map(_._1))
     idCols.foreach { case (table, ids) =>
       val src = Tables(spark, sf0001, table)
@@ -36,7 +36,7 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
     assert(dims.toSeq == Seq(64))
     // 66 replicas: rotating replica 65 by `rep` instead of `rep mod 64`
     // slices a negative length (replica 64 still slices an empty one)
-    val out = TestDirs.scratch("graft_scale_spec")
+    val out = TmpDirs.scratch("graft_scale_spec").toString
     Scale.replicate(spark, sf0001, 66, out, Seq("embeddings"), "distinct")
     val rep = Tables.embeddings(spark, out)
     assert(rep.count() == 66 * src.count())
@@ -48,7 +48,7 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("events: one events.parquet file, 3x the rows, the source's ts range") {
-    val out = TestDirs.scratch("graft_scale_spec")
+    val out = TmpDirs.scratch("graft_scale_spec").toString
     Scale.replicate(spark, sf0001, 3, out, Seq("events"))
     val events = java.nio.file.Paths.get(out, "events.parquet")
     assert(java.nio.file.Files.isRegularFile(events))

@@ -120,7 +120,7 @@ class SemanticDedupSpec extends AnyFunSuite with SparkFixture {
   test("gate query passes end to end on a parquet corpus") {
     val e = ((0 until 50).map(i => (i.toLong, vec())))
       .toDF("vec_id", "embedding")
-    val dir = TestDirs.scratch("graft_semdedup")
+    val dir = TmpDirs.scratch("graft_semdedup").toString
     e.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val row = SemanticDedup.qSemanticGate(spark, dir).head()
     assert(row.getDouble(0) === 0.95)
@@ -135,7 +135,7 @@ class SemanticDedupSpec extends AnyFunSuite with SparkFixture {
     // which requires the derived offset to clear the real id range
     val e = ((0 until 50).map(i => (i.toLong * 1000000L, vec())))
       .toDF("vec_id", "embedding")
-    val dir = TestDirs.scratch("graft_semdedup_off")
+    val dir = TmpDirs.scratch("graft_semdedup_off").toString
     e.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val row = SemanticDedup.qSemanticGate(spark, dir).head()
     assert(row.getLong(1) === 50L) // every id is % 10 == 0 here
@@ -145,7 +145,7 @@ class SemanticDedupSpec extends AnyFunSuite with SparkFixture {
   test("recall gate: exhaustive truth finds exactly the planted restatements; cluster-bounded recall clears the floor") {
     val e = ((0 until 60).map(i => (i.toLong, vec())))
       .toDF("vec_id", "embedding")
-    val dir = TestDirs.scratch("graft_semrecall")
+    val dir = TmpDirs.scratch("graft_semrecall").toString
     e.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val row = SemanticDedup.qSemanticRecall(spark, dir).head()
     assert(row.getDouble(0) === 0.95)
@@ -160,7 +160,7 @@ class SemanticDedupSpec extends AnyFunSuite with SparkFixture {
 
   test("recall gate refuses a corpus past the exhaustive-truth bound") {
     import org.apache.spark.sql.functions._
-    val dir = TestDirs.scratch("graft_semrecall_big")
+    val dir = TmpDirs.scratch("graft_semrecall_big").toString
     spark.range(SemanticDedup.MaxRecallCorpus + 1)
       .select(col("id").as("vec_id"),
         array(Seq.fill(4)(rand(7).cast("float")): _*).as("embedding"))

@@ -149,7 +149,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   test("materialized IVF index: partition-pruned probe equals in-memory IVF") {
     val e = Tables.embeddings(spark, sf0001)
     val centroids = Similarity.fitCentroids(e, numCentroids = 8)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf")
+    val idx = TmpDirs.scratch("graft_ivf")
       .resolve("idx").toString
     Similarity.writeIvfIndex(e, centroids, idx)
     val qvec = Similarity.queryVector(e, 0L)
@@ -167,7 +167,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   test("batch index probe equals per-query probes, from one pruned read") {
     val e = Tables.embeddings(spark, sf0001)
     val centroids = Similarity.fitCentroids(e, numCentroids = 8)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_b")
+    val idx = TmpDirs.scratch("graft_ivf_b")
       .resolve("idx").toString
     Similarity.writeIvfIndex(e, centroids, idx)
     val qids = Seq(0L, 1L, 2L)
@@ -197,7 +197,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     val part1 = e.filter(org.apache.spark.sql.functions.col("vec_id") < splitId)
     val part2 = e.filter(org.apache.spark.sql.functions.col("vec_id") >= splitId)
     assert(part1.count() > 0 && part2.count() > 0, "split must be non-trivial")
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_app")
+    val base = TmpDirs.scratch("graft_ivf_app")
     val incr = base.resolve("incr").toString
     val full = base.resolve("full").toString
     Similarity.writeIvfIndex(part1, centroids, incr)

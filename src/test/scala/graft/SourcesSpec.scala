@@ -13,7 +13,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     StructField("score", DoubleType)))
 
   test("csv reader parses valid rows and captures malformed ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv")
+    val dir = TmpDirs.scratch("graft_csv")
     val f = dir.resolve("data.csv")
     java.nio.file.Files.writeString(f,
       "id,name,score\n1,alpha,0.5\nnot_a_number,beta,oops\n3,gamma,1.25\n")
@@ -26,11 +26,10 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       assert(corrupt.length === 1)
       assert(corrupt.head.getAs[String]("_corrupt").contains("not_a_number"))
     } finally df.unpersist()
-    java.nio.file.Files.deleteIfExists(f); java.nio.file.Files.deleteIfExists(dir)
   }
 
   test("json reader parses valid rows and captures malformed ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json")
+    val dir = TmpDirs.scratch("graft_json")
     val f = dir.resolve("data.json")
     java.nio.file.Files.writeString(f,
       """{"id": 1, "name": "alpha", "score": 0.5}
@@ -42,11 +41,10 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       assert(Sources.validRecords(df).count() === 2)
       assert(Sources.corruptRecords(df).count() === 1)
     } finally df.unpersist()
-    java.nio.file.Files.deleteIfExists(f); java.nio.file.Files.deleteIfExists(dir)
   }
 
   test("xml reader parses rowTag records and captures malformed ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xml")
+    val dir = TmpDirs.scratch("graft_xml")
     val f = dir.resolve("data.xml")
     java.nio.file.Files.writeString(f,
       """<rows>
@@ -65,7 +63,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("orc roundtrip preserves rows and pushes filters into the scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft_orc")
+    val out = TmpDirs.scratch("graft_orc")
       .resolve("orders_orc").toString
     val src = Tables.orders(spark, sf0001)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -79,7 +77,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("partitioned sink lays out by column and scans prune partitions") {
-    val out = java.nio.file.Files.createTempDirectory("graft_part")
+    val out = TmpDirs.scratch("graft_part")
       .resolve("events_by_type").toString
     Sinks.writePartitioned(
       Tables.events(spark, sf0001).select("event_id", "event_type", "value"),
@@ -98,7 +96,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("writeSharded caps rows per output file") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shard")
+    val out = TmpDirs.scratch("graft_shard")
       .resolve("orders_sharded").toString
     val src = Tables.orders(spark, sf0001).select("o_orderkey", "o_totalprice")
     Sinks.writeSharded(src.coalesce(1), out, maxRecordsPerFile = 40)
@@ -114,7 +112,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compact collapses a many-file directory without losing rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact")
+    val base = TmpDirs.scratch("graft_compact")
     val src = base.resolve("many").toString
     val dest = base.resolve("compacted").toString
     val data = Tables.orders(spark, sf0001).select("o_orderkey", "o_custkey")

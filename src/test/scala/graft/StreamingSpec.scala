@@ -48,7 +48,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("parquet file sink: streamed projection equals the batch result") {
-    val base = java.nio.file.Files.createTempDirectory("graft_fsink")
+    val base = TmpDirs.scratch("graft_fsink")
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
     val streamed = StreamingOps.readEventsStream(spark, sf0001)
@@ -308,7 +308,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // source offsets resume (no reprocessing), the state store recovers
     // partial windows (no loss), and the file sink's commit log
     // deduplicates output (no double-writes).
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val base = TmpDirs.scratch("graft_ckpt")
     val src = base.resolve("src").toString
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString

@@ -9,7 +9,7 @@ import graft.streaming.StreamingOps
 class VersionedTableSpec extends AnyFunSuite with SparkFixture {
 
   private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_vt_spec")
+    TmpDirs.scratch("graft_vt_spec")
       .resolve("tbl").toString
 
   private def dataFiles(dir: String): Set[String] =
@@ -184,8 +184,7 @@ class VersionedTableSpec extends AnyFunSuite with SparkFixture {
     import ctx.sparkSession.implicits._
 
     val tbl = freshTable()
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_vt_ckpt").toString
+    val ckpt = TmpDirs.scratch("graft_vt_ckpt").toString
     VersionedTable.init(spark, tbl,
       Seq((1L, "a", 0L), (2L, "b", 0L), (3L, "c", 0L))
         .toDF("k", "v", "seq"))

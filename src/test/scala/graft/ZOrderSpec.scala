@@ -35,7 +35,7 @@ class ZOrderSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("z-order write clusters BOTH dimensions into narrow per-file ranges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_spec")
+    val dir = TmpDirs.scratch("graft_zorder_spec")
     val events = Tables.events(spark, sf0001)
       .select("event_id", "user_id", "value")
     ZOrder.zorderWrite(events, "user_id", "value", dir.toString, numFiles = 8)
@@ -69,7 +69,7 @@ class ZOrderSpec extends AnyFunSuite with SparkFixture {
 
   test("degenerate dimension (min == max) still writes and round-trips") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_degen")
+    val dir = TmpDirs.scratch("graft_zorder_degen")
     val df = (1 to 100).map(i => (i.toLong, 42L, i.toDouble)).toDF("id", "k", "v")
     ZOrder.zorderWrite(df, "k", "v", dir.toString, numFiles = 2)
     assert(spark.read.parquet(dir.toString).count() === 100)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Scale, Tables}
+import graft.{Scale, Tables, TmpDirs}
 import graft.operators.Dedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -29,7 +29,7 @@ object ProfileEmb {
       println(f"PROF $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       r
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_prof")
+    val work = TmpDirs.scratch("graft_prof")
     val dir = work.resolve(s"x$scale").toString
     Scale.replicate(spark, srcDir, scale, dir, Seq("embeddings"), "distinct", vecMult)
     val e = Tables.embeddings(spark, dir)

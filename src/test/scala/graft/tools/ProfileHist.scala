@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, Scale}
+import graft.{Bench, Scale, TmpDirs}
 import graft.operators.Dedup
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -50,7 +50,7 @@ object ProfileHist {
     spark.sparkContext.setLogLevel("ERROR")
     val m = new Metrics
     spark.sparkContext.addSparkListener(m)
-    val work = java.nio.file.Files.createTempDirectory("graft_prof_hist")
+    val work = TmpDirs.scratch("graft_prof_hist")
     val dir = work.resolve(s"x$scale").toString
     Scale.replicate(spark, srcDir, scale, dir, Seq("documents"), "neardup")
     def gb(b: Long): String = f"${b / 1e9}%7.2f GB"
