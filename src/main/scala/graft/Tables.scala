@@ -24,8 +24,8 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = apply(s, d, "lineitem")
   /** events.parquet has shipped `ts` in two physical vintages, and the
-    * tables may be regenerated in either, so every events
-    * reader (this loader, the stream readers, the sentinel replay)
+    * tables may be regenerated in either, so every events reader (this
+    * loader and [[graft.streaming.StreamingOps.readEventsStream]])
     * detects which one it was handed through [[eventsFile]] and
     * normalizes through [[eventsTs]] rather than assuming either:
     *

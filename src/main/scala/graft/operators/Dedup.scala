@@ -213,6 +213,29 @@ object Dedup {
     }
   }
 
+  /** The LSH candidate block of [[minhashLshCore]], [[fingerprintPairs]]
+    * and [[bandedNearDupCore]]: the hot-bucket star guard
+    * ([[splitHotKeysStar]], when `dfCap` is set) → a shuffle-hash
+    * self-join of `idCol` on the bucket `keys` → `a < b` → the hot
+    * buckets' star edges unioned back in → `distinct`. Output (a, b),
+    * (doc_a, doc_b) by default. */
+  private def bucketPairs(banded: DataFrame, keys: Seq[String],
+      idCol: String, dfCap: Option[Int], what: String,
+      a: String = "doc_a", b: String = "doc_b"): DataFrame = {
+    val (capped, hotSplit) = dfCap match {
+      case None => (banded, None)
+      case Some(cap) => splitHotKeysStar(banded, keys, idCol, cap, what)
+    }
+    val l = capped.select(col(idCol).as(a) +: keys.map(col): _*)
+    val r = capped.select(col(idCol).as(b) +: keys.map(col): _*)
+    // corpus-sized both sides — never broadcast (see ngramJaccardCore)
+    val selfCands = l.join(r.hint("shuffle_hash"), keys)
+      .filter(col(a) < col(b))
+      .select(a, b)
+    hotSplit.fold(selfCands)(h => selfCands.unionAll(h.star.toDF(a, b)))
+      .distinct()
+  }
+
   /** Exploded (doc_id, shingle) with an optional document-frequency cap:
     * shingles occurring in more than `dfCap` docs are dropped before the
     * pair join (see [[dropHotKeys]]). */
@@ -597,20 +620,8 @@ object Dedup {
     // only add a materialization pass)
     val banded0 = minhashBandsFromShingles(sh, numPerm, bands)
     val banded = if (dfCap.isDefined) Lineage.pin(banded0) else banded0
-    val (capped, hotSplit) = dfCap match {
-      case None => (banded, None)
-      case Some(cap) =>
-        splitHotKeysStar(banded, Seq("band", "sig"), "doc_id", cap,
-          "minhashLshCore")
-    }
-    val l = capped.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-    val r = capped.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
-    // corpus-sized both sides — never broadcast (see ngramJaccardCore)
-    val selfCands = l.join(r.hint("shuffle_hash"), Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    val cands = hotSplit.fold(selfCands)(h => selfCands.unionAll(h.star))
-      .distinct()
+    val cands = bucketPairs(banded, Seq("band", "sig"), "doc_id", dfCap,
+      "minhashLshCore")
     verifyJaccard(cands, sh, threshold)
   }
 
@@ -791,20 +802,7 @@ object Dedup {
       .select(col("doc_id"), col("band"),
         expr(s"shiftrightunsigned(simhash, band * $width)")
           .bitwiseAND(lit(bandMask(width))).as("key"))
-    val (capped, hotSplit) = dfCap match {
-      case None => (banded, None)
-      case Some(cap) =>
-        splitHotKeysStar(banded, Seq("band", "key"), "doc_id", cap, what)
-    }
-    val l = capped.select(col("doc_id").as("doc_a"), col("band"), col("key"))
-    val r = capped.select(col("doc_id").as("doc_b"), col("band"), col("key"))
-    // corpus-sized both sides — never broadcast (see ngramJaccardCore)
-    val selfCands = l.join(r.hint("shuffle_hash"), Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    val cands = hotSplit.fold(selfCands)(h => selfCands.unionAll(h.star))
-      .distinct()
-    cands
+    bucketPairs(banded, Seq("band", "key"), "doc_id", dfCap, what)
       .join(sh.select(col("doc_id").as("doc_a"), col("simhash").as("fp_a")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("simhash").as("fp_b")), "doc_b")
       .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
@@ -988,21 +986,8 @@ object Dedup {
   private def bandedNearDupCore(banded: DataFrame, embeddings: DataFrame,
       threshold: Double, dfCap: Option[Int],
       sketches: Option[DataFrame]): DataFrame = {
-    val (capped, hotSplit) = dfCap match {
-      case None => (banded, None)
-      case Some(cap) =>
-        splitHotKeysStar(banded, Seq("band", "key"), "vec_id", cap,
-          "embeddingNearDupPairs")
-    }
-    val l = capped.select(col("vec_id").as("vid_a"), col("band"), col("key"))
-    val r = capped.select(col("vec_id").as("vid_b"), col("band"), col("key"))
-    // corpus-sized both sides — never broadcast (see ngramJaccardCore)
-    val selfCands = l.join(r.hint("shuffle_hash"), Seq("band", "key"))
-      .filter(col("vid_a") < col("vid_b"))
-      .select("vid_a", "vid_b")
-    val cands = hotSplit.fold(selfCands)(h => selfCands.unionAll(
-      h.star.select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"))))
-      .distinct()
+    val cands = bucketPairs(banded, Seq("band", "key"), "vec_id", dfCap,
+      "embeddingNearDupPairs", "vid_a", "vid_b")
     verifyCosinePairs(cands, embeddings, embeddings, "vid_a", "vid_b",
       threshold, sketches)
       .orderBy("vid_a", "vid_b")

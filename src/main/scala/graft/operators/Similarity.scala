@@ -409,17 +409,22 @@ object Similarity {
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toArray
 
-  /** IVF step 3a — driver-side probe predicate: `cid` in the query's
-    * nprobe nearest centroids. */
-  private def probeFilter(centroids: Array[Array[Double]],
-      qvec: Array[Double], nprobe: Int): Column = {
-    val cids = centroids.zipWithIndex
+  /** The query's `nprobe` nearest centroid ids, driver-side: highest
+    * dot product first, ties to the lower id. */
+  private def nearestCids(centroids: Array[Array[Double]],
+      qvec: Array[Double], nprobe: Int): Array[Int] =
+    centroids.zipWithIndex
       .map { case (cv, i) => (cv.zip(qvec).map { case (a, b) => a * b }.sum, i) }
       .sortBy { case (d, i) => (-d, i) }
       .take(math.min(nprobe, centroids.length))
-      .map { case (_, i) => Int.box(i) }
-    col("cid").isin(scala.collection.immutable.ArraySeq.unsafeWrapArray(cids): _*)
-  }
+      .map(_._2)
+
+  /** IVF step 3a — driver-side probe predicate: `cid` in the query's
+    * nprobe nearest centroids. */
+  private def probeFilter(centroids: Array[Array[Double]],
+      qvec: Array[Double], nprobe: Int): Column =
+    col("cid").isin(scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      nearestCids(centroids, qvec, nprobe).map(Int.box)): _*)
 
   private def topKByCosine(candidates: DataFrame, qvec: Array[Double],
       k: Int): DataFrame =
@@ -506,16 +511,11 @@ object Similarity {
   }
 
   /** Driver-side probe plan for a query batch: each query's nprobe
-    * nearest centroid ids (the same ranking as [[probeFilter]]). */
+    * nearest centroid ids ([[nearestCids]], as in [[probeFilter]]). */
   private def probePairsFor(centroids: Array[Array[Double]],
       queries: Seq[(Long, Array[Double])], nprobe: Int): Seq[(Long, Int)] =
     queries.flatMap { case (qid, qv) =>
-      centroids.zipWithIndex
-        .map { case (cv, i) =>
-          (cv.zip(qv).map { case (a, b) => a * b }.sum, i) }
-        .sortBy { case (d, i) => (-d, i) }
-        .take(math.min(nprobe, centroids.length))
-        .map { case (_, cid) => (qid, cid) }
+      nearestCids(centroids, qv, nprobe).map(cid => (qid, cid))
     }
 
   /** Shared scoring tail for batch probes over cid-assigned candidates:

@@ -38,19 +38,33 @@ object StreamingOps {
     * (max ts for the sentinel, min/max event_id for the chunk bounds)
     * and were paying a Spark aggregation JOB per replay for it (guide
     * §6: use the metadata the format already wrote). INT64 min/max
-    * stats are exact (no binary truncation); both events vintages store
-    * ts as INT64 (TIMESTAMP(NANOS) / TIMESTAMP_NTZ-micros). None when
-    * any row-group lacks stats or holds only nulls beyond the stated
-    * values — callers fall back to the aggregation, so a stats-less
-    * writer can never change a result. */
+    * stats are exact (no binary truncation). A TIMESTAMP column comes
+    * back in epoch MICROS whatever unit its footer annotation names, so
+    * both events vintages (TIMESTAMP(NANOS) / TIMESTAMP_NTZ-micros) give
+    * the same scalar. None when any row-group lacks stats or holds only
+    * nulls beyond the stated values — callers fall back to the
+    * aggregation, so a stats-less writer can never change a result. */
   private[graft] def footerLongStats(spark: SparkSession, file: String,
       column: String): Option[(Long, Long)] =
     try {
+      import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
+        TimestampLogicalTypeAnnotation}
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(file),
         spark.sparkContext.hadoopConfiguration)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        val toMicros: Long => Long =
+          schema.getType(schema.getFieldIndex(column))
+            .getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit match {
+              case TimeUnit.NANOS => v => Math.floorDiv(v, 1000L)
+              case TimeUnit.MILLIS => v => v * 1000L
+              case TimeUnit.MICROS => identity
+            }
+            case _ => identity
+          }
         val blocks = r.getFooter.getBlocks.asScala
         var mn = Long.MaxValue
         var mx = Long.MinValue
@@ -73,7 +87,7 @@ object StreamingOps {
               }
             }
         }
-        if (usable && any) Some((mn, mx)) else None
+        if (usable && any) Some((toMicros(mn), toMicros(mx))) else None
       } finally r.close()
     } catch { case _: Exception => None }
 
@@ -113,8 +127,9 @@ object StreamingOps {
     Lineage.child(s, confs :+ ("spark.sql.shuffle.partitions" -> width.toString): _*)
   }
 
-  /** Open the events table as a stream. `maxFilesPerTrigger=1` keeps
-    * micro-batches bounded when replaying a directory. Reading the
+  /** Open the events table as a stream — the one events stream reader
+    * (the sentinel replay streams through it too). `maxFilesPerTrigger=1`
+    * keeps micro-batches bounded when replaying a directory. Reading the
     * TIMESTAMP(NANOS) file needs the `nanosAsLong` legacy flag; if the
     * caller's session doesn't carry it, the stream is rooted in an
     * isolated child session rather than mutating the caller's conf (same
@@ -526,15 +541,18 @@ object StreamingOps {
     * result every batch and never prunes state — a driver-memory
     * scale-killer).
     *
-    * Replay mechanics: the events file is copied into a temp landing
-    * directory together with a single sentinel row 30 days past the last
-    * real event. The initial watermark is 0, so the whole directory can
-    * replay as ONE micro-batch with nothing late-dropped; at its end the
-    * watermark advances past every real window end and the engine's
-    * no-data batch emits all finalized windows to the sink. The
-    * sentinel's own window/session never closes, so the append output is
-    * exactly the real rows (callers still filter the sentinel keys
-    * defensively).
+    * Replay mechanics: the events table streams in place through
+    * [[readEventsStream]], and a second file stream unions in ONE
+    * sentinel row 30 days past the last real event: a one-line JSON file
+    * in a scoped temp dir whose `ts` (epoch micros) joins the stream
+    * after normalization, so the sentinel is the same whatever vintage
+    * the table was written in. Nothing is copied and nothing is written
+    * through Spark. The initial watermark is 0, so both sources replay as
+    * ONE micro-batch with nothing late-dropped; at its end the watermark
+    * advances past every real window end and the engine's no-data batch
+    * emits all finalized windows to the sink. The sentinel's own
+    * window/session never closes, so the append output is exactly the
+    * real rows (callers still filter the sentinel keys defensively).
     *
     * processAllAvailable returns once all DATA is consumed, but the
     * watermark-driven no-data batch that emits the finalized rows
@@ -548,68 +566,30 @@ object StreamingOps {
     * returning an incomplete result. */
   private def replayEventsAppend(s: SparkSession, dir: String,
       namePrefix: String)(build: DataFrame => DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     // Per-query state cardinality and the nanos read flag live in an
     // isolated child session, as in qStreamStreamJoin.
     val child = replayChild(s, dir, graft.Tables.NanosFlag -> "true")
-    // tmp holds a full copy of events.parquet: it goes on EVERY exit,
-    // including a failed query or a latch timeout — a leak here is the
-    // /tmp residue class that degrades later bench iterations
+    // max ts (epoch micros) from the table's FOOTER stats, falling back
+    // to an aggregation over the normalized table when stats are absent:
+    // one fewer Spark job per replay.
+    val maxTsMicros: Long = footerLongStats(child, s"$dir/events.parquet", "ts")
+      .map(_._2).getOrElse {
+        val maxRow = graft.Tables.events(child, dir).agg(max("ts")).head()
+        require(!maxRow.isNullAt(0),
+          s"replay: events table at $dir is empty — nothing to stream")
+        tsMicros(maxRow.getTimestamp(0))
+      }
     graft.TmpDirs.scoped("graft_stream_replay") { tmp =>
-      val evCopy = tmp.resolve("00_events.parquet")
-      Files.copy(Paths.get(dir, "events.parquet"), evCopy,
-        StandardCopyOption.REPLACE_EXISTING)
-
-      // Sentinel row in the SAME vintage as the copied file, so the replay
-      // directory keeps a uniform schema (graft.Tables.events documents the
-      // two vintages); Tables' probe and normalizer serve this harness too,
-      // so a new vintage cannot silently miss it.
-      val file = graft.Tables.eventsFile(child, evCopy.toString)
-      val fileSchema = file.schema
-      val tsType = fileSchema("ts").dataType
-      val nanosVintage = tsType == LongType
-      // max ts from the copied file's FOOTER stats (both vintages store ts
-      // as INT64 — exact), falling back to the old aggregation job when
-      // stats are absent: one fewer Spark job per replay.
-      // the scalar is carried as the file's own INT64 unit (nanos or
-      // micros per vintage); the fallback read stays vintage-aware
-      val maxTsLong: Long = footerLongStats(child, evCopy.toString, "ts")
-        .map(_._2).getOrElse {
-          val maxRow = file.agg(max("ts")).head()
-          require(!maxRow.isNullAt(0),
-            s"replay: events table at $dir is empty — nothing to stream")
-          if (nanosVintage) maxRow.getLong(0)
-          else {
-            val ldt = maxRow.getAs[java.time.LocalDateTime](0)
-            ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-              ldt.getNano / 1000L
-          }
-        }
-      val sentinelTs: Any =
-        if (nanosVintage) java.lang.Long.valueOf(
-          maxTsLong + 30L * 86400L * 1000000000L)
-        else java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(maxTsLong, 1000000L),
-          (Math.floorMod(maxTsLong, 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC).plusDays(30)
-      val sentinelDir = tmp.resolve("sentinel_out")
-      child.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(
-          -1L, sentinelTs, -1L, "__sentinel__", 0.0, null)),
-        fileSchema)
-        .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-      val sentinelList = Files.list(sentinelDir)
-      val sentinelPart =
-        try sentinelList.iterator().asScala
-          .find(_.toString.endsWith(".parquet")).get
-        finally sentinelList.close()
-      val sentinelFile = tmp.resolve("01_sentinel.parquet")
-      Files.move(sentinelPart, sentinelFile)
-
-      val stream = child.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(tmp.toString)
-        .withColumn("ts", graft.Tables.eventsTs(tsType))
+      val sentinelTs = maxTsMicros + 30L * 86400L * 1000000L
+      java.nio.file.Files.writeString(tmp.resolve("sentinel.json"),
+        s"""{"event_id":-1,"ts":$sentinelTs,"user_id":-1,""" +
+          """"event_type":"__sentinel__","value":0.0}""")
+      val sentinel = child.readStream
+        .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE")
+        .json(tmp.toString)
+        .withColumn("ts", timestamp_micros(col("ts")))
+      val stream = readEventsStream(child, dir)
+        .unionByName(sentinel, allowMissingColumns = true)
       val name = s"${namePrefix}_${System.nanoTime()}"
       import org.apache.spark.sql.streaming.StreamingQueryListener
       import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -844,10 +824,11 @@ object StreamingOps {
       (0 until 4).foreach { i =>
         val chunkDir = stage.resolve(s"chunk=$i")
         val part =
-          if (Files.isDirectory(chunkDir))
-            Files.list(chunkDir).iterator().asScala
-              .find(_.toString.endsWith(".parquet"))
-          else None // an empty event_id quarter-range stages no directory
+          if (Files.isDirectory(chunkDir)) {
+            val files = Files.list(chunkDir)
+            try files.iterator().asScala.find(_.toString.endsWith(".parquet"))
+            finally files.close()
+          } else None // an empty event_id quarter-range stages no directory
         part match {
           case Some(p) =>
             val dest = landing.resolve(f"chunk_$i%02d.parquet")

@@ -15,11 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * filter that matched nothing, a fresh table) — this pins the whole
   * registry's behavior at once.
   *
-  * Streaming replay queries are excluded: their sentinel harness
-  * derives the watermark horizon from max(ts), which is a documented
-  * non-empty requirement of the REPLAY HARNESS (not of the streaming
-  * operators — StreamingSpec covers those directly on in-memory
-  * streams, including empty ones).
+  * Streaming replay queries are excluded from the sweep: their sentinel
+  * harness derives the watermark horizon from max(ts), which is a
+  * documented non-empty requirement of the REPLAY HARNESS (not of the
+  * streaming operators — StreamingSpec covers those directly on
+  * in-memory streams, including empty ones). A separate test pins that
+  * every sentinel replay fails exactly that requirement.
   */
 class EmptyInputSpec extends AnyFunSuite with SparkFixture {
 
@@ -49,6 +50,19 @@ class EmptyInputSpec extends AnyFunSuite with SparkFixture {
   private val streamingReplay = Set("stream_tumbling", "stream_topk",
     "stream_sliding", "stream_sessions_append", "stream_sessions_fmgws",
     "stream_stream_join", "stream_enrich", "stream_anomaly", "stream_dedup")
+
+  test("every sentinel replay fails the harness's is-empty require on an empty events table") {
+    val sentinelReplays = Seq("stream_tumbling", "stream_sliding",
+      "stream_topk", "stream_dedup", "stream_anomaly",
+      "stream_sessions_append", "stream_sessions_fmgws")
+    sentinelReplays.foreach { name =>
+      val e = intercept[IllegalArgumentException] {
+        SparkEntry.queries(name)(spark, emptyDir).collect()
+      }
+      assert(e.getMessage.contains("is empty — nothing to stream"),
+        s"$name: ${e.getMessage}")
+    }
+  }
 
   test("every registered query returns a frame or fails a documented require on empty tables") {
     val failures = scala.collection.mutable.Buffer.empty[String]

@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Event
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -472,5 +473,73 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .select(col("window.start").as("bucket"), col("n"))
       .collect().map(r => (r.getTimestamp(0).getTime / 60000, r.getLong(1)))
     assert(got.toSet === Set((0L, 1L), (60L, 1L)))
+  }
+
+  /** A TIMESTAMP(NANOS) copy of the sf0.001 events table (the older
+    * `ts` vintage; every fixture is the micros one), written with
+    * parquet-mr so Spark's type mapping plays no part in the copy. */
+  private lazy val nanosEventsDir: String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val schema = Types.buildMessage()
+      .optional(INT64).named("event_id")
+      .optional(INT64).as(LogicalTypeAnnotation.timestampType(false,
+        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .optional(INT64).named("user_id")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("event_type")
+      .optional(DOUBLE).named("value")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
+      .named("spark_schema")
+    val dir = TmpDirs.scratch("graft_nanos_events")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(dir.resolve("events.parquet").toString), conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try Tables.events(spark, sf0001).collect().foreach { r =>
+      val g = groups.newGroup()
+      if (!r.isNullAt(0)) g.append("event_id", r.getLong(0))
+      if (!r.isNullAt(1))
+        g.append("ts", StreamingOps.tsMicros(r.getTimestamp(1)) * 1000L)
+      if (!r.isNullAt(2)) g.append("user_id", r.getLong(2))
+      if (!r.isNullAt(3)) g.append("event_type", r.getString(3))
+      if (!r.isNullAt(4)) g.append("value", r.getDouble(4))
+      if (!r.isNullAt(5)) g.append("props", r.getString(5))
+      writer.write(g)
+    } finally writer.close()
+    dir.toString
+  }
+
+  test("sentinel replays of a TIMESTAMP(NANOS) events table equal the micros original") {
+    val nanosFile = s"$nanosEventsDir/events.parquet"
+    assert(Tables.eventsFile(spark, nanosFile).schema("ts").dataType ===
+      org.apache.spark.sql.types.LongType)
+    // the footer stats, read through the NANOS annotation, are the same instants
+    val microsStats = StreamingOps.footerLongStats(spark, s"$sf0001/events.parquet", "ts")
+    assert(microsStats.isDefined)
+    assert(StreamingOps.footerLongStats(spark, nanosFile, "ts") === microsStats)
+    for (q <- Seq[(SparkSession, String) => DataFrame](
+        StreamingOps.qStreamTumbling, StreamingOps.qStreamSessionsFmgws)) {
+      def rows(dir: String) = q(spark, dir).collect().map(_.toSeq).toSeq
+      val micros = rows(sf0001)
+      assert(micros.nonEmpty)
+      assert(rows(nanosEventsDir) === micros)
+    }
+  }
+
+  test("stream_upsert closes every directory handle it opens") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs procfs to count open descriptors")
+    StreamingOps.qStreamUpsert(spark, sf0001).collect() // warm-up
+    val before = fds.list().length
+    (1 to 3).foreach(_ => StreamingOps.qStreamUpsert(spark, sf0001).collect())
+    val after = fds.list().length
+    info(s"open descriptors $before -> $after")
+    // an unclosed listing of each of the 4 staged chunk dirs per call
+    // would hold at least 12 handles after 3 calls
+    assert(after - before < 8, s"open descriptors $before -> $after")
   }
 }
