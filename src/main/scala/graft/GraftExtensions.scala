@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSimilarity, CountMinAgg, CountMinEstimate, GraftFunctions, HashedShingles, HeavyHittersAgg, NfcNormalize, TopKByScoreAgg}
+import graft.functions.GraftFunctions
 import graft.plans.{RewriteRankLimit, TopKPerGroupStrategy}
 
 /** Spark-native deployment entry point: graft's custom Catalyst
@@ -24,20 +24,11 @@ import graft.plans.{RewriteRankLimit, TopKPerGroupStrategy}
   * whichever door registered the function. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private val docClass = Map(
-    "cosine_similarity" -> classOf[CosineSimilarity].getName,
-    "top_k_by_score" -> classOf[TopKByScoreAgg].getName,
-    "nfc_normalize" -> classOf[NfcNormalize].getName,
-    "hashed_shingles" -> classOf[HashedShingles].getName,
-    "heavy_hitters" -> classOf[HeavyHittersAgg].getName,
-    "count_min" -> classOf[CountMinAgg].getName,
-    "count_min_estimate" -> classOf[CountMinEstimate].getName)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
-        new ExpressionInfo(docClass(name), name),
+        new ExpressionInfo(builder.docClass.getName, name),
         builder))
     }
     // Whole-operator extension (graft.plans.TopKPerGroup): rewrite

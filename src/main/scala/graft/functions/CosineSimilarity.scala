@@ -1,15 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression for cosine similarity over two
   * array<float|double> columns: one fused loop computing dot product and
-  * both norms, codegen'd straight into the enclosing WholeStageCodegen
-  * stage.
+  * both norms, called from the enclosing WholeStageCodegen stage
+  * through [[KernelCall]].
   *
   * Why not `zip_with`/`aggregate` (the [[VectorFunctions]] formulation)?
   * Those are codegen'd too, but the zip materializes an intermediate
@@ -17,7 +16,7 @@ import org.apache.spark.sql.types._
   * input separately — for a verification step that evaluates millions of
   * candidate pairs, the fused single-pass loop with no allocation is the
   * performance path the charter's preference order names (custom
-  * `Expression` with doGenCode beats composed built-ins beats UDF).
+  * `Expression` beats composed built-ins beats UDF).
   *
   * Semantics (identical to the HOF formulation on well-formed input, and
   * pinned against it by VectorFunctionsSpec):
@@ -31,66 +30,33 @@ import org.apache.spark.sql.types._
   *   - a null ARRAY on either side yields null (BinaryExpression default).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType): Boolean = t match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"cosine_similarity requires array<float|double> inputs, got " +
-          s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "array<float|double> inputs")(_.forall(KernelCall.isVector))
 
-  private def elemIsFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  @transient private lazy val floatLeft = KernelCall.floatElements(left)
+  @transient private lazy val floatRight = KernelCall.floatElements(right)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (xa, xb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val (fa, fb) = (elemIsFloat(left), elemIsFloat(right))
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  def kernel(xa: ArrayData, xb: ArrayData): Double = {
+    val fa = floatLeft
+    val fb = floatRight
     val n = math.min(xa.numElements(), xb.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = if (xa.isNullAt(i)) 0.0
-        else if (fa) xa.getFloat(i).toDouble else xa.getDouble(i)
-      val y = if (xb.isNullAt(i)) 0.0
-        else if (fb) xb.getFloat(i).toDouble else xb.getDouble(i)
+      val x = if (xa.isNullAt(i)) 0.0 else KernelCall.at(xa, i, fa)
+      val y = if (xb.isNullAt(i)) 0.0 else KernelCall.at(xb, i, fb)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      def get(arr: String, isFloat: Boolean): String =
-        if (isFloat) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $x = $a.isNullAt($i) ? 0.0 : ${get(a, elemIsFloat(left))};
-         |  final double $y = $b.isNullAt($i) ? 0.0 : ${get(b, elemIsFloat(right))};
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

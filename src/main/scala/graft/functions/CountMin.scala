@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -119,14 +120,8 @@ case class CountMinAgg(child: Expression, depth: Int, width: Int,
   require(depth > 0 && width > 0,
     s"count_min requires depth > 0 and width > 0, got ($depth, $width)")
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"count_min requires a string key column, got " +
-          child.dataType.catalogString)
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "a string key column")(_ == Seq(StringType))
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -178,39 +173,32 @@ case class CountMinAgg(child: Expression, depth: Int, width: Int,
 /** Scalar point-query over a stored CMS: `min over rows d of
   * sketch[d·width + cell_d(term)]` — null if either input is null
   * (a null term has no count to ask for; nulls were skipped at build).
-  * CodegenFallback by design: this runs at PROBE cardinality (a handful
-  * of asked terms), never in a corpus scan, so a doGenCode would buy
-  * nothing (the [[SketchCosUpperBound]] calculus in reverse). */
+  * A sketch whose length is not depth×width fails the row. */
 case class CountMinEstimate(sketch: Expression, term: Expression,
     depth: Int, width: Int)
-    extends Expression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+    extends Expression with KernelCall {
 
   override def children: Seq[Expression] = Seq(sketch, term)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (sketch.dataType, term.dataType) match {
-      case (ArrayType(LongType, _), StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (s, t) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"count_min_estimate requires (array<bigint>, string), got " +
-            s"(${s.catalogString}, ${t.catalogString})")
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "(array<bigint>, string)") {
+      case Seq(s, StringType) => KernelCall.isLongs(s)
+      case _ => false
     }
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def foldable: Boolean = false
 
   override def eval(input: InternalRow): Any = {
     val sk = sketch.eval(input)
     val t = term.eval(input)
-    if (sk == null || t == null) return null
-    val arr = sk.asInstanceOf[ArrayData]
+    if (sk == null || t == null) null
+    else kernel(sk.asInstanceOf[ArrayData], t.asInstanceOf[UTF8String])
+  }
+
+  def kernel(arr: ArrayData, s: UTF8String): Long = {
     require(arr.numElements() == depth * width,
       s"sketch length ${arr.numElements()} != depth*width (${depth * width})")
-    val s = t.asInstanceOf[UTF8String]
     var best = Long.MaxValue
     var d = 0
     while (d < depth) {

@@ -7,65 +7,63 @@ import org.apache.spark.sql.types.IntegerType
 /** SQL surface for graft's native expressions: after
   * `GraftFunctions.register(spark)`, `cosine_similarity(a, b)` and
   * `top_k_by_score(score, id, k)` are callable from `spark.sql(...)`
-  * exactly like built-ins — the same codegen'd [[CosineSimilarity]] /
-  * bounded [[TopKByScoreAgg]] the Column API uses, no UDF layer.
+  * exactly like built-ins — the same [[CosineSimilarity]] / bounded
+  * [[TopKByScoreAgg]] the Column API uses, no UDF layer.
   *
   * The shared `builders` map also feeds [[graft.GraftExtensions]], the
   * `spark.sql.extensions` builder-time door — one builder definition,
   * two registration paths, identical plans. */
 object GraftFunctions {
 
-  val builders: Map[String, Seq[Expression] => Expression] = Map(
-    "cosine_similarity" -> {
+  /** One SQL function: the expression class its `ExpressionInfo` names,
+    * the argument shape its error names, and the builder proper. */
+  final class Builder(name: String, val docClass: Class[_], shape: String,
+      build: PartialFunction[Seq[Expression], Expression])
+      extends (Seq[Expression] => Expression) {
+    def apply(args: Seq[Expression]): Expression =
+      build.applyOrElse(args, (other: Seq[Expression]) =>
+        throw new IllegalArgumentException(
+          s"$name expects $shape, got ${other.map(_.sql).mkString(", ")}"))
+  }
+
+  private def builder(name: String, docClass: Class[_], shape: String)(
+      build: PartialFunction[Seq[Expression], Expression]): (String, Builder) =
+    name -> new Builder(name, docClass, shape, build)
+
+  val builders: Map[String, Builder] = Map(
+    builder("cosine_similarity", classOf[CosineSimilarity], "(a, b)") {
       case Seq(a, b) => CosineSimilarity(a, b)
-      case other => throw new IllegalArgumentException(
-        s"cosine_similarity expects 2 arguments, got ${other.size}")
     },
-    "top_k_by_score" -> {
-      // k must be a literal int: it sizes the aggregation buffer at
-      // planning time, so a column-valued k cannot exist.
+    // k must be a literal int: it sizes the aggregation buffer at
+    // planning time, so a column-valued k cannot exist.
+    builder("top_k_by_score", classOf[TopKByScoreAgg], "(score, id, k literal int)") {
       case Seq(score, id, Literal(k: Int, IntegerType)) =>
         TopKByScoreAgg(score, id, k).toAggregateExpression()
-      case other => throw new IllegalArgumentException(
-        "top_k_by_score expects (score, id, k literal int), got " +
-          other.map(_.sql).mkString(", "))
     },
-    "nfc_normalize" -> {
+    builder("nfc_normalize", classOf[NfcNormalize], "(text)") {
       case Seq(s) => NfcNormalize(s)
-      case other => throw new IllegalArgumentException(
-        s"nfc_normalize expects 1 argument, got ${other.size}")
     },
-    "hashed_shingles" -> {
-      // n must be a literal int: it is part of the expression's shape.
+    // n must be a literal int: it is part of the expression's shape.
+    builder("hashed_shingles", classOf[HashedShingles], "(text, n literal int)") {
       case Seq(s, Literal(n: Int, IntegerType)) => HashedShingles(s, n)
-      case other => throw new IllegalArgumentException(
-        "hashed_shingles expects (text, n literal int), got " +
-          other.map(_.sql).mkString(", "))
     },
-    "heavy_hitters" -> {
-      // capacity must be a literal int: it sizes the summary at
-      // planning time, like top_k_by_score's k.
+    // capacity must be a literal int: it sizes the summary at planning
+    // time, like top_k_by_score's k.
+    builder("heavy_hitters", classOf[HeavyHittersAgg], "(term, capacity literal int)") {
       case Seq(term, Literal(capacity: Int, IntegerType)) =>
         HeavyHittersAgg(term, capacity).toAggregateExpression()
-      case other => throw new IllegalArgumentException(
-        "heavy_hitters expects (term, capacity literal int), got " +
-          other.map(_.sql).mkString(", "))
     },
-    "count_min" -> {
-      // depth/width are literal ints: they size the sketch table at
-      // planning time, like heavy_hitters' capacity.
+    // depth/width are literal ints: they size the sketch table at
+    // planning time, like heavy_hitters' capacity.
+    builder("count_min", classOf[CountMinAgg],
+        "(term, depth literal int, width literal int)") {
       case Seq(term, Literal(d: Int, IntegerType), Literal(w: Int, IntegerType)) =>
         CountMinAgg(term, d, w).toAggregateExpression()
-      case other => throw new IllegalArgumentException(
-        "count_min expects (term, depth literal int, width literal int), " +
-          s"got ${other.map(_.sql).mkString(", ")}")
     },
-    "count_min_estimate" -> {
+    builder("count_min_estimate", classOf[CountMinEstimate],
+        "(sketch, term, depth literal int, width literal int)") {
       case Seq(sk, term, Literal(d: Int, IntegerType), Literal(w: Int, IntegerType)) =>
         CountMinEstimate(sk, term, d, w)
-      case other => throw new IllegalArgumentException(
-        "count_min_estimate expects (sketch, term, depth literal int, " +
-          s"width literal int), got ${other.map(_.sql).mkString(", ")}")
     })
 
   def register(spark: SparkSession): Unit =

@@ -1,7 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -26,7 +26,7 @@ import org.apache.spark.sql.types._
   *   - a null ARRAY on either side is null (BinaryExpression default).
   */
 case class HammingDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   override def dataType: DataType = LongType
 
@@ -34,20 +34,17 @@ case class HammingDistance(left: Expression, right: Expression)
   // above — so never claim non-nullable.
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hamming_distance requires two array<bigint> inputs, got " +
-            s"${l.catalogString} and ${r.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "two array<bigint> inputs")(_.forall(KernelCall.isLongs))
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def kernelMayReturnNull: Boolean = true
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  /** Boxed distance, or null on the length-mismatch and null-element
+    * edges (see class doc). */
+  def kernel(x: ArrayData, y: ArrayData): Any = {
     if (x.numElements() != y.numElements()) return null
     val n = x.numElements()
     var total = 0L
@@ -59,26 +56,6 @@ case class HammingDistance(left: Expression, right: Expression)
     }
     total
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // Reference-call codegen (the Int8QuantizeCodes discipline) — but
-    // the kernel returns a BOXED Long-or-null (the length/null-element
-    // edges), so the generated code unboxes and sets isNull.
-    val self = ctx.addReferenceObj("hammingDistance", this,
-      classOf[HammingDistance].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("hd")
-      s"""
-         |Object $boxed = $self.kernel($a, $b);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Long) $boxed).longValue(); }
-       """.stripMargin
-    })
-  }
-
-  /** Public entry for the generated code path; null on the mismatch /
-    * null-element edges (see class doc). */
-  def kernel(a: ArrayData, b: ArrayData): Any = nullSafeEval(a, b)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HammingDistance =

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -38,7 +36,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class HashedShingles(child: Expression, n: Int,
     distinct: Boolean = true)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   require(n >= 1, "shingle width n must be ≥ 1")
 
@@ -46,52 +44,23 @@ case class HashedShingles(child: Expression, n: Int,
 
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"hashed_shingles requires a string input, got " +
-          child.dataType.catalogString)
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "a string input")(_ == Seq(StringType))
+
+  override protected def kernelSeesNull: Boolean = true
 
   override def eval(input: InternalRow): Any =
-    HashedShingles.compute(
-      child.eval(input).asInstanceOf[UTF8String], n, distinct)
+    kernel(child.eval(input).asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val arrayData = classOf[ArrayData].getName
-    val call = s"graft.functions.HashedShingles.compute(" +
-      s"${c.isNull} ? null : ${c.value}, $n, $distinct)"
-    ev.copy(
-      code = code"""
-        ${c.code}
-        $arrayData ${ev.value} = $call;""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HashedShingles =
-    copy(child = newChild)
-
-  override def prettyName: String = "hashed_shingles"
-}
-
-object HashedShingles {
-
-  private val Seed = 42L
-  private val Space = ' '.toByte
-  private val Empty = new GenericArrayData(Array.emptyLongArray)
-
-  /** Static kernel shared by eval and codegen (the [[NfcNormalize]]
-    * discipline). Null-tolerant: null → empty array.
+  /** Null-tolerant: null → empty array.
     *
     * `distinct = false` is the POSITIONAL mode (round 13, feeding
     * span-level dedup): one hash per shingle START in token order, so
     * `posexplode` over the result yields (position, shingle) pairs
     * directly — the distinct table is skipped entirely and the output
     * length is exactly `nw − n + 1`. */
-  def compute(s: UTF8String, n: Int, distinct: Boolean = true): ArrayData = {
+  def kernel(s: UTF8String): ArrayData = {
+    import HashedShingles.{Empty, Seed, Space}
     if (s == null) return Empty
     val base = s.getBaseObject
     val off = s.getBaseOffset
@@ -150,4 +119,15 @@ object HashedShingles {
     new GenericArrayData(
       if (outN == m) out else java.util.Arrays.copyOf(out, outN))
   }
+
+  override protected def withNewChildInternal(newChild: Expression): HashedShingles =
+    copy(child = newChild)
+
+  override def prettyName: String = "hashed_shingles"
+}
+
+object HashedShingles {
+  private val Seed = 42L
+  private val Space = ' '.toByte
+  private val Empty = new GenericArrayData(Array.emptyLongArray)
 }

@@ -6,6 +6,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -100,14 +101,8 @@ case class HeavyHittersAgg(child: Expression, capacity: Int,
     with UnaryLike[Expression] {
   require(capacity > 0, s"heavy_hitters requires capacity > 0, got $capacity")
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"heavy_hitters requires a string term column, got " +
-          child.dataType.catalogString)
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "a string term column")(_ == Seq(StringType))
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(

@@ -1,7 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -28,37 +28,25 @@ import org.apache.spark.sql.types._
   *     UnsafeArrayData straight from a primitive double[];
   *   - a null ARRAY yields null (UnaryExpression default).
   *
-  * Why not the HOFs: `aggregate`/`transform` are CodegenFallback —
+  * Why not the HOFs: `aggregate`/`transform` have no generated code —
   * three interpreted element-at-a-time passes with boxing per row. At
   * 512-d × 50k rows that was the whole cost of sim_quantized_topk's
   * corpus scan.
   */
-case class Int8QuantizeCodes(child: Expression) extends UnaryExpression {
+case class Int8QuantizeCodes(child: Expression) extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"int8_quantize_codes requires an array<float|double> input, got " +
-            s"${other.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "an array<float|double> input")(_.forall(KernelCall.isVector))
 
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  @transient private lazy val isFloat = KernelCall.floatElements(child)
 
-  /** Round half away from zero — see the scaladoc for why this agrees
-    * with Spark's string-mediated HALF_UP `round` on every double.
-    * Shared kernel: [[GraftMath.roundAway]]. */
-  private def roundAway(x: Double): Double = GraftMath.roundAway(x)
+  override protected def nullSafeEval(input: Any): Any =
+    kernel(input.asInstanceOf[ArrayData])
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val isFloat = elemIsFloat
+  def kernel(arr: ArrayData): ArrayData = {
+    val f = isFloat
     val n = arr.numElements()
     var hasNull = false
     var maxAbs = 0.0
@@ -66,8 +54,7 @@ case class Int8QuantizeCodes(child: Expression) extends UnaryExpression {
     while (i < n) {
       if (arr.isNullAt(i)) hasNull = true
       else {
-        val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-        val a = math.abs(x)
+        val a = math.abs(KernelCall.at(arr, i, f))
         if (a > maxAbs) maxAbs = a
       }
       i += 1
@@ -81,8 +68,7 @@ case class Int8QuantizeCodes(child: Expression) extends UnaryExpression {
       val out = new Array[Double](n)
       i = 0
       while (i < n) {
-        val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-        out(i) = roundAway(x / scale)
+        out(i) = GraftMath.roundAway(KernelCall.at(arr, i, f) / scale)
         i += 1
       }
       ArrayData.toArrayData(out)
@@ -90,32 +76,13 @@ case class Int8QuantizeCodes(child: Expression) extends UnaryExpression {
       val out = new Array[Any](n)
       i = 0
       while (i < n) {
-        if (!arr.isNullAt(i)) {
-          val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-          out(i) = roundAway(x / scale)
-        }
+        if (!arr.isNullAt(i))
+          out(i) = GraftMath.roundAway(KernelCall.at(arr, i, f) / scale)
         i += 1
       }
       new GenericArrayData(out)
     }
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // The expression object itself carries the loop via a reference call:
-    // the two-pass kernel with the null slow path is easier to keep
-    // bit-identical in ONE implementation than in duplicated Java text,
-    // and the per-row cost is the O(d) loop, not the single virtual call.
-    val self = ctx.addReferenceObj("int8Quantize", this,
-      classOf[Int8QuantizeCodes].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)" +
-        s" $self.kernel($a);"
-    })
-  }
-
-  /** Public entry for the generated code path. */
-  def kernel(arr: ArrayData): ArrayData =
-    nullSafeEval(arr).asInstanceOf[ArrayData]
 
   override protected def withNewChildInternal(
       newChild: Expression): Int8QuantizeCodes = copy(child = newChild)

@@ -1,7 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -10,8 +10,7 @@ import org.apache.spark.sql.types._
   * for j ∈ [0, pDims) — as ONE fused two-pass primitive loop per row,
   * emitting `array<long>` of exact projection cells.
   *
-  * The [[Int8QuantizeCodes]] / [[SignBitPack]] discipline applied to
-  * the pre-ANN shrink kernel: the HOF formulation
+  * The pre-ANN shrink kernel: the HOF formulation
   * (`transform(sequence)` over `aggregate(zip_with)` per cell, with the
   * integerizing `transform` inlined 3× by CollapseProject) is
   * interpreted element-at-a-time — and any plan that evaluates it more
@@ -35,28 +34,16 @@ import org.apache.spark.sql.types._
   *   - a null vector is null (UnaryExpression default; the HOF's
   *     explicit isNull branch mirrors this).
   */
-case class JlProject(child: Expression, pDims: Int) extends UnaryExpression {
+case class JlProject(child: Expression, pDims: Int)
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) if pDims > 0 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"jl_project requires an array<float|double> input and pDims > 0, " +
-            s"got ${other.catalogString}, pDims=$pDims")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, s"an array<float|double> input and pDims > 0 (pDims=$pDims)")(
+      t => pDims > 0 && t.forall(KernelCall.isVector))
 
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  /** Round half away from zero — agrees with Spark's and DuckDB's
-    * `round` on every double (see [[Int8QuantizeCodes]]). Shared
-    * kernel: [[GraftMath.roundAway]]. */
-  private def roundAway(x: Double): Double = GraftMath.roundAway(x)
+  @transient private lazy val isFloat = KernelCall.floatElements(child)
 
   /** Data-independent ±1 sign table for cells (i, j), built LAZILY to
     * the longest vector seen and published via volatile (the
@@ -98,9 +85,11 @@ case class JlProject(child: Expression, pDims: Int) extends UnaryExpression {
     t
   }
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val isFloat = elemIsFloat
+  override protected def nullSafeEval(input: Any): Any =
+    kernel(input.asInstanceOf[ArrayData])
+
+  def kernel(arr: ArrayData): ArrayData = {
+    val f = isFloat
     val n = arr.numElements()
     if (n == 0) return ArrayData.toArrayData(new Array[Long](pDims))
     val vi = new Array[Long](n)
@@ -108,10 +97,7 @@ case class JlProject(child: Expression, pDims: Int) extends UnaryExpression {
     var i = 0
     while (i < n && !hasNull) {
       if (arr.isNullAt(i)) hasNull = true
-      else {
-        val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-        vi(i) = roundAway(x * 1000000.0).toLong
-      }
+      else vi(i) = GraftMath.roundAway(KernelCall.at(arr, i, f) * 1000000.0).toLong
       i += 1
     }
     if (hasNull) {
@@ -134,21 +120,6 @@ case class JlProject(child: Expression, pDims: Int) extends UnaryExpression {
       ArrayData.toArrayData(out)
     }
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // Reference-call codegen (the Int8QuantizeCodes discipline): one
-    // kernel implementation stays bit-identical on both paths.
-    val self = ctx.addReferenceObj("jlProject", this,
-      classOf[JlProject].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)" +
-        s" $self.kernel($a);"
-    })
-  }
-
-  /** Public entry for the generated code path. */
-  def kernel(arr: ArrayData): ArrayData =
-    nullSafeEval(arr).asInstanceOf[ArrayData]
 
   override protected def withNewChildInternal(
       newChild: Expression): JlProject = copy(child = newChild)

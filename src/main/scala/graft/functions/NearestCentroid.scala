@@ -1,13 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Fused argmax-dot centroid assignment: for an `array<float|double>`
   * row vector and a fixed k×d centroid matrix, returns the index of the
-  * max-dot-product centroid in ONE codegen'd k·d loop per row.
+  * max-dot-product centroid in ONE fused k·d loop per row.
   *
   * Why not compose it from built-ins? The previous formulation —
   * `array(cos(v, c₀) … cos(v, cₖ₋₁))` then
@@ -36,95 +36,46 @@ import org.apache.spark.sql.types._
   *   - a row shorter than d dots over its common prefix.
   */
 case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   require(centroids.nonEmpty, "NearestCentroid requires at least one centroid")
   require(centroids.forall(_.length == centroids.head.length),
     "NearestCentroid requires centroids of uniform dimension")
 
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_centroid requires an array<float|double> input, got " +
-            s"${other.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "an array<float|double> input")(_.forall(KernelCall.isVector))
 
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  @transient private lazy val numCentroids = centroids.length
+  @transient private lazy val isFloat = KernelCall.floatElements(child)
   @transient private lazy val dim = centroids.head.length
-  /** Row-major k×d matrix; flat primitive array so both the interpreted
-    * and generated loops index it without boxing. */
-  @transient private lazy val flatMatrix: Array[Double] = {
-    val m = new Array[Double](numCentroids * dim)
-    var c = 0
-    while (c < numCentroids) {
-      val cv = centroids(c)
-      var j = 0
-      while (j < dim) { m(c * dim + j) = cv(j); j += 1 }
-      c += 1
-    }
-    m
-  }
+  /** Row-major k×d matrix; a flat primitive array, so the kernel indexes
+    * it without boxing. */
+  @transient private lazy val flatMatrix: Array[Double] = centroids.flatten.toArray
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val isFloat = elemIsFloat
-    val n = math.min(arr.numElements(), dim)
+  override protected def nullSafeEval(a: Any): Any =
+    kernel(a.asInstanceOf[ArrayData])
+
+  def kernel(arr: ArrayData): Int = {
+    val f = isFloat
+    val d = dim
+    val mat = flatMatrix
+    val n = math.min(arr.numElements(), d)
     var best = 0
     var bestDot = Double.NegativeInfinity
-    var c = 0
-    while (c < numCentroids) {
-      val base = c * dim
+    var base = 0
+    while (base < mat.length) {
       var dot = 0.0
       var j = 0
       while (j < n) {
-        val x = if (arr.isNullAt(j)) 0.0
-          else if (isFloat) arr.getFloat(j).toDouble else arr.getDouble(j)
-        dot += x * flatMatrix(base + j)
+        val x = if (arr.isNullAt(j)) 0.0 else KernelCall.at(arr, j, f)
+        dot += x * mat(base + j)
         j += 1
       }
-      if (dot > bestDot) { bestDot = dot; best = c }
-      c += 1
+      if (dot > bestDot) { bestDot = dot; best = base / d }
+      base += d
     }
     best
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val mat = ctx.addReferenceObj("centroidMatrix", flatMatrix, "double[]")
-      val n = ctx.freshName("n")
-      val best = ctx.freshName("best")
-      val bestDot = ctx.freshName("bestDot")
-      val c = ctx.freshName("c")
-      val base = ctx.freshName("base")
-      val dot = ctx.freshName("dot")
-      val j = ctx.freshName("j")
-      val x = ctx.freshName("x")
-      val get =
-        if (elemIsFloat) s"(double) $a.getFloat($j)" else s"$a.getDouble($j)"
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $dim);
-         |int $best = 0;
-         |double $bestDot = java.lang.Double.NEGATIVE_INFINITY;
-         |for (int $c = 0; $c < $numCentroids; $c++) {
-         |  final int $base = $c * $dim;
-         |  double $dot = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    final double $x = $a.isNullAt($j) ? 0.0 : $get;
-         |    $dot += $x * $mat[$base + $j];
-         |  }
-         |  if ($dot > $bestDot) { $bestDot = $dot; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): NearestCentroid = copy(child = newChild)

@@ -2,8 +2,8 @@ package graft.functions
 
 import java.text.Normalizer
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,25 +27,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * canonical composition, which is stable across Unicode versions for
   * assigned code points.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = StringType
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"nfc_normalize requires a string input, got " +
-          child.dataType.catalogString)
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "a string input")(_ == Seq(StringType))
 
   override protected def nullSafeEval(input: Any): Any =
-    NfcNormalize.normalize(input.asInstanceOf[UTF8String])
+    kernel(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.NfcNormalize.normalize($c)")
+  def kernel(s: UTF8String): UTF8String = NfcNormalize.normalize(s)
 
   override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
     copy(child = newChild)
@@ -54,7 +46,7 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object NfcNormalize {
-  /** Static kernel shared by eval and codegen. ASCII fast path: a
+  /** The normalization, outside any expression instance. ASCII fast path: a
     * UTF8String whose byte length equals its char count has no multi-byte
     * code points, and ASCII is already NFC — return the input as-is. */
   def normalize(s: UTF8String): UTF8String = {

@@ -1,7 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -11,10 +11,9 @@ import org.apache.spark.sql.types._
   * BIGINT reproduces them without sign traps — see
   * [[graft.operators.BinaryQuant.WordBits]]).
   *
-  * The [[Int8QuantizeCodes]] lesson applied to the binary-ANN ingest
-  * path (VERDICT r17 ask #4): the HOF formulation
+  * The binary-ANN ingest kernel (VERDICT r17 ask #4): the HOF formulation
   * (`transform(sequence)` over `aggregate(zip_with(slice, sequence))`)
-  * is CodegenFallback — interpreted element-at-a-time with boxing and a
+  * has no generated code — interpreted element-at-a-time with boxing and a
   * per-word slice copy, measured ~200 µs/row at 512-d, which made the
   * write-once packing scan the single visible build cost at the 100×
   * stress scale (0.72 → 9.76 s). This kernel is one branch-per-element
@@ -30,56 +29,31 @@ import org.apache.spark.sql.types._
   *   - an EMPTY vector packs to the empty array;
   *   - a null vector packs to null (UnaryExpression default).
   */
-case class SignBitPack(child: Expression) extends UnaryExpression {
+case class SignBitPack(child: Expression) extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sign_bit_pack requires an array<float|double> input, got " +
-            s"${other.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "an array<float|double> input")(_.forall(KernelCall.isVector))
 
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  @transient private lazy val isFloat = KernelCall.floatElements(child)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val isFloat = elemIsFloat
+  override protected def nullSafeEval(input: Any): Any =
+    kernel(input.asInstanceOf[ArrayData])
+
+  def kernel(arr: ArrayData): ArrayData = {
+    val f = isFloat
     val n = arr.numElements()
     val words = (n + 31) / 32
     val out = new Array[Long](words)
     var i = 0
     while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-        if (x > 0.0) out(i / 32) |= (1L << (i % 32))
-      }
+      if (!arr.isNullAt(i) && KernelCall.at(arr, i, f) > 0.0)
+        out(i / 32) |= (1L << (i % 32))
       i += 1
     }
     ArrayData.toArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // Reference-call codegen (the Int8QuantizeCodes discipline): one
-    // kernel implementation stays bit-identical on both paths, and the
-    // per-row cost is the O(d) loop, not the single virtual call.
-    val self = ctx.addReferenceObj("signBitPack", this,
-      classOf[SignBitPack].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)" +
-        s" $self.kernel($a);"
-    })
-  }
-
-  /** Public entry for the generated code path. */
-  def kernel(arr: ArrayData): ArrayData =
-    nullSafeEval(arr).asInstanceOf[ArrayData]
 
   override protected def withNewChildInternal(
       newChild: Expression): SignBitPack = copy(child = newChild)

@@ -1,15 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.types._
 
 /** Sound cosine UPPER BOUND from two compact verify sketches
   * (struct<binary q, double scale, double norm> — int8 codes + the
-  * quantization scale + the exact L2 norm), as ONE codegen'd fused
-  * loop per candidate pair.
+  * quantization scale + the exact L2 norm), as ONE fused loop per
+  * candidate pair.
   *
   * The math is [[graft.operators.Dedup.verifySketchUdf]]'s companion
   * bound, bit-identical to the Scala UDF it replaced (same double
@@ -23,7 +22,7 @@ import org.apache.spark.sql.types._
   * candidate cardinality × d byte-multiplies — so it follows the
   * charter's preference order off the Scala-UDF tier: no
   * Catalyst↔Scala conversion of the byte arrays, no boxed tuple, and
-  * the loop fuses into the enclosing WholeStageCodegen stage.
+  * the enclosing WholeStageCodegen stage calls the loop directly.
   *
   * Null / degenerate semantics (filter-equivalent to the UDF): a null
   * sketch on either side, a null code array, or a zero norm yields
@@ -35,34 +34,28 @@ import org.apache.spark.sql.types._
   * expression itself is never null-valued.
   */
 case class SketchCosUpperBound(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = false
 
-  private def okStruct(t: DataType): Boolean = t match {
-    case StructType(fields) if fields.length == 3 =>
-      fields(0).dataType == BinaryType &&
-        fields(1).dataType == DoubleType && fields(2).dataType == DoubleType
-    case _ => false
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "struct<binary,double,double> inputs")(_.forall {
+      case StructType(Array(q, scale, norm)) =>
+        q.dataType == BinaryType && scale.dataType == DoubleType &&
+          norm.dataType == DoubleType
+      case _ => false
+    })
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (okStruct(left.dataType) && okStruct(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sketch_cos_upper requires struct<binary,double,double> inputs, " +
-          s"got ${left.dataType.catalogString} and ${right.dataType.catalogString}")
+  override protected def kernelSeesNull: Boolean = true
 
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) return Double.NegativeInfinity
-    val ra = a.asInstanceOf[InternalRow]
-    val rb = b.asInstanceOf[InternalRow]
-    if (ra.isNullAt(0) || rb.isNullAt(0)) return Double.NegativeInfinity
+  override def eval(input: InternalRow): Any =
+    kernel(left.eval(input).asInstanceOf[InternalRow],
+      right.eval(input).asInstanceOf[InternalRow])
+
+  def kernel(ra: InternalRow, rb: InternalRow): Double = {
+    if (ra == null || rb == null || ra.isNullAt(0) || rb.isNullAt(0))
+      return Double.NegativeInfinity
     val qa = ra.getBinary(0); val sa = ra.getDouble(1); val na = ra.getDouble(2)
     val qb = rb.getBinary(0); val sb = rb.getDouble(1); val nb = rb.getDouble(2)
     if (na == 0.0 || nb == 0.0) return Double.NegativeInfinity
@@ -83,57 +76,6 @@ case class SketchCosUpperBound(left: Expression, right: Expression)
     val eb = sb * sq / 2.0
     (sa * sb * dot.toDouble + (na + ea) * eb + ea * (nb + eb) + ea * eb) /
       (na * nb)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lg = left.genCode(ctx)
-    val rg = right.genCode(ctx)
-    val ra = ctx.freshName("ra"); val rb = ctx.freshName("rb")
-    val qa = ctx.freshName("qa"); val qb = ctx.freshName("qb")
-    val sa = ctx.freshName("sa"); val sb = ctx.freshName("sb")
-    val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-    val d = ctx.freshName("d"); val dot = ctx.freshName("dot")
-    val i = ctx.freshName("i")
-    val ea = ctx.freshName("ea"); val eb = ctx.freshName("eb")
-    val sq = ctx.freshName("sq")
-    ev.copy(isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral,
-      code = code"""
-        ${lg.code}
-        ${rg.code}
-        double ${ev.value} = java.lang.Double.NEGATIVE_INFINITY;
-        if (!${lg.isNull} && !${rg.isNull}) {
-          org.apache.spark.sql.catalyst.InternalRow $ra = ${lg.value};
-          org.apache.spark.sql.catalyst.InternalRow $rb = ${rg.value};
-          if (!$ra.isNullAt(0) && !$rb.isNullAt(0)) {
-            byte[] $qa = $ra.getBinary(0);
-            double $sa = $ra.getDouble(1);
-            double $na = $ra.getDouble(2);
-            byte[] $qb = $rb.getBinary(0);
-            double $sb = $rb.getDouble(1);
-            double $nb = $rb.getDouble(2);
-            if ($na != 0.0 && $nb != 0.0) {
-              if ($qa.length != $qb.length) {
-                // stale-sketch length mismatch: +Inf keeps the pair
-                // for the exact verify (see eval) — a prefix "bound"
-                // with full norms is unsound
-                ${ev.value} = java.lang.Double.POSITIVE_INFINITY;
-              } else {
-                final int $d = $qa.length;
-                long $dot = 0L;
-                for (int $i = 0; $i < $d; $i++) {
-                  $dot += (long) $qa[$i] * (long) $qb[$i];
-                }
-                final double $sq = java.lang.Math.sqrt((double) $d);
-                final double $ea = $sa * $sq / 2.0;
-                final double $eb = $sb * $sq / 2.0;
-                ${ev.value} = ($sa * $sb * (double) $dot
-                  + ($na + $ea) * $eb + $ea * ($nb + $eb) + $ea * $eb)
-                  / ($na * $nb);
-              }
-            }
-          }
-        }
-      """)
   }
 
   override protected def withNewChildrenInternal(

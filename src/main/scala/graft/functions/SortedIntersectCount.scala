@@ -1,7 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -26,30 +26,27 @@ import org.apache.spark.sql.types._
   * Under that contract the count equals `size(array_intersect(a, b))`
   * exactly (spec-pinned against the built-in on random inputs). A null
   * ARRAY on either side is null (BinaryExpression default); a null
-  * ELEMENT — impossible from the producing kernel — returns null, the
-  * [[HammingDistance]] fail-visible discipline.
+  * ELEMENT — impossible from the producing kernel — returns null, as
+  * [[HammingDistance]] does, so a broken contract shows instead of
+  * miscounting.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   override def dataType: DataType = IntegerType
 
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sorted_intersect_count requires two array<bigint> inputs, got " +
-            s"${l.catalogString} and ${r.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelCall.check(this, "two array<bigint> inputs")(_.forall(KernelCall.isLongs))
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def kernelMayReturnNull: Boolean = true
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  /** Boxed count, or null on the null-element edge. */
+  def kernel(x: ArrayData, y: ArrayData): Any = {
     val na = x.numElements()
     val nb = y.numElements()
     var i = 0
@@ -65,24 +62,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // Reference-call codegen (the HammingDistance discipline): the
-    // kernel returns boxed Integer-or-null for the null-element edge.
-    val self = ctx.addReferenceObj("sortedIntersectCount", this,
-      classOf[SortedIntersectCount].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("sic")
-      s"""
-         |Object $boxed = $self.kernel($a, $b);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Integer) $boxed).intValue(); }
-       """.stripMargin
-    })
-  }
-
-  /** Public entry for the generated code path. */
-  def kernel(a: ArrayData, b: ArrayData): Any = nullSafeEval(a, b)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =

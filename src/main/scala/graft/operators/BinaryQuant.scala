@@ -180,20 +180,7 @@ object BinaryQuant {
   def binaryTopK(s: SparkSession, dir: String,
       queryIds: Seq[Long] = 0L to 7L, k: Int = 3,
       pool: Int = DefaultPool): DataFrame = {
-    val codes = materializedBits(s, dir)
-    val q = codes.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("bits").as("qbits"))
-    val pooled = codes.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.VectorFunctions
-          .hammingPacked(col("bits"), col("qbits")).as("hamming"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScore(
-        -col("hamming").cast("double"), col("vec_id"), pool).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.id").as("vec_id"),
-        (-col("t.score")).cast("long").as("hamming"))
+    val pooled = hammingPool(materializedBits(s, dir), queryIds, pool)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"))
     val qv = emb.filter(col("vec_id").isInCollection(queryIds))
@@ -212,6 +199,29 @@ object BinaryQuant {
       .select(col("query_id"), col("rnk"), col("vec_id"), col("hamming"),
         round(col("cos"), 4).as("cos_sim"))
       .orderBy("query_id", "rnk")
+  }
+
+  /** Per query id in `queryIds`, the `pool` other rows of `codes`
+    * (`vec_id`, packed `bits`) nearest in Hamming distance, ties to the
+    * lower id: the packed-bits scan × broadcast query bits feeds the
+    * bounded TopKByScore aggregate, so the shuffle carries at most
+    * partitions·|queries|·pool entries. Rows are (query_id, vec_id,
+    * hamming). */
+  private def hammingPool(codes: DataFrame, queryIds: Seq[Long],
+      pool: Int): DataFrame = {
+    val q = codes.filter(col("vec_id").isInCollection(queryIds))
+      .select(col("vec_id").as("query_id"), col("bits").as("qbits"))
+    codes.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        graft.functions.VectorFunctions
+          .hammingPacked(col("bits"), col("qbits")).as("hamming"))
+      .groupBy("query_id")
+      .agg(graft.functions.TopKByScore(
+        -col("hamming").cast("double"), col("vec_id"), pool).as("top"))
+      .select(col("query_id"), explode(col("top")).as("t"))
+      .select(col("query_id"), col("t.id").as("vec_id"),
+        (-col("t.score")).cast("long").as("hamming"))
   }
 
   /** Registered query (`sim_binary_topk`): 3 nearest neighbors for
@@ -264,19 +274,7 @@ object BinaryQuant {
     val pool = recommendedPool(n)
     val codes = scaled.select(col("vec_id"),
       VectorFunctions.signBitsPacked(col("embedding")).as("bits"))
-    val q = codes.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("bits").as("qbits"))
-    val pooled = codes.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        VectorFunctions.hammingPacked(col("bits"), col("qbits"))
-          .as("hamming"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScore(
-        -col("hamming").cast("double"), col("vec_id"), pool).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.id").as("vec_id"),
-        (-col("t.score")).cast("long").as("hamming"))
+    val pooled = hammingPool(codes, queryIds, pool)
     val qv = scaled.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
     pooled.join(scaled, "vec_id")

@@ -20,7 +20,10 @@ import graft.TmpDirs
   *     `[A-Za-z0-9._-]` replaced by `_`, then the kind's tag (a kind
   *     without a tag, the IVF index, puts its params there instead: a
   *     different centroid count is another family, not a superseded
-  *     sibling). The stem names the (corpus, config) family;
+  *     sibling), with leading `_` and `.` dropped — Spark's file index
+  *     skips a path whose name starts with either, so `/root/x` keys as
+  *     `root_x_…`, never `_root_x_…`. The stem names the (corpus,
+  *     config) family;
   *   - key: `{stem}_v{V}[_{params}]_{bytes}_{mtime}`. `V` is the
   *     ALGORITHM VERSION, bumped whenever the artifact's semantics
   *     change; `bytes`/`mtime` are the DATA FINGERPRINT ([[fingerprint]]:
@@ -67,10 +70,11 @@ private[graft] object MaterializedCache {
       (build: Path => Unit): Path = {
     val (bytes, mtime) = fingerprint(Paths.get(dir, source))
     val corpus = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val (stem, keyParams) = kind.tag match {
+    val (family, keyParams) = kind.tag match {
       case Some(tag) => (s"${corpus}_$tag", params)
       case None => (s"${corpus}_$params", "")
     }
+    val stem = family.dropWhile(c => c == '_' || c == '.')
     val mid = if (keyParams.isEmpty) "" else s"_$keyParams"
     getOrBuild(kind.root, stem, s"${stem}_v$version${mid}_${bytes}_$mtime",
       doneMarker)(build)

@@ -404,10 +404,13 @@ object Similarity {
       graft.functions.VectorFunctions.nearestCentroid(col("embedding"), centroids))
 
   /** The query's embedding as a driver-side double array. */
-  def queryVector(e: DataFrame, queryId: Long): Array[Double] =
-    e.filter(col("vec_id") === queryId)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
+  def queryVector(e: DataFrame, queryId: Long): Array[Double] = {
+    val rows = e.filter(col("vec_id") === queryId)
+      .select(col("embedding").cast("array<double>")).head(1)
+    require(rows.nonEmpty,
+      s"IVF search: query vec_id=$queryId not found in the corpus")
+    rows(0).getSeq[Double](0).toArray
+  }
 
   /** The query's `nprobe` nearest centroid ids, driver-side: highest
     * dot product first, ties to the lower id. */

@@ -28,6 +28,21 @@ class CountMinSpec extends AnyFunSuite with SparkFixture {
       "alpha" -> 40L, "beta" -> 17L, "gamma" -> 3L, "delta" -> 1L))
   }
 
+  test("the estimate projection runs inside whole-stage codegen") {
+    // cms_term_freq's shape: per-group sketches joined to the asked
+    // terms, then the estimate projection over the join
+    val sk = Seq(("en", "a"), ("en", "b"), ("en", "a"), ("de", "a")).toDF("g", "term")
+      .groupBy("g").agg(CountMin(col("term"), 2, 64).as("sk"))
+    val q = Seq(("en", "a"), ("de", "b")).toDF("g", "p").join(sk, "g")
+      .select(col("g"), CountMin.estimate(col("sk"), col("p"), 2, 64).as("n"))
+    assert(q.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      Map("en" -> 2L, "de" -> 0L))
+    val plan = q.queryExecution.executedPlan.toString
+    // the "*(n)" prefix marks operators fused into WholeStageCodegen
+    assert("""\*\(\d+\) Project \[[^\]]*count_min_estimate""".r.findFirstIn(plan).nonEmpty,
+      s"not codegen'd:\n$plan")
+  }
+
   test("forced collisions (width 4): never underestimates, bounded above by N") {
     val vocab = (0 until 40).map(i => s"k$i")
     val rnd = new scala.util.Random(7)

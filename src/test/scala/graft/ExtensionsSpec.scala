@@ -10,8 +10,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     val ext = new SparkSessionExtensions
     new GraftExtensions()(ext)
     val reg = GraftColumnBridge.freshRegistryWith(ext)
-    for (name <- Seq("cosine_similarity", "top_k_by_score", "nfc_normalize",
-        "hashed_shingles", "heavy_hitters", "count_min", "count_min_estimate"))
+    for (name <- graft.functions.GraftFunctions.builders.keys)
       assert(reg.functionExists(FunctionIdentifier(name)),
         s"$name not injected")
   }
@@ -120,6 +119,98 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
       UTF8String.fromString(in))
     assert(proj(row).getUTF8String(0).toString === interpreted)
     assert(interpreted === "Am\u00e9lie \u03a9 resum\u00e9 plain")
+  }
+
+  test("interpreted eval and codegen agree for every native scalar expression on edge inputs") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+      InterpretedUnsafeProjection, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions._
+
+    /** Every row, as a generic and as an unsafe row, through the
+      * interpreted projection (`eval`) and the generated one (`doGenCode`):
+      * the two results must be byte-identical. */
+    def agree(types: Seq[DataType], rows: Seq[Seq[Any]])(
+        build: Seq[Expression] => Expression): Unit = {
+      val expr = build(types.zipWithIndex.map { case (t, i) =>
+        BoundReference(i, t, nullable = true) })
+      assert(expr.checkInputDataTypes().isSuccess, expr)
+      val interpreted = InterpretedUnsafeProjection.createProjection(Seq(expr))
+      val generated = GenerateUnsafeProjection.generate(Seq(expr))
+      val toUnsafe = UnsafeProjection.create(types.toArray)
+      for (vals <- rows) {
+        val generic = InternalRow.fromSeq(vals)
+        for (in <- Seq(generic, toUnsafe(generic).copy())) {
+          val (i, g) = (interpreted(in).copy(), generated(in).copy())
+          def show(r: InternalRow) =
+            if (r.isNullAt(0)) "null" else convertToScala(r.get(0, expr.dataType), expr.dataType)
+          assert(i == g, s"${expr.prettyName} on $vals: eval ${show(i)} vs codegen ${show(g)}")
+        }
+      }
+    }
+
+    def arr(xs: Seq[Any]): GenericArrayData =
+      if (xs == null) null else new GenericArrayData(xs.toArray)
+    def vec(t: DataType, xs: Seq[Any]): GenericArrayData = arr(
+      if (xs == null || t == ArrayType(DoubleType)) xs
+      else xs.map { case d: Double => d.toFloat; case other => other })
+    val vecTypes = Seq(ArrayType(FloatType), ArrayType(DoubleType))
+    // null array, empty, zero-norm, null element, unequal lengths, a
+    // 33-element vector (one bit past a packed word), .5 rounding edges
+    val vecs: Seq[Seq[Any]] = Seq(null, Seq(), Seq(0.0, 0.0, 0.0),
+      Seq(1.0, -2.5, 3.0), Seq(0.5, null, -1.5), Seq(2.0, 1.0),
+      Seq(127.0, 0.5, -0.5, 63.5, -63.5), Seq(-1.0, 0.25, 4.0, 2.0, 0.0),
+      Seq.tabulate(33)(i => math.sin(i + 1.0)))
+    for (ta <- vecTypes; tb <- vecTypes)
+      agree(Seq(ta, tb), for (a <- vecs; b <- vecs) yield Seq(vec(ta, a), vec(tb, b))) {
+        case Seq(a, b) => CosineSimilarity(a, b)
+      }
+    val unit = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 0.6, 0.8), Seq(0.0, 0.6, 0.8),
+      Seq(-0.6, 0.0, 0.8))
+    for (t <- vecTypes) {
+      val rows = vecs.map(v => Seq(vec(t, v)))
+      agree(Seq(t), rows) { case Seq(v) => NearestCentroid(v, unit) }
+      agree(Seq(t), rows) { case Seq(v) => SignBitPack(v) }
+      agree(Seq(t), rows) { case Seq(v) => Int8QuantizeCodes(v) }
+      agree(Seq(t), rows) { case Seq(v) => JlProject(v, 4) }
+    }
+
+    val longs: Seq[Seq[Any]] = Seq(null, Seq(), Seq(1L, 3L), Seq(1L, 0L),
+      Seq(1L, null), Seq(-3L, 2L, 9L), Seq(2L, 5L, 9L, 11L), Seq(-1L, 5L, 7L))
+    val bits = ArrayType(LongType)
+    val longPairs = for (a <- longs; b <- longs) yield Seq(arr(a), arr(b))
+    agree(Seq(bits, bits), longPairs) { case Seq(a, b) => HammingDistance(a, b) }
+    agree(Seq(bits, bits), longPairs) { case Seq(a, b) => SortedIntersectCount(a, b) }
+
+    val sk = StructType(Seq(StructField("q", BinaryType),
+      StructField("scale", DoubleType), StructField("norm", DoubleType)))
+    def sketch(q: Array[Byte], scale: Double, norm: Double) = InternalRow(q, scale, norm)
+    // null struct, null codes, zero norm, empty codes, mismatched lengths
+    val sketches = Seq(null, sketch(null, 1.0, 1.0),
+      sketch(Array[Byte](1, 2, 3), 0.1, 2.0), sketch(Array[Byte](-1, 5, 127), 0.05, 1.5),
+      sketch(Array[Byte](1, 2), 0.1, 2.0), sketch(Array[Byte](1, 2, 3), 0.1, 0.0),
+      sketch(Array.emptyByteArray, 0.1, 1.0))
+    agree(Seq(sk, sk), for (a <- sketches; b <- sketches) yield Seq(a, b)) {
+      case Seq(a, b) => SketchCosUpperBound(a, b)
+    }
+
+    val texts = Seq(null, "", "  a  b ", "one two three two one two three four",
+      "cafe\u0301 \u2126 resume\u0301", "plain ascii").map(t =>
+      Seq(if (t == null) null else UTF8String.fromString(t)))
+    agree(Seq(StringType), texts) { case Seq(t) => NfcNormalize(t) }
+    for (n <- Seq(1, 2, 3); distinct <- Seq(true, false))
+      agree(Seq(StringType), texts) { case Seq(t) => HashedShingles(t, n, distinct) }
+
+    val table = arr(Seq.tabulate(16)(i => (i * 7 % 5).toLong))
+    agree(Seq(bits, StringType),
+      for (s <- Seq(null, table); t <- texts.map(_.head).take(4)) yield Seq(s, t)) {
+      case Seq(s, t) => CountMinEstimate(s, t, 2, 8)
+    }
   }
 
   test("SQL top_k_by_score through the session registry matches the Column API") {

@@ -141,4 +141,18 @@ class MaterializedCacheSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(dir.resolve("c"), "9")
     assert(MaterializedCache.fingerprint(dir)._1 === 9L)
   }
+  test("an absolute corpus dir keys a visible entry: no leading '_' or '.'") {
+    // Spark's file index skips paths whose name starts with '_' or '.',
+    // so a cache key spelled from "/tmp/..." must not keep the slash's '_'.
+    val dir = TmpDirs.scratch("mcache_stem")
+    java.nio.file.Files.writeString(dir.resolve("src"), "x")
+    val idx = MaterializedCache.artifact(MaterializedCache.Kind.Int8Codes,
+        dir.toString, "src", 1) { tmp =>
+      java.nio.file.Files.writeString(tmp.resolve("_SUCCESS"), "")
+    }
+    val name = idx.getFileName.toString
+    assert(dir.isAbsolute)
+    assert(!name.startsWith("_") && !name.startsWith("."), name)
+    assert(name.contains(dir.getFileName.toString), name)
+  }
 }

@@ -130,6 +130,16 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(!cids(0).isNullAt(0) && cids(1).isNullAt(0))
   }
 
+  test("an absent query id fails with a message naming it (IVF and index probe)") {
+    val absent = 999999L
+    val e1 = intercept[IllegalArgumentException](
+      Similarity.ivfTopK(spark, sf0001, absent, 5, numCentroids = 8, nprobe = 4))
+    assert(e1.getMessage.contains(s"vec_id=$absent"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Similarity.qIvfProbe(spark, sf0001, absent, 5, numCentroids = 8, nprobe = 4))
+    assert(e2.getMessage.contains(s"vec_id=$absent"), e2.getMessage)
+  }
+
   test("sim_ivf_probe (registered) builds the index once and probes it") {
     val probed = Similarity.qIvfProbe(spark, sf0001, 0L, 5,
       numCentroids = 8, nprobe = 4)
