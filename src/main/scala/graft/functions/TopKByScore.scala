@@ -28,8 +28,8 @@ import org.apache.spark.sql.types._
   *
   * Ordering is (score DESC, id ASC) — ties break on the id so results
   * are deterministic and cross-engine reproducible. NaN scores (e.g.
-  * cosine of a zero-norm embedding) are unrankable and skipped, matching
-  * the convention in [[graft.operators.Similarity]]'s centroid scoring.
+  * cosine of a zero-norm embedding) are unrankable and skipped, as
+  * [[graft.operators.Retrieval]]'s single-query cut skips them too.
   * Null score or id rows are skipped (aggregate-input convention).
   *
   * Result: `array<struct<score: double, id: bigint>>`, best-first,

@@ -176,24 +176,26 @@ object BinaryQuant {
     * pool-id equi-join back to the embeddings scan (|queries|·pool
     * rows drive the join) → broadcast query vectors → final rank via a
     * row_number window PARTITIONED by query over the ≤ pool-row
-    * per-query relation (bounded by construction — never the corpus). */
+    * per-query relation (bounded by construction — never the corpus).
+    *
+    * The re-rank keeps that window rather than [[Retrieval.batchTopK]]:
+    * each output row carries its `hamming` beside the score, and
+    * [[graft.functions.TopKByScore]] holds only (score, id). */
   def binaryTopK(s: SparkSession, dir: String,
       queryIds: Seq[Long] = 0L to 7L, k: Int = 3,
       pool: Int = DefaultPool): DataFrame = {
     val pooled = hammingPool(materializedBits(s, dir), queryIds, pool)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"))
-    val qv = emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
     import org.apache.spark.sql.expressions.Window
     val rnk = org.apache.spark.sql.functions.row_number().over(
       Window.partitionBy(col("query_id"))
         .orderBy(col("cos").desc, col("vec_id")))
     pooled.join(emb, "vec_id")
-      .join(broadcast(qv), "query_id")
+      .join(broadcast(Retrieval.queryFrame(emb, queryIds)), "query_id")
       .select(col("query_id"), col("vec_id"), col("hamming"),
         graft.functions.VectorFunctions
-          .cosine(col("embedding"), col("qemb")).as("cos"))
+          .cosine(col("embedding"), col("qvec")).as("cos"))
       .withColumn("rnk", rnk.cast("long"))
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("vec_id"), col("hamming"),
@@ -203,25 +205,21 @@ object BinaryQuant {
 
   /** Per query id in `queryIds`, the `pool` other rows of `codes`
     * (`vec_id`, packed `bits`) nearest in Hamming distance, ties to the
-    * lower id: the packed-bits scan × broadcast query bits feeds the
-    * bounded TopKByScore aggregate, so the shuffle carries at most
-    * partitions·|queries|·pool entries. Rows are (query_id, vec_id,
-    * hamming). */
+    * lower id: the packed-bits scan × broadcast query bits feeds
+    * [[Retrieval.batchTopK]] with score = −hamming, so the shuffle
+    * carries at most partitions·|queries|·pool entries. Rows are
+    * (query_id, vec_id, hamming). */
   private def hammingPool(codes: DataFrame, queryIds: Seq[Long],
       pool: Int): DataFrame = {
+    // not [[Retrieval.queryFrame]]: all-zero bits are a valid code (every
+    // element ≤ 0), so the zero-norm rule does not apply to them
     val q = codes.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("bits").as("qbits"))
-    codes.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
+    Retrieval.batchTopK(codes.crossJoin(broadcast(q)),
+        -graft.functions.VectorFunctions
+          .hammingPacked(col("bits"), col("qbits")).cast("double"), pool)
       .select(col("query_id"), col("vec_id"),
-        graft.functions.VectorFunctions
-          .hammingPacked(col("bits"), col("qbits")).as("hamming"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScore(
-        -col("hamming").cast("double"), col("vec_id"), pool).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.id").as("vec_id"),
-        (-col("t.score")).cast("long").as("hamming"))
+        (-col("score")).cast("long").as("hamming"))
   }
 
   /** Registered query (`sim_binary_topk`): 3 nearest neighbors for
@@ -247,7 +245,8 @@ object BinaryQuant {
     *     the RULE itself is hashed, not a frozen constant;
     *  3. emits the ENTIRE pool per query (not a top-k cut): a pool-rule
     *     regression changes the row count, failing rows_match before
-    *     hashes are even compared.
+    *     hashes are even compared. Having no cut, its re-rank uses
+    *     neither [[Retrieval]] cut, only its query frame.
     *
     * Determinism: rows are ordered/cut on (hamming asc, vec_id asc) —
     * exact integers end to end; the exact cosine re-rank score rides
@@ -275,13 +274,11 @@ object BinaryQuant {
     val codes = scaled.select(col("vec_id"),
       VectorFunctions.signBitsPacked(col("embedding")).as("bits"))
     val pooled = hammingPool(codes, queryIds, pool)
-    val qv = scaled.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
     pooled.join(scaled, "vec_id")
-      .join(broadcast(qv), "query_id")
+      .join(broadcast(Retrieval.queryFrame(scaled, queryIds)), "query_id")
       .select(col("query_id"), col("vec_id"), col("hamming"),
         lit(pool.toLong).as("pool"),
-        round(VectorFunctions.cosine(col("embedding"), col("qemb")), 4)
+        round(VectorFunctions.cosine(col("embedding"), col("qvec")), 4)
           .as("cos_sim"))
       .orderBy("query_id", "hamming", "vec_id")
   }

@@ -91,26 +91,10 @@ object Embeddings {
     * representable in both, and the cosine kernel widens to double, so
     * the two paths are bit-identical (EmbeddingsSpec pins it). */
   private def topKOverCodes(codes: DataFrame, queryId: Long,
-      k: Int): DataFrame = {
-    val qrows = codes.filter(col("vec_id") === queryId).head(1)
-    require(qrows.nonEmpty,
-      s"quantized search: query vec_id=$queryId not found in the corpus")
-    val qcodes: Seq[Double] = qrows(0).getSeq[Any](1).map {
-      case null => 0.0 // the kernel also scores null elements as 0
-      case n: Number => n.doubleValue
-    }
-    // An all-zero query quantizes to all-zero codes, whose cosine against
-    // everything is NaN — NaN sorts ABOVE every real double in Spark, so
-    // the "top-k" would be silently garbage rather than failing.
-    require(qcodes.exists(_ != 0.0),
-      s"quantized search: query vec_id=$queryId has zero norm — cosine undefined")
-    codes.filter(col("vec_id") =!= queryId)
-      .withColumn("cos",
-        graft.functions.VectorFunctions.cosine(col("qv"), typedLit(qcodes)))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos"), 4).as("cos_sim"))
-  }
+      k: Int): DataFrame =
+    Retrieval.topK(codes, queryId, Retrieval.queryVector(codes, queryId, "qv"),
+        k, "qv")
+      .select(col("vec_id"), Retrieval.cosSim)
 
   // --- materialized codes: the write-once/probe-many int8 path ----------
 
@@ -160,50 +144,17 @@ object Embeddings {
   /** Batch top-k over the materialized int8 codes — M queries answered
     * from ONE scan of the 4×-smaller table, the actual ANN-serving
     * batch shape ([[graft.operators.Similarity.batchTopK]]'s plan on
-    * the quantized representation): query codes ride a broadcast, the
-    * per-query top-k is the bounded TopKByScore aggregate (map-side
-    * partials ≤ k per query, never a Window sort over the corpus).
-    *
-    * LAZY VALIDATION CONTRACT (r16 ADVICE): the zero-norm query guard
-    * is an in-plan `assert_true` on the |queryIds|-row build side — it
-    * fires when the returned frame is EXECUTED, not at call time.
-    * Callers that build but never run the frame skip the check; every
-    * registered path executes (Verify/Bench collect or write). In-plan
-    * beats eager here because the eager form ran an extra driver job
-    * per call on the hot serving path (r15 ADVICE #4). */
+    * the quantized representation): query codes ride a broadcast
+    * [[Retrieval.queryFrame]], whose zero-norm check fires when the
+    * returned frame runs, and [[Retrieval.batchTopK]] cuts per query
+    * (map-side partials ≤ k per query, never a Window sort). */
   def quantizedBatchTopK(codes: DataFrame, queryIds: Seq[Long],
-      k: Int = 3): DataFrame = {
-    // Same guard as [[topKOverCodes]] (r14 ADVICE): an all-zero query's
-    // cosine is NaN, which TopKByScore silently skips (zero rows for
-    // that query) while the DuckDB oracle's ORDER BY cos DESC sorts NaN
-    // FIRST — a silent cross-engine divergence instead of a loud error.
-    // Folded INTO the scan (r15 ADVICE #4 — the previous
-    // localCheckpoint+collect validation ran an extra eager job on every
-    // call of the hot batch-serving path, and its `case n: Number` match
-    // threw an opaque MatchError on null elements): assert_true
-    // evaluates on the |queryIds|-row broadcast build side, null
-    // elements and null arrays count as zeros (the kernel scores them
-    // as 0), and the failure message still names the vec_id.
-    val zeroNorm = col("qcodes").isNull ||
-      forall(col("qcodes"), x => coalesce(x.cast("double"), lit(0d)) === 0d)
-    val q = codes.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("qv").as("qcodes"))
-      .filter(assert_true(!zeroNorm,
-        concat(lit("quantized batch search: query vec_id="),
-          col("query_id").cast("string"),
-          lit(" has zero norm — cosine undefined"))).isNull)
-    codes.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.VectorFunctions
-          .cosine(col("qv"), col("qcodes")).as("cos"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScore(col("cos"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("query_id"), (col("i") + 1).cast("long").as("rnk"),
-        col("t.id").as("vec_id"), round(col("t.score"), 4).as("cos_sim"))
+      k: Int = 3): DataFrame =
+    Retrieval.batchTopK(
+        codes.crossJoin(broadcast(Retrieval.queryFrame(codes, queryIds, "qv"))),
+        graft.functions.VectorFunctions.cosine(col("qv"), col("qvec")), k)
+      .select(col("query_id"), col("rnk"), col("vec_id"), Retrieval.cosSim)
       .orderBy("query_id", "rnk")
-  }
 
   /** Registered query (`sim_quantized_batch`): 3 nearest quantized
     * neighbors for each of the 8 query vectors 0..7, one scan of the

@@ -35,8 +35,9 @@ import graft.TmpDirs
   *     that sanitize to the same stem.
   *
   * Superseded siblings of the same stem (older algorithm version or data
-  * fingerprint) are pruned on rebuild, so regenerated testdata cannot
-  * accumulate stale trees in tmpdir forever. Builds land in a unique
+  * fingerprint), and entries whose name starts with `_` or `.` (keys no
+  * longer produced), are pruned on rebuild, so regenerated testdata
+  * cannot accumulate stale trees in tmpdir forever. Builds land in a unique
   * temp sibling, then ATOMIC_MOVE into place: two concurrent first-builds
   * race safely (the loser discards its tree iff the winner's done marker
   * actually landed).
@@ -139,11 +140,14 @@ private[graft] object MaterializedCache {
     if (!Files.exists(idx.resolve(doneMarker))) {
       Files.createDirectories(root)
       val ls = Files.list(root)
-      // Prune (a) superseded siblings of this stem and (b) `.build_`
+      // Prune (a) superseded siblings of this stem, (b) `.build_`
       // residue older than an hour — a crashed builder's temp tree is
       // never moved into place and would otherwise leak in tmpdir
       // forever; an hour is far beyond any real build, so a LIVE
-      // concurrent build's tree is never touched.
+      // concurrent build's tree is never touched — and (c) any other
+      // name starting with `_` or `.`: [[artifact]] drops those leading
+      // characters from every key, so such a tree was keyed by older
+      // code and no stem's sibling prune would ever match it.
       //
       // "Superseded" is ORDERED, not just "different key" (r14 ADVICE):
       // a sibling is pruned only when its embedded algorithm version is
@@ -172,7 +176,9 @@ private[graft] object MaterializedCache {
             n.startsWith(".build_") &&
               (try Files.getLastModifiedTime(p).toMillis < staleBuildCutoff
                catch { case _: java.io.IOException => false })
-          supersededSibling || crashedBuild
+          def unreachableKey =
+            (n.startsWith("_") || n.startsWith(".")) && !n.startsWith(".build_")
+          supersededSibling || crashedBuild || unreachableKey
         }
         .foreach(p => try TmpDirs.delete(p) catch { case _: java.io.IOException => () })
       finally ls.close()

@@ -2,72 +2,57 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label).
   *
-  * Two paths:
-  *   - [[bruteForceTopK]]: exact — broadcast the query vector(s), one
-  *     codegen'd scan over the corpus, TakeOrderedAndProject top-k.
-  *     This is the correctness baseline and the oracle-checked Q15.
+  * Two candidate sources, both cut by the [[Retrieval]] core (one query
+  * lookup, one single-query cut, one batch cut, one tie and zero-norm
+  * rule):
+  *   - [[bruteForceTopK]] / [[batchTopK]]: exact — every corpus row is a
+  *     candidate, scored in one codegen'd scan. This is the correctness
+  *     baseline and the oracle-checked Q15.
   *   - [[ivfTopK]]: IVF-style approximate path for scale — corpus is
   *     assigned to its nearest centroid with a single shuffle-free
-  *     codegen'd scan (centroids ride along as a broadcast literal
-  *     array), queries probe only the closest `nprobe` buckets. At
-  *     100 TB the corpus would be written out partitioned by centroid
-  *     id, making the probe filter a partition-pruned read; recall is
-  *     tunable via nprobe.
+  *     codegen'd scan (centroids ride along as a literal array), queries
+  *     probe only the closest `nprobe` buckets. The materialized index
+  *     ([[probeIvfIndex]], [[batchProbeIvfIndex]]) is written partitioned
+  *     by centroid id, so the probe filter is a partition-pruned read;
+  *     recall is tunable via nprobe.
   */
 object Similarity {
 
-  /** Q15 — exact top-k cosine neighbors of `queryId`. The 1-row query
-    * side is broadcast; each corpus row pays ONE fused codegen'd loop
-    * (dot + both norms — the native [[CosineSimilarity]] expression, no
-    * intermediate arrays, no interpreted lambdas); the corpus scan stays
-    * partition-parallel and the final orderBy+limit plans as
+  /** Q15 — exact top-k cosine neighbors of `queryId`. The query vector
+    * is looked up once and rides as a literal; each corpus row pays ONE
+    * fused codegen'd loop (dot + both norms — the native
+    * [[graft.functions.CosineSimilarity]] expression); the corpus scan
+    * stays partition-parallel and [[Retrieval.topK]] plans as
     * TakeOrderedAndProject (per-partition top-k, driver merges k×P rows —
     * no global sort at any scale). */
   def bruteForceTopK(s: SparkSession, dir: String, queryId: Long = 0L,
       k: Int = 5): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("qvec"))
-    e.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cos", cosine(col("embedding"), col("qvec")))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos"), 4).as("cos_sim"))
+    Retrieval.topK(e, queryId, Retrieval.queryVector(e, queryId), k)
+      .select(col("vec_id"), Retrieval.cosSim)
   }
 
   /** Batch exact kNN: top-`k` cosine neighbors for EVERY query in
     * `queryIds`, from ONE corpus scan. The M query rows are broadcast
     * and nested-loop-joined (M is small by construction — a query
     * batch, not a table), each corpus row pays M fused codegen'd
-    * cosine loops, and the per-query top-k is the custom bounded
-    * [[graft.functions.TopKByScore]] aggregate: map-side partials emit
-    * ≤ k entries per (partition, query), so the only shuffle carries
-    * O(P·M·k) rows — never the scored corpus. The composed
-    * alternative, `Window.partitionBy(query_id)`, would buffer and
-    * sort the ENTIRE corpus inside each of M window partitions; that
-    * is the single-partition-window trap this aggregate exists to
-    * avoid. */
+    * cosine loops, and the per-query top-k is [[Retrieval.batchTopK]]:
+    * map-side partials emit ≤ k entries per (partition, query), so the
+    * only shuffle carries O(P·M·k) rows — never the scored corpus. The
+    * composed alternative, `Window.partitionBy(query_id)`, would buffer
+    * and sort the ENTIRE corpus inside each of M window partitions. */
   def batchTopK(s: SparkSession, dir: String, queryIds: Seq[Long],
       k: Int = 3): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val q = e.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("embedding"), col("qvec")).as("cos"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScore(col("cos"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("query_id"), (col("i") + 1).cast("long").as("rnk"),
-        col("t.id").as("vec_id"), round(col("t.score"), 4).as("cos_sim"))
+    Retrieval.batchTopK(e.crossJoin(broadcast(Retrieval.queryFrame(e, queryIds))),
+        cosine(col("embedding"), col("qvec")), k)
+      .select(col("query_id"), col("rnk"), col("vec_id"), Retrieval.cosSim)
       .orderBy("query_id", "rnk")
   }
 
@@ -96,7 +81,12 @@ object Similarity {
     * sort at any corpus size); the rank windows run AFTER the legK-row
     * cut (by-construction bounded — the PlanInvariantSpec allowlist
     * class), and the fusion is a full-outer equi-join of two ≤legK-row
-    * frames. One scan of each table, total. */
+    * frames. One scan of each table, total.
+    *
+    * The semantic leg takes its query from [[Retrieval.queryVector]] but
+    * keeps its own cut: it ranks on the 4-dp score for the cross-engine
+    * rank agreement above, where [[Retrieval.topK]] ranks on the raw
+    * double. */
   def hybridRetrieval(s: SparkSession, dir: String,
       queryTerms: Seq[String], queryId: Long = 0L,
       legK: Int = 20, rrfC: Int = 60, topK: Int = 10): DataFrame =
@@ -112,12 +102,10 @@ object Similarity {
       .withColumn("lex_rank", row_number().over(
         Window.orderBy(col("bm25").desc, col("doc_id"))).cast("long"))
       .select("doc_id", "lex_rank")
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("qvec"))
+    val qvec = Retrieval.queryVector(e, queryId)
     val sem = e.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
       .select(col("vec_id").as("doc_id"),
-        round(cosine(col("embedding"), col("qvec")), 4).as("cos4"))
+        round(cosine(col("embedding"), typedLit(qvec.toSeq)), 4).as("cos4"))
       .orderBy(col("cos4").desc, col("doc_id"))
       .limit(legK)
       .withColumn("sem_rank", row_number().over(
@@ -157,27 +145,11 @@ object Similarity {
     * time (0 for the first pick). */
   def mmrTopK(e: DataFrame, queryId: Long, lambda: Double,
       poolK: Int = 20, k: Int = 5): Seq[(Int, Long, Double, Double)] = {
-    val qRow = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").cast("array<double>")).head(1)
-    require(qRow.nonEmpty,
-      s"mmrTopK: query vector $queryId absent — empty or truncated " +
-        "embeddings table")
-    val q = qRow.head.getSeq[Double](0).toArray
-    val pool = e.filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("rel", cosine(col("v"), lit(q)))
-      .orderBy(col("rel").desc, col("vec_id"))
-      .limit(poolK)
+    val pool = Retrieval.topK(
+        e.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
+        queryId, Retrieval.queryVector(e, queryId), poolK, vec = "v")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
     val selected = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Long, Double, Double)]
     val chosen = scala.collection.mutable.ArrayBuffer
@@ -188,7 +160,7 @@ object Similarity {
       val scored = remaining.map { case (id, v, rel) =>
         val red =
           if (chosen.isEmpty) 0.0
-          else chosen.map(c => cos(v, c._2)).max
+          else chosen.map(c => driverCosine(v, c._2)).max
         (lambda * rel - (1 - lambda) * red, id, rel, red)
       }
       val best = scored.minBy { case (s, id, _, _) => (-s, id) }
@@ -201,6 +173,17 @@ object Similarity {
     selected.toSeq
   }
 
+  /** Cosine of two collected vectors, for MMR's redundancy term. Its
+    * inputs are pool members, which [[Retrieval.topK]] keeps non-zero;
+    * a zero norm would read 0.0 (no redundancy) rather than NaN. */
+  private def driverCosine(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) {
+      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
+    }
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+  }
+
   /** Registered query (`sim_mmr`): the MMR exactness gate plus
     * in-engine diversity invariants. At λ = 1 the redundancy term
     * vanishes and MMR MUST degenerate to plain relevance order — those
@@ -211,34 +194,19 @@ object Similarity {
     * and the diversified selection's internal redundancy (max pairwise
     * cosine) is ≤ the λ=1 selection's — diversification must not
     * INCREASE redundancy on the same pool. */
-  /** Fetch exactly the vectors named by `ids` (the audit-collect helper
-    * for [[qMmr]]): the scan filters `vec_id IN ids` BEFORE the
-    * collect, so the driver materializes ≤ ids.size rows no matter how
-    * large the embeddings table is — the same bounded-collect
-    * discipline [[mmrTopK]]'s poolK cut follows. Spec-pinned
-    * (SimilaritySpec) on a corpus far larger than the id set. */
-  private[graft] def collectVecsById(e: DataFrame,
-      ids: Seq[Long]): Map[Long, Array[Double]] =
-    e.filter(col("vec_id").isInCollection(ids.distinct))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-
   def qMmr(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val plain = mmrTopK(e, queryId = 0L, lambda = 1.0)
     val diverse = mmrTopK(e, queryId = 0L, lambda = 0.5)
     // audit collect bounded at ≤ 2·k rows: only the picked vectors are
     // needed for the pairwise-redundancy invariant below
-    val vecs = collectVecsById(e, plain.map(_._2) ++ diverse.map(_._2))
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
+    val vecs = Retrieval.queryVectors(e,
+      (plain.map(_._2) ++ diverse.map(_._2)).distinct).toMap
     def maxPairwise(ids: Seq[Long]): Double =
       if (ids.size < 2) 0.0
       else (for {
         i <- ids.indices; j <- (i + 1) until ids.size
-      } yield cos(vecs(ids(i)), vecs(ids(j)))).max
+      } yield driverCosine(vecs(ids(i)), vecs(ids(j)))).max
     val redPlain = maxPairwise(plain.map(_._2))
     val redDiverse = maxPairwise(diverse.map(_._2))
     val poolIds = mmrTopK(e, 0L, 1.0, poolK = 20, k = 20).map(_._2).toSet
@@ -312,12 +280,8 @@ object Similarity {
       numCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val centroids = fitCentroids(e, numCentroids)
-    val qvec = queryVector(e, queryId)
-    topKByCosine(
-      assignCentroids(e, centroids)
-        .filter(probeFilter(centroids, qvec, nprobe))
-        .filter(col("vec_id") =!= queryId),
-      qvec, k)
+    probeTopK(assignCentroids(e, centroids), centroids,
+      Retrieval.queryVector(e, queryId), queryId, k, nprobe)
   }
 
   /** IVF step 1 — centroids from a bounded deterministic pseudo-random
@@ -403,15 +367,6 @@ object Similarity {
     e.withColumn("cid",
       graft.functions.VectorFunctions.nearestCentroid(col("embedding"), centroids))
 
-  /** The query's embedding as a driver-side double array. */
-  def queryVector(e: DataFrame, queryId: Long): Array[Double] = {
-    val rows = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").cast("array<double>")).head(1)
-    require(rows.nonEmpty,
-      s"IVF search: query vec_id=$queryId not found in the corpus")
-    rows(0).getSeq[Double](0).toArray
-  }
-
   /** The query's `nprobe` nearest centroid ids, driver-side: highest
     * dot product first, ties to the lower id. */
   private def nearestCids(centroids: Array[Array[Double]],
@@ -422,20 +377,16 @@ object Similarity {
       .take(math.min(nprobe, centroids.length))
       .map(_._2)
 
-  /** IVF step 3a — driver-side probe predicate: `cid` in the query's
-    * nprobe nearest centroids. */
-  private def probeFilter(centroids: Array[Array[Double]],
-      qvec: Array[Double], nprobe: Int): Column =
-    col("cid").isin(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-      nearestCids(centroids, qvec, nprobe).map(Int.box)): _*)
-
-  private def topKByCosine(candidates: DataFrame, qvec: Array[Double],
-      k: Int): DataFrame =
-    candidates
-      .withColumn("cos", cosine(col("embedding"), typedLit(qvec.toSeq)))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos"), 4).as("cos_sim"))
+  /** IVF step 3 — exact top-k over the `cid`-assigned candidates in the
+    * query's nprobe nearest centroid buckets; the bucket list is computed
+    * on the driver, so the predicate is a literal `cid IN (...)`. */
+  private def probeTopK(assigned: DataFrame, centroids: Array[Array[Double]],
+      qvec: Array[Double], queryId: Long, k: Int, nprobe: Int): DataFrame =
+    Retrieval.topK(
+        assigned.filter(col("cid").isin(scala.collection.immutable.ArraySeq
+          .unsafeWrapArray(nearestCids(centroids, qvec, nprobe).map(Int.box)): _*)),
+        queryId, qvec, k)
+      .select(col("vec_id"), Retrieval.cosSim)
 
   // --- materialized index: the 100 TB probe path ------------------------
 
@@ -481,26 +432,20 @@ object Similarity {
       .split('\n').map(_.split(',').map(_.toDouble))
 
   /** Exact top-k over a materialized index via a partition-pruned read
-    * of the query's nprobe nearest centroid buckets. */
+    * of the query's nprobe nearest centroid buckets; `qvec` is
+    * `excludeVecId`'s vector from [[Retrieval.queryVector]]. */
   def probeIvfIndex(s: SparkSession, path: String,
       centroids: Array[Array[Double]], qvec: Array[Double],
       excludeVecId: Long, k: Int = 5, nprobe: Int = 4): DataFrame =
-    topKByCosine(
-      s.read.parquet(path)
-        .filter(probeFilter(centroids, qvec, nprobe))
-        .filter(col("vec_id") =!= excludeVecId),
-      qvec, k)
+    probeTopK(s.read.parquet(path), centroids, qvec, excludeVecId, k, nprobe)
 
   /** Batch probe of a materialized index: top-k for EVERY query in
-    * `queries` = (query_id, qvec) from ONE partition-pruned read — the
-    * ANN-serving shape at 100 TB. The union of all queries' nprobe
-    * bucket ids drives PartitionFilters (reads ≤ M·nprobe of
-    * numCentroids buckets once, however much the probe sets overlap); a
-    * broadcast (query_id, cid) pair table then restricts each candidate
-    * row to exactly the queries probing ITS bucket, so no query scores a
-    * bucket outside its own probe set; per-query top-k is the bounded
-    * [[graft.functions.TopKByScore]] aggregate (map-side partials ≤ k
-    * per query — same shape as [[batchTopK]], never a Window sort). */
+    * `queries` = (query_id, qvec) ([[Retrieval.queryVectors]]) from ONE
+    * partition-pruned read — the ANN-serving shape at 100 TB. The union
+    * of all queries' nprobe bucket ids drives PartitionFilters (reads
+    * ≤ M·nprobe of numCentroids buckets once, however much the probe sets
+    * overlap); [[batchProbeCore]] then scores each candidate only for the
+    * queries probing its bucket. */
   def batchProbeIvfIndex(s: SparkSession, path: String,
       centroids: Array[Array[Double]], queries: Seq[(Long, Array[Double])],
       k: Int = 5, nprobe: Int = 4): DataFrame = {
@@ -514,7 +459,7 @@ object Similarity {
   }
 
   /** Driver-side probe plan for a query batch: each query's nprobe
-    * nearest centroid ids ([[nearestCids]], as in [[probeFilter]]). */
+    * nearest centroid ids ([[nearestCids]], as in [[probeTopK]]). */
   private def probePairsFor(centroids: Array[Array[Double]],
       queries: Seq[(Long, Array[Double])], nprobe: Int): Seq[(Long, Int)] =
     queries.flatMap { case (qid, qv) =>
@@ -523,9 +468,8 @@ object Similarity {
 
   /** Shared scoring tail for batch probes over cid-assigned candidates:
     * the broadcast (query_id, cid) pair table restricts each candidate
-    * row to exactly the queries probing ITS bucket, scoring is the fused
-    * cosine kernel, and the per-query top-k is the bounded
-    * [[graft.functions.TopKByScore]] aggregate — never a Window sort. */
+    * row to exactly the queries probing ITS bucket, and
+    * [[Retrieval.batchTopK]] cuts the fused-cosine scores per query. */
   private def batchProbeCore(candidates: DataFrame,
       probePairs: Seq[(Long, Int)], queries: Seq[(Long, Array[Double])],
       k: Int): DataFrame = {
@@ -533,17 +477,10 @@ object Similarity {
     import s.implicits._
     val qframe = queries.toDF("query_id", "qvec")
     val pframe = probePairs.toDF("query_id", "cid")
-    candidates
-      .join(broadcast(pframe), "cid")
-      .join(broadcast(qframe), "query_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("embedding"), col("qvec")).as("cos"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScore(col("cos"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("query_id"), (col("i") + 1).cast("long").as("rnk"),
-        col("t.id").as("vec_id"), round(col("t.score"), 4).as("cos_sim"))
+    Retrieval.batchTopK(
+        candidates.join(broadcast(pframe), "cid").join(broadcast(qframe), "query_id"),
+        cosine(col("embedding"), col("qvec")), k)
+      .select(col("query_id"), col("rnk"), col("vec_id"), Retrieval.cosSim)
       .orderBy("query_id", "rnk")
   }
 
@@ -559,13 +496,7 @@ object Similarity {
     val e = Tables.embeddings(s, dir)
     val centroids = fitCentroids(e, numCentroids)
     val qids = 0L until nQueries.toLong
-    val queries = e.filter(col("vec_id").isInCollection(qids))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).toSeq
-    require(queries.length == nQueries,
-      s"recallAtK: expected query vec_ids ${qids.mkString(",")} in the corpus")
+    val queries = Retrieval.queryVectors(e, qids)
     val approx = batchProbeCore(assignCentroids(e, centroids),
       probePairsFor(centroids, queries, nprobe), queries, k)
     val hits = approx.select("query_id", "vec_id")
@@ -619,7 +550,7 @@ object Similarity {
       writeIvfIndex(e, fitCentroids(e, numCentroids), tmp.toString)
     }
     val centroids = readIvfCentroids(idx.toString)
-    val qvec = queryVector(Tables.embeddings(s, dir), queryId)
+    val qvec = Retrieval.queryVector(Tables.embeddings(s, dir), queryId)
     probeIvfIndex(s, idx.toString, centroids, qvec, queryId, k, nprobe)
   }
 }

@@ -130,6 +130,30 @@ class MaterializedCacheSpec extends AnyFunSuite {
       "a fresh (possibly live) build tree must survive")
   }
 
+  test("a build reclaims entries keyed with a leading '_' or '.' under its root") {
+    // artifact() never emits such names, so older code's trees (e.g.
+    // `_root_testdata_…`) match no stem's sibling prune
+    val root = freshRoot()
+    def mk(name: String): java.nio.file.Path = {
+      val p = root.resolve(name)
+      java.nio.file.Files.createDirectories(p)
+      java.nio.file.Files.writeString(p.resolve("_SUCCESS"), "")
+      p
+    }
+    val underscored = mk("_root_testdata_sf0.001_int8_v1_9_9")
+    val dotted = mk(".root_testdata_sf0.001_int8_v1_9_9")
+    val otherStem = mk("stemH_v1_1_1")
+    val live = java.nio.file.Files.createTempDirectory(root, ".build_")
+    MaterializedCache.getOrBuild(root, "stemG", "stemG_v1_1_1",
+        "done.marker") { tmp =>
+      java.nio.file.Files.writeString(tmp.resolve("done.marker"), "ok")
+    }
+    assert(!java.nio.file.Files.exists(underscored), "'_' entry must be reclaimed")
+    assert(!java.nio.file.Files.exists(dotted), "'.' entry must be reclaimed")
+    assert(java.nio.file.Files.exists(otherStem), "other stems must be left alone")
+    assert(java.nio.file.Files.exists(live), "a live build tree must survive")
+  }
+
   test("fingerprint sums bytes and maxes mtime over a tree") {
     val dir = TmpDirs.scratch("mcache_fp")
     java.nio.file.Files.writeString(dir.resolve("a"), "12345")

@@ -13,10 +13,10 @@ class PlanInvariantSpec extends AnyFunSuite with SparkFixture {
   private val skip = Set("stream_tumbling", "stream_topk", "stream_sliding")
 
   /** BroadcastNestedLoopJoin is legitimate exactly where one side is
-    * guaranteed tiny: the literal band table (a theta join by design), the
-    * broadcast 1-row query vector, and the broadcast 1-row corpus-total
-    * scalars of the corpus-stats queries. */
-  private val bnljAllowed = Set("q18b_theta_band", "q15_cosine_topk",
+    * guaranteed tiny: the literal band table (a theta join by design), a
+    * broadcast query batch, and the broadcast 1-row corpus-total scalars
+    * of the corpus-stats queries. */
+  private val bnljAllowed = Set("q18b_theta_band",
     "text_top_terms", "sim_batch_topk", "corpus_drift", "quantile_filter",
     "text_bm25",
     // broadcast 1-row corpus-count scalar crossed onto the anchors
@@ -109,6 +109,7 @@ class PlanInvariantSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.execution.window.WindowExec
     val oracleNames = SparkEntry.oracleSql.keySet
     val globalWindowOffenders = scala.collection.mutable.Set.empty[String]
+    val bnljPlanners = scala.collection.mutable.Set.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => skip(name) }
       .foreach { case (name, fn) =>
@@ -123,9 +124,11 @@ class PlanInvariantSpec extends AnyFunSuite with SparkFixture {
         val planStr = plan.toString
         assert(!planStr.contains("CartesianProduct"),
           s"$name plans a cartesian product:\n$planStr")
-        if (!bnljAllowed(name))
-          assert(!planStr.contains("BroadcastNestedLoopJoin"),
+        if (planStr.contains("BroadcastNestedLoopJoin")) {
+          assert(bnljAllowed(name),
             s"$name plans an unintended nested-loop join:\n$planStr")
+          bnljPlanners += name
+        }
         if (plan.collect {
             case w: WindowExec if w.partitionSpec.isEmpty => w }.nonEmpty)
           globalWindowOffenders += name
@@ -136,6 +139,9 @@ class PlanInvariantSpec extends AnyFunSuite with SparkFixture {
       s"global Window over a possibly-unbounded relation in: $unexpected")
     assert(stale.isEmpty,
       s"allowlist rot — these no longer plan a global Window: $stale")
+    val staleBnlj = bnljAllowed -- bnljPlanners
+    assert(staleBnlj.isEmpty,
+      s"allowlist rot — these no longer plan a nested-loop join: $staleBnlj")
   }
 
   // The eager streaming wrappers are excluded from the plan sweep (their

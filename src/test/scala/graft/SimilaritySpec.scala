@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.VectorFunctions
-import graft.operators.Similarity
+import graft.operators.{Embeddings, Retrieval, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -140,6 +140,40 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(e2.getMessage.contains(s"vec_id=$absent"), e2.getMessage)
   }
 
+  test("zero-norm rule: single and batch cuts agree and drop a zero-norm row; a zero-norm query fails naming it") {
+    // no fixture has a zero-norm vector, so zero one in a scratch copy
+    val dir = TmpDirs.scratch("sim_zero_norm")
+    val zeroed = 5L
+    Tables.embeddings(spark, sf0001)
+      .withColumn("embedding", when(col("vec_id") === zeroed,
+        transform(col("embedding"), _ => lit(0f))).otherwise(col("embedding")))
+      .write.parquet(dir.resolve("embeddings.parquet").toString)
+    val d = dir.toString
+    val qids = Seq(0L, 1L, 2L)
+    val batch = Similarity.batchTopK(spark, d, qids, k = 5).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    for (qid <- qids) {
+      val single = Similarity.bruteForceTopK(spark, d, qid, k = 5).collect()
+        .zipWithIndex
+        .map { case (r, i) => (qid, (i + 1).toLong, r.getLong(0), r.getDouble(1)) }
+      assert(single.length === 5)
+      assert(batch.filter(_._1 == qid).toSeq === single.toSeq,
+        s"batch != single for query $qid")
+    }
+    assert(!batch.exists(_._3 == zeroed), "a zero-norm candidate must be dropped")
+    assert(!Embeddings.quantizedTopK(Tables.embeddings(spark, d), 0L, 5)
+      .collect().exists(_.getLong(0) == zeroed))
+    val single = intercept[IllegalArgumentException](
+      Similarity.bruteForceTopK(spark, d, zeroed))
+    assert(single.getMessage.contains(s"vec_id=$zeroed has zero norm"),
+      single.getMessage)
+    val ex = intercept[Throwable](
+      Similarity.batchTopK(spark, d, Seq(0L, zeroed)).collect())
+    val msgs = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    assert(msgs.contains(s"vec_id=$zeroed has zero norm"), msgs)
+  }
+
   test("sim_ivf_probe (registered) builds the index once and probes it") {
     val probed = Similarity.qIvfProbe(spark, sf0001, 0L, 5,
       numCentroids = 8, nprobe = 4)
@@ -162,7 +196,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     val idx = TmpDirs.scratch("graft_ivf")
       .resolve("idx").toString
     Similarity.writeIvfIndex(e, centroids, idx)
-    val qvec = Similarity.queryVector(e, 0L)
+    val qvec = Retrieval.queryVector(e, 0L)
     val probed = Similarity.probeIvfIndex(spark, idx, centroids, qvec,
       excludeVecId = 0L, k = 5, nprobe = 4)
     // the probe must be PARTITION pruning (directory-level), not a scan
@@ -181,7 +215,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       .resolve("idx").toString
     Similarity.writeIvfIndex(e, centroids, idx)
     val qids = Seq(0L, 1L, 2L)
-    val queries = qids.map(q => q -> Similarity.queryVector(e, q))
+    val queries = qids.map(q => q -> Retrieval.queryVector(e, q))
     val batch = Similarity.batchProbeIvfIndex(spark, idx, centroids, queries,
       k = 5, nprobe = 4)
     val plan = batch.queryExecution.executedPlan.toString
@@ -216,7 +250,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     // the appended index holds the whole corpus, assigned identically
     assert(spark.read.parquet(incr).count() === e.count())
     for (qid <- Seq(0L, 1L, 2L)) {
-      val qvec = Similarity.queryVector(e, qid)
+      val qvec = Retrieval.queryVector(e, qid)
       val a = Similarity.probeIvfIndex(spark, incr, centroids, qvec,
         excludeVecId = qid, k = 5, nprobe = 4).collect().map(_.toSeq).toSeq
       val b = Similarity.probeIvfIndex(spark, full, centroids, qvec,
@@ -361,7 +395,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       (i, Array((1.0 + i % 7).toFloat, (i % 11).toFloat, 1f))
     }.toDF("vec_id", "embedding")
     val ids = Seq(3L, 9L, 42L, 9L, 77L) // dup on purpose
-    val vecs = Similarity.collectVecsById(emb, ids)
+    val vecs = Retrieval.queryVectors(emb, ids).toMap
     assert(vecs.keySet === ids.distinct.toSet,
       "collect must return exactly the requested ids")
     assert(vecs.size <= ids.size && vecs.size < n / 10,
