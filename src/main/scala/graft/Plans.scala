@@ -13,25 +13,20 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Usage: runMain graft.Plans [sfDir] [outDir] [name,name,...]
   *   - with a name list, dumps those queries;
-  *   - without one, dumps every registered query except the streaming
-  *     wrappers, which execute eagerly and return a memory-table scan
-  *     (their interesting plan is the streaming one, pinned in
-  *     StreamingSpec).
+  *   - without one, dumps every registered query.
   *
   * Building a frame runs the eager harness work of the storage/streaming
   * queries (cow_*, stream_*: table writes, replays), so their plan files
-  * show only the final read. `SPARK_GRAFT_CPUS` sets the session width
-  * (default 4). */
+  * show only the final read — a memory-table or table-version scan; the
+  * streaming plans themselves are pinned in StreamingSpec.
+  * `SPARK_GRAFT_CPUS` sets the session width (default 4). */
 object Plans {
-  private val skip = Set("stream_tumbling", "stream_sessions",
-    "stream_stream_join", "stream_enrich", "stream_anomaly")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = Paths.get(args.lift(1).getOrElse("target/plans"))
     val names = args.lift(2)
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(SparkEntry.queries.keys.toSeq.sorted.filterNot(skip))
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val spark = Bench.makeSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     Files.createDirectories(out)
     names.foreach { name =>

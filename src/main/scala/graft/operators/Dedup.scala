@@ -1146,8 +1146,9 @@ object Dedup {
   /** Driver-side union-find with component-min labels — output
     * IDENTICAL to the distributed iteration (every node that appears in
     * `p`, labeled by its component's minimum id; the iteration's
-    * min-label fixpoint IS the component minimum wherever it converges,
-    * and the local path is exact even past maxIter). */
+    * min-label fixpoint IS the component minimum wherever it converges
+    * — it throws where it does not — and the local path has no round
+    * bound). */
   private def localComponents(rows: Array[org.apache.spark.sql.Row])
       : Seq[(Long, Long)] = {
     val parentOf = new java.util.HashMap[Long, Long]()
@@ -1219,7 +1220,7 @@ object Dedup {
     // action). The result is pinned — reliable checkpoint when the
     // context has a checkpoint dir — and re-rooted in the caller's
     // session, so a caller's chained work plans at its own width.
-    val result = Lineage.withWidth(parent, nPairs / 100000L + 1L) { c =>
+    val result = try Lineage.withWidth(parent, nPairs / 100000L + 1L) { c =>
       val pc = c.adopt(p)
       val edges = c.persist(pc.unionAll(pc.select(col("b").as("a"), col("a").as("b"))))
       var labels = c.persist(edges.groupBy(col("a").as("node"))
@@ -1259,12 +1260,13 @@ object Dedup {
         labels = next
         iter += 1
       }
+      // unconverged labels are not component minima: fail, never return them
       if (!converged)
-        log.warn(s"connectedComponents: not converged after $maxIter rounds — " +
-          "labels may be non-canonical for components with huge diameter")
+        throw new IllegalStateException("connectedComponents: not " +
+          s"converged after $maxIter rounds — labels would be " +
+          "non-canonical for components of larger diameter")
       labels.select(col("node").as("doc_id"), col("label").as("canonical_doc_id"))
-    }
-    p.unpersist()
+    } finally p.unpersist()
     result.orderBy("doc_id")
   }
 

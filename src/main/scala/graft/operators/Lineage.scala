@@ -87,15 +87,15 @@ object Lineage {
     * [[width]]`(parent, derived)` — for work on a graph or record set
     * orders of magnitude smaller than the corpus the parent's width is
     * sized for, where per-partition fixed costs dominate every round.
-    * The body's result is pinned eagerly, the child's caches released,
-    * and the result re-rooted in `parent`, so anything a caller chains
-    * onto it plans at the parent's width again. */
+    * The body's result is pinned eagerly, the child's caches released
+    * (also when the body throws), and the result re-rooted in `parent`,
+    * so anything a caller chains onto it plans at the parent's width
+    * again. */
   def withWidth(parent: SparkSession, derived: Long)(
       body: Child => DataFrame): DataFrame = {
     val n = width(parent, derived)
     val c = new Child(child(parent, "spark.sql.shuffle.partitions" -> n.toString), n)
-    val result = pin(body(c))
-    c.cached.foreach(_.unpersist())
+    val result = try pin(body(c)) finally c.cached.foreach(_.unpersist())
     reroot(result, parent)
   }
 

@@ -758,4 +758,15 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     assert(local(201L) === 200L)
     assert(local(300L) === 300L)
   }
+
+  test("connectedComponents: the distributed path throws at maxIter " +
+      "instead of returning non-canonical labels") {
+    // a 4-node path needs more than one pointer-jumping round: after one,
+    // node 4 still carries label 2, not its component minimum 1
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(path, maxIter = 1, localMaxPairs = 0)
+    }
+    assert(e.getMessage.contains("not converged after 1 rounds"), e.getMessage)
+  }
 }

@@ -15,12 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * filter that matched nothing, a fresh table) — this pins the whole
   * registry's behavior at once.
   *
-  * Streaming replay queries are excluded from the sweep: their sentinel
-  * harness derives the watermark horizon from max(ts), which is a
-  * documented non-empty requirement of the REPLAY HARNESS (not of the
-  * streaming operators — StreamingSpec covers those directly on
-  * in-memory streams, including empty ones). A separate test pins that
-  * every sentinel replay fails exactly that requirement.
+  * The sentinel replays are excluded from the sweep: their harness
+  * derives the watermark horizon from max(ts), which is a documented
+  * non-empty requirement of the REPLAY HARNESS (not of the streaming
+  * operators — StreamingSpec covers those directly on in-memory streams,
+  * including empty ones). A separate test pins that every sentinel
+  * replay fails exactly that requirement. The other streaming wrappers
+  * (interval join, enrich, upsert) need no horizon and join the sweep.
   */
 class EmptyInputSpec extends AnyFunSuite with SparkFixture {
 
@@ -46,15 +47,12 @@ class EmptyInputSpec extends AnyFunSuite with SparkFixture {
     dir
   }
 
-  /** Replay-harness queries (documented non-empty requirement above). */
-  private val streamingReplay = Set("stream_tumbling", "stream_topk",
-    "stream_sliding", "stream_sessions_append", "stream_sessions_fmgws",
-    "stream_stream_join", "stream_enrich", "stream_anomaly", "stream_dedup")
+  /** Sentinel-replay queries (documented non-empty requirement above). */
+  private val sentinelReplays = Seq("stream_tumbling", "stream_sliding",
+    "stream_topk", "stream_dedup", "stream_anomaly",
+    "stream_sessions_append", "stream_sessions_fmgws")
 
   test("every sentinel replay fails the harness's is-empty require on an empty events table") {
-    val sentinelReplays = Seq("stream_tumbling", "stream_sliding",
-      "stream_topk", "stream_dedup", "stream_anomaly",
-      "stream_sessions_append", "stream_sessions_fmgws")
     sentinelReplays.foreach { name =>
       val e = intercept[IllegalArgumentException] {
         SparkEntry.queries(name)(spark, emptyDir).collect()
@@ -68,7 +66,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkFixture {
     val failures = scala.collection.mutable.Buffer.empty[String]
     val requires = scala.collection.mutable.Buffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => streamingReplay(n) }
+      .filterNot { case (n, _) => sentinelReplays.contains(n) }
       .foreach { case (name, fn) =>
         try { fn(spark, emptyDir).collect(): Unit }
         catch {
@@ -118,7 +116,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkFixture {
   test("documents-family queries tolerate null/empty/whitespace text rows") {
     val failures = scala.collection.mutable.Buffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => streamingReplay(n) }
+      .filterNot { case (n, _) => sentinelReplays.contains(n) }
       .filter { case (n, _) =>
         n.startsWith("text_") || n.startsWith("dedup_") ||
           n.startsWith("corpus_") || n.startsWith("q1_") ||

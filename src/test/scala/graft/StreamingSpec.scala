@@ -21,6 +21,15 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(streamed === batch)
   }
 
+  test("a sentinel replay whose query emits no row returns an empty frame") {
+    // every window finalizes in the zero-input batch, and the filter
+    // drops it: the replay must still see its two micro-batches and end
+    val quiet = StreamingOps.replayEventsAppend(spark, sf0001, "quiet")(
+      StreamingOps.tumblingCounts(_).filter(col("n") < 0))
+    assert(quiet.collect().isEmpty)
+    assert(quiet.columns.toSeq === Seq("bucket", "event_type", "n", "sum_value"))
+  }
+
   test("streaming anomaly detector equals the batch z-score query; one stateful op") {
     val streamed = StreamingOps.qStreamAnomaly(spark, sf0001)
       .collect().map(_.toSeq).toSeq
