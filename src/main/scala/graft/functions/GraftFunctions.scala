@@ -66,8 +66,11 @@ object GraftFunctions {
         CountMinEstimate(sk, term, d, w)
     })
 
+  /** Idempotent: a name already bound to its own builder is skipped (a
+    * re-bind logs a WARN); a name bound to anything else is replaced. */
   def register(spark: SparkSession): Unit =
     builders.foreach { case (name, b) =>
-      GraftColumnBridge.registerFunction(spark, name, b)
+      if (!GraftColumnBridge.functionBuilder(spark, name).exists(_ eq b))
+        GraftColumnBridge.registerFunction(spark, name, b)
     }
 }

@@ -18,12 +18,10 @@ import org.apache.spark.sql.functions._
   *     self-join carries (band, signature, doc_id) — never the shingle
   *     arrays or embedding vectors — so the shuffle payload is a few
   *     bytes per replica instead of the whole document feature set
-  *     amplified once per band. For LSH paths the heavy columns are
-  *     joined back in exactly once per surviving candidate pair for
-  *     exact verification; the n-gram path usually needs no heavy join
-  *     at all — the shared-shingle join counts the intersection as a
-  *     by-product, which IS the exact Jaccard whenever the df-cap
-  *     dropped nothing (see [[ngramJaccardCore]]).
+  *     amplified once per band. The heavy columns are joined back in
+  *     exactly once per surviving candidate pair for exact verification
+  *     — for exact n-gram Jaccard, once per pair that survives the
+  *     prefix and length filters (see [[prefixJaccardCore]]).
   *   - The posting-list join has a document-frequency cap ON by default
   *     ([[DefaultDfCap]]): a shingle or LSH bucket appearing in more
   *     than dfCap docs is a skew key that would generate quadratic pair
@@ -151,26 +149,6 @@ object Dedup {
     if (row.isNullAt(0)) unit else (row.getLong(0) / unit + 1L) * unit
   }
 
-  /** Drop rows whose `keys` combination occurs in more than `cap` rows —
-    * the plain drop-semantics guard, used by [[shinglePosting]]'s public
-    * capped posting list. The hot key set stays a DataFrame (see
-    * [[materializeHot]]) and is anti-joined away on the key.
-    * Candidate-generation paths use [[splitHotKeysStar]] instead, which
-    * degrades hot buckets rather than dropping them. Nothing is left
-    * persisted in the shared session. */
-  private def dropHotKeys(df: DataFrame, keys: Seq[String], cap: Int,
-      what: String): DataFrame = {
-    val (hot, nHot) = materializeHot(
-      df.groupBy(keys.map(col): _*).count()
-        .filter(col("count") > cap).drop("count"))
-    if (nHot == 0) df
-    else {
-      log.warn(s"$what: dropping $nHot hot keys (df > $cap) from " +
-        "the posting list")
-      df.join(hot, keys, "left_anti")
-    }
-  }
-
   /** Split candidate-generation rows on hot keys (keys occurring in more
     * than `cap` rows). Cold rows are returned untouched for the normal
     * self-join. Hot buckets are NOT silently dropped: each is reduced to
@@ -186,15 +164,10 @@ object Dedup {
     * ordinary shuffled joins on the key, so the guard holds even when
     * the hot vocabulary itself is huge. Returns (coldRows, starPairs)
     * where starPairs has columns (doc_a, doc_b), doc_a < doc_b (the
-    * representative is the bucket minimum). */
-  /** Hot side of a [[splitHotKeysStar]]: the star candidate pairs plus
-    * the hot key set itself (callers that can cheapen verification need
-    * to know WHICH keys were degraded — see [[ngramJaccardCore]]). */
-  private[operators] case class HotSplit(star: DataFrame, hotKeys: DataFrame)
-
+    * representative is the bucket minimum), None when no key is hot. */
   private[operators] def splitHotKeysStar(df: DataFrame, keys: Seq[String],
       idCol: String, cap: Int, what: String)
-      : (DataFrame, Option[HotSplit]) = {
+      : (DataFrame, Option[DataFrame]) = {
     val (hot, nHot) = materializeHot(
       df.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("cnt"), min(col(idCol)).as("rep"))
@@ -209,7 +182,7 @@ object Dedup {
         .filter(col(idCol) =!= col("rep"))
         .select(col("rep").as("doc_a"), col(idCol).as("doc_b"))
         .distinct()
-      (cold, Some(HotSplit(star, hot.select(keys.map(col): _*))))
+      (cold, Some(star))
     }
   }
 
@@ -222,29 +195,18 @@ object Dedup {
   private def bucketPairs(banded: DataFrame, keys: Seq[String],
       idCol: String, dfCap: Option[Int], what: String,
       a: String = "doc_a", b: String = "doc_b"): DataFrame = {
-    val (capped, hotSplit) = dfCap match {
+    val (capped, star) = dfCap match {
       case None => (banded, None)
       case Some(cap) => splitHotKeysStar(banded, keys, idCol, cap, what)
     }
     val l = capped.select(col(idCol).as(a) +: keys.map(col): _*)
     val r = capped.select(col(idCol).as(b) +: keys.map(col): _*)
-    // corpus-sized both sides — never broadcast (see ngramJaccardCore)
+    // corpus-sized both sides — never broadcast (see prefixJaccardCore)
     val selfCands = l.join(r.hint("shuffle_hash"), keys)
       .filter(col(a) < col(b))
       .select(a, b)
-    hotSplit.fold(selfCands)(h => selfCands.unionAll(h.star.toDF(a, b)))
+    star.fold(selfCands)(st => selfCands.unionAll(st.toDF(a, b)))
       .distinct()
-  }
-
-  /** Exploded (doc_id, shingle) with an optional document-frequency cap:
-    * shingles occurring in more than `dfCap` docs are dropped before the
-    * pair join (see [[dropHotKeys]]). */
-  def shinglePosting(docs: DataFrame, n: Int = 3,
-      dfCap: Option[Int] = None): DataFrame = {
-    val posting = shingleDocs(docs, n)
-      .select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    dfCap.fold(posting)(cap =>
-      dropHotKeys(posting, Seq("shingle"), cap, "shinglePosting"))
   }
 
   /** Exact-Jaccard verification of candidate (doc_a, doc_b) pairs.
@@ -320,119 +282,15 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Unsorted core of [[ngramJaccardPairs]] — consumers that feed the
-    * pairs into a join/aggregate (e.g. connected components) must not pay
-    * for a global sort they immediately destroy.
-    *
-    * The shared-shingle join COUNTS each pair's common shingles as a
-    * by-product of candidate generation. When the df-cap fired on
-    * nothing (knowable on the driver — the hot-key COUNT is computed
-    * either way), that count IS the exact intersection size, so Jaccard comes
-    * straight from `|A∩B| / (|A|+|B|−|A∩B|)` with two narrow size joins
-    * — no shingle-array rejoin, no array_intersect.
-    *
-    * When hot shingles DID exist, a pair's count is a lower bound only
-    * if the pair could share a hot shingle — i.e. only if at least one
-    * endpoint CONTAINS a hot shingle. So the count-trick still settles
-    * every pair whose endpoints are both hot-free, and array
-    * verification is restricted to the hot-adjacent pairs plus the hot
-    * buckets' star candidates ([[splitHotKeysStar]]). That split is what
-    * keeps the low-threshold histogram affordable on a near-dup-heavy
-    * corpus: the 10× scale smoke measured verification-of-everything at
-    * 83× wall on neardup replicas, where hot docs are 2% of the corpus —
-    * the exact-by-count majority never needed the rejoin. The counted
-    * pair table is pinned before fanning out to its three consumers
-    * (safe/risky/verify) so the Σ df′² join runs once. */
-  private[operators] def ngramJaccardCore(docs: DataFrame,
-      threshold: Double = 0.8, n: Int = 3,
-      dfCap: Option[Int] = Some(DefaultDfCap)): DataFrame = {
-    // sh feeds the posting AND (twice) fromCounts' size joins — and the
-    // hot branch's verifyJaccard reads it four more times. Pinned under
-    // the same condition as the posting (cap on = multiple consumers).
-    val sh0 = hashedShingleDocs(docs, n)
-    val sh = if (dfCap.isDefined) Lineage.pin(sh0, eager = false) else sh0
-    val posting1 = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    // Same pin-once reasoning as minhashLshCore: with the cap on, the
-    // posting list feeds the hot-key aggregation job and then the main
-    // candidate join — checkpointing it saves a second shingle-UDF +
-    // explode pass over the corpus; with the cap off the self-join
-    // shares one exchange and the checkpoint would be pure overhead.
-    val posting0 =
-      if (dfCap.isDefined) Lineage.pin(posting1) else posting1
-    val (posting, hotSplit) = dfCap match {
-      case None => (posting0, None)
-      case Some(cap) =>
-        splitHotKeysStar(posting0, Seq("shingle"), "doc_id", cap,
-          "ngramJaccardCore")
-    }
-    val a = posting.select(col("doc_id").as("doc_a"), col("shingle"))
-    val b = posting.select(col("doc_id").as("doc_b"), col("shingle"))
-    // shuffle_hash: the posting is corpus-sized on BOTH sides — Spark's
-    // size estimate of the UDF-projected side can dip under the broadcast
-    // threshold, and broadcasting a fact-sized posting list is wrong at
-    // every scale (driver collect + single-threaded build locally, OOM on
-    // a cluster)
-    val counted0 = a.join(b.hint("shuffle_hash"), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_common"))
-    // exact Jaccard from the shared-shingle count + two narrow size joins
-    def fromCounts(counted: DataFrame): DataFrame = {
-      val sizes = sh.select(col("doc_id"), size(col("shingles")).as("n"))
-      counted
-        .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-        .withColumn("jaccard", col("n_common") /
-          (col("na") + col("nb") - col("n_common")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-    }
-    hotSplit match {
-      case None => fromCounts(counted0)
-      case Some(HotSplit(star, hotKeys)) =>
-        // Three consumers below — materialize the Σ df′² join output
-        // once, DISK_ONLY + eager count: on a near-dup-heavy corpus the
-        // pair table is the largest thing in the query (tens of millions
-        // of rows at the smoke's 10× scale), and holding it in the
-        // unified memory pool starves the very hash aggregations that
-        // produce and consume it (measured: AGGREGATE_OUT_OF_MEMORY at
-        // x10 neardup with a memory-resident pin). Disk blocks cost a
-        // sequential write + three streamed reads and zero heap. The
-        // ContextCleaner reclaims the blocks when the plan is GC'd (the
-        // lazy result can't unpersist eagerly).
-        val counted = counted0.persist(
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        counted.count()
-        // docs that CONTAIN a hot shingle: only pairs touching one can
-        // have undercounted intersections (the pinned posting0 makes
-        // this a cheap join over materialized blocks)
-        val hotDocs = Lineage.pin(posting0
-          .join(hotKeys, Seq("shingle"), "left_semi")
-          .select("doc_id").distinct())
-        val hotA = hotDocs.select(col("doc_id").as("doc_a"))
-        val hotB = hotDocs.select(col("doc_id").as("doc_b"))
-        val safe = counted
-          .join(hotA, Seq("doc_a"), "left_anti")
-          .join(hotB, Seq("doc_b"), "left_anti")
-        val risky = counted.select("doc_a", "doc_b")
-          .join(hotA, Seq("doc_a"), "left_semi")
-          .unionAll(counted.select("doc_a", "doc_b")
-            .join(hotB, Seq("doc_b"), "left_semi"))
-          .unionAll(star)
-          .distinct()
-        fromCounts(safe).unionAll(verifyJaccard(risky, sh, threshold))
-    }
-  }
-
   /** AllPairs-style prefix-filtered candidate generation + exact
     * verification — the scale path for threshold-based n-gram Jaccard
     * (Bayardo et al., "Scaling Up All Pairs Similarity Search", WWW'07 —
     * public literature, not reference code).
     *
-    * WHY: the plain shared-shingle self-join ([[ngramJaccardCore]])
-    * produces Σ_shingle df² candidate rows. Growing the corpus k× grows
-    * every natural-language shingle's document frequency ~k×, so every
-    * sub-cap shingle's pair contribution grows k²× — the 10× scale smoke
+    * WHY: the plain shared-shingle self-join produces Σ_shingle df²
+    * candidate rows. Growing the corpus k× grows every natural-language
+    * shingle's document frequency ~k×, so every sub-cap shingle's pair
+    * contribution grows k²× — the 10× scale smoke
     * measured 34× wall on DISTINCT-document replicas (linear output!)
     * purely from that term. The df cap bounds the per-key worst case but
     * not the aggregate.
@@ -477,7 +335,7 @@ object Dedup {
     // the prefix posting feeds the hot-key aggregation and both join
     // sides — pin it so the df-join + window chain runs once
     val prefix = if (dfCap.isDefined) Lineage.pin(prefix0) else prefix0
-    val (cold, hotSplit) = dfCap match {
+    val (cold, star) = dfCap match {
       case None => (prefix, None)
       case Some(cap) =>
         splitHotKeysStar(prefix, Seq("shingle"), "doc_id", cap,
@@ -487,17 +345,17 @@ object Dedup {
       col("n_sh").as("na"))
     val r = cold.select(col("doc_id").as("doc_b"), col("shingle"),
       col("n_sh").as("nb"))
-    // corpus-sized both sides — never broadcast (see ngramJaccardCore)
+    // shuffle_hash: corpus-sized on BOTH sides, and a broadcast posting
+    // list is a driver collect + single-threaded build (OOM on a cluster)
     val selfCands = l.join(r.hint("shuffle_hash"), Seq("shingle"))
       .filter(col("doc_a") < col("doc_b") &&
         least(col("na"), col("nb")).cast("double") >=
           greatest(col("na"), col("nb")) * threshold)
       .select("doc_a", "doc_b")
-    val cands = hotSplit.fold(selfCands)(h => selfCands.unionAll(h.star))
-      .distinct()
+    val cands = star.fold(selfCands)(selfCands.unionAll).distinct()
     // cold-only candidates already carry the length filter from the
     // self-join; star pairs don't — prune only when stars exist
-    verifyJaccard(cands, sh, threshold, sizePruned = hotSplit.isEmpty)
+    verifyJaccard(cands, sh, threshold, sizePruned = star.isEmpty)
   }
 
   /** Exact pairwise Jaccard ≥ threshold. Candidates come from the
@@ -535,16 +393,12 @@ object Dedup {
     * at Jaccard 0.8 is (1−0.8⁴)³² ≈ 5e-8, so LSH candidates + exact
     * verification below is exact-in-practice (and never has false
     * positives, since verification recomputes true Jaccard).
-    */
-  def minhashBands(docs: DataFrame, n: Int = 3, numPerm: Int = 128,
-      bands: Int = 32): DataFrame =
-    minhashBandsFromShingles(hashedShingleDocs(docs, n), numPerm, bands)
-
-  /** [[minhashBands]] over an ALREADY-SHINGLED (doc_id, shingles) frame —
-    * the seam that lets a caller compute the hashed-shingle pass ONCE and
-    * share it between banding and exact verification (r21: the LSH
-    * pipelines re-ran the shingle kernel 3-4× per query, once for the
-    * bands and once per verification join side). */
+    *
+    * Takes an ALREADY-SHINGLED (doc_id, shingles) frame, so a caller
+    * computes the hashed-shingle pass ONCE and shares it between banding
+    * and exact verification (r21: the LSH pipelines re-ran the shingle
+    * kernel 3-4× per query, once for the bands and once per verification
+    * join side). */
   private def minhashBandsFromShingles(sh: DataFrame, numPerm: Int,
       bands: Int): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
@@ -599,8 +453,9 @@ object Dedup {
     * such a group is the star subset, not all O(group²) pairs — which is
     * the point of the cap). Both candidate paths share one default so
     * their documented equivalence holds under the same caveat. */
-  /** Unsorted core of [[minhashLshPairs]] — see [[ngramJaccardCore]] for
-    * why consumers that join/aggregate the pairs skip the sort. */
+  /** Unsorted core of [[minhashLshPairs]] — consumers that feed the
+    * pairs into a join/aggregate (e.g. connected components) must not
+    * pay for a global sort they immediately destroy. */
   private[operators] def minhashLshCore(docs: DataFrame,
       threshold: Double = 0.8, n: Int = 3, numPerm: Int = 128,
       bands: Int = 32, dfCap: Option[Int] = Some(DefaultDfCap)): DataFrame = {
@@ -1001,11 +856,12 @@ object Dedup {
     * single unboxing pass per input vector: the projections are the
     * dominant per-row cost (bands × rowsPerBand × dim multiply-adds),
     * and running them over a boxed Seq[Float] is ~100× slower than
-    * over primitive arrays. */
+    * over primitive arrays. The planes are built where the UDF runs
+    * ([[SketchPlanes]]). */
   private[graft] def hyperplaneSketch(bands: Int, rowsPerBand: Int, dim: Int) = {
-    val rng = new scala.util.Random(42)
-    val planes = Array.fill(bands * rowsPerBand * dim)(rng.nextGaussian())
+    val sp = new SketchPlanes(bands * rowsPerBand * dim)
     udf { v: Seq[Float] =>
+      val planes = sp.planes
       val x = new Array[Double](v.length)
       var k = 0
       while (k < x.length) { x(k) = v(k); k += 1 }
@@ -1027,6 +883,15 @@ object Dedup {
         bi += 1
       }
       out.toSeq
+    }
+  }
+
+  /** [[hyperplaneSketch]]'s seeded planes, built lazily where the UDF
+    * runs: a task binary carries one Int, not 2.75 MB of planes at 512-d. */
+  private final class SketchPlanes(n: Int) extends Serializable {
+    @transient lazy val planes: Array[Double] = {
+      val rng = new scala.util.Random(42)
+      Array.fill(n)(rng.nextGaussian())
     }
   }
 
@@ -1647,9 +1512,9 @@ object Dedup {
     * pair join degenerates toward all-pairs-sharing-a-shingle — the one
     * inherently corpus-quadratic question in the family (r12 smoke:
     * 4.1× wall at 10× rows even post-prefix-filter, vs ≤2.4× for the
-    * thresholded dedup queries). [[jaccardHistogramSampled]] answers the
-    * same threshold-tuning question at 1/mod² the cost and is the
-    * documented at-scale path. */
+    * thresholded dedup queries). [[jaccardHistogramSampled]] runs the
+    * same core on a constant-budget sample — the same threshold-tuning
+    * question at 1/mod² the cost — and is the documented at-scale path. */
   val MinExactLo = 0.3
 
   /** Jaccard-band histogram — the threshold-tuning tool: how many doc
@@ -1673,14 +1538,9 @@ object Dedup {
         "exact pair join quadratic in near-dup-saturated corpora; use " +
         "jaccardHistogramSampled (the at-scale path) or opt in with " +
         "allowFullScan=true")
-    // The prefix-filtered core, NOT the count-trick core: the count
-    // trick's Σ df² candidate join is threshold-INDEPENDENT (lo only
-    // filters its output), so a near-dup-saturated corpus pays the full
-    // shared-shingle blowup no matter the floor — the r12 smoke measured
-    // 196 s at 10× neardup rows through ngramJaccardCore vs the prefix
-    // core's candidates-from-rarest-(1−lo)n+1-shingles, which is what
-    // makes the lo ≥ 0.3 floor actually bound the work. Lossless:
-    // DedupSpec pins prefix ≡ exhaustive at t = 0.3/0.5/0.8.
+    // Candidates come from each doc's rarest (1−lo)·n+1 shingles, which
+    // is what makes the lo ≥ 0.3 floor bound the work. Lossless: DedupSpec
+    // pins it against a brute force at t = 0.05/0.3/0.5/0.8.
     prefixJaccardCore(docs, lo, n, dfCap)
       .withColumn("band10", floor(col("jaccard") * 10).cast("long"))
       .groupBy("band10").agg(count(lit(1)).as("n_pairs"))
@@ -1704,7 +1564,11 @@ object Dedup {
     * quadratic dedup query into a constant-factor choice: tune `mod` so
     * the sample's pair join fits the cluster. Bands whose true count is
     * ≪ mod² may sample to zero — fine for threshold tuning, where the
-    * interesting bands are the populated ones. */
+    * interesting bands are the populated ones.
+    *
+    * The sample runs [[jaccardHistogram]]'s core, so the same df-cap
+    * CAVEAT holds: a sampled duplicate group larger than the cap makes
+    * the high deciles LOWER BOUNDS (`dfCap = None` for exact counts). */
   def jaccardHistogramSampled(docs: DataFrame, lo: Double = 0.05,
       n: Int = 3, targetSample: Int = 1250,
       dfCap: Option[Int] = Some(DefaultDfCap)): DataFrame = {
@@ -1725,7 +1589,7 @@ object Dedup {
     val sampled = Sampling.hashSample256(
       docs.crossJoin(broadcast(modDf)), "doc_id",
       lit(256L) / col("smod")).drop("smod")
-    ngramJaccardCore(sampled, lo, n, dfCap)
+    prefixJaccardCore(sampled, lo, n, dfCap)
       .withColumn("band10", floor(col("jaccard") * 10).cast("long"))
       .groupBy("band10").agg(count(lit(1)).as("n_pairs"))
       .crossJoin(broadcast(modDf))

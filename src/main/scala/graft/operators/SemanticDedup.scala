@@ -202,20 +202,20 @@ object SemanticDedup {
     val assigned = Similarity.assignCentroids(
       e.select(col("vec_id"), col("embedding")), centroids)
       .select(col("vec_id"), col("cid"))
-    val (capped, hotSplit) = Dedup.splitHotKeysStar(
+    val (capped, star) = Dedup.splitHotKeysStar(
       assigned, Seq("cid"), "vec_id", cap, "semanticPrune")
     val l = capped.select(col("vec_id").as("vid_a"), col("cid"))
     val r = capped.select(col("vec_id").as("vid_b"), col("cid"))
     // cluster-bounded by construction; corpus-sized sides — never
-    // broadcast (the ngramJaccardCore reasoning). No distinct() needed,
+    // broadcast (the prefixJaccardCore reasoning). No distinct() needed,
     // unlike the LSH band joins: each vector belongs to exactly ONE
     // cluster, so a pair can collide on at most one cid (and the star
     // branch covers only hot cids, which the cold side anti-joined away).
     val selfCands = l.join(r.hint("shuffle_hash"), Seq("cid"))
       .filter(col("vid_a") < col("vid_b"))
       .select("vid_a", "vid_b")
-    val cands = hotSplit.fold(selfCands)(h => selfCands.unionAll(
-      h.star.select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"))))
+    val cands = star.fold(selfCands)(st => selfCands.unionAll(
+      st.select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"))))
     // `sketches` = a caller's already-pinned (vec_id, sk) frame (r22:
     // qSemanticRecall pins the corpus sketches for its truth pass, then
     // the prune's verify re-ran the sketch UDF twice more — one corpus

@@ -218,8 +218,8 @@ object TextStats {
     // guaranteed OOM at real scale). Building on the vocab-sized count
     // sides is right at every scale: vocab grows sublinearly in corpus
     // (and past the broadcast cap regardless), the probe streams, no
-    // sort, no driver collect. Same reasoning as ngramJaccardCore's
-    // posting joins.
+    // sort, no driver collect. Same reasoning as prefixJaccardCore's
+    // posting self-join.
     pairs
       .join(bc.hint("shuffle_hash"), "h12")
       .join(uc.hint("shuffle_hash"), "h1")

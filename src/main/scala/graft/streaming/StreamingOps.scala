@@ -131,24 +131,22 @@ object StreamingOps {
   }
 
   /** Open the events table as a stream — the one events stream reader
-    * (the sentinel replay streams through it too). `maxFilesPerTrigger=1`
-    * keeps micro-batches bounded when replaying a directory. Reading the
-    * TIMESTAMP(NANOS) file needs the `nanosAsLong` legacy flag; if the
-    * caller's session doesn't carry it, the stream is rooted in an
-    * isolated child session rather than mutating the caller's conf (same
-    * pattern as [[graft.Tables.events]]). Callers that pin per-query conf
-    * (state-store width) set the flag on their own child session first so
-    * everything stays in ONE session. */
+    * (the sentinel replay streams through it too). A one-name glob
+    * streams both layouts, a single file and Spark's directory of part
+    * files (a plain path must be a directory), all in the first
+    * micro-batch, so no part file can arrive behind the watermark.
+    * Reading the TIMESTAMP(NANOS) file needs the `nanosAsLong` legacy
+    * flag; if the caller's session doesn't carry it, the stream is
+    * rooted in an isolated child session rather than mutating the
+    * caller's conf (same pattern as [[graft.Tables.events]]). Callers
+    * that pin per-query conf (state-store width) set the flag on their
+    * own child session first so everything stays in ONE session. */
   def readEventsStream(s: SparkSession, dir: String): DataFrame = {
     val file = graft.Tables.eventsFile(s, s"$dir/events.parquet")
     val schema = file.schema
-    // file stream sources need a directory: stream the sf dir, filtered
-    // down to the events file (in production: a landing directory)
     file.sparkSession.readStream
       .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+      .parquet(s"$dir/{events.parquet}")
       .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
   }
 
@@ -572,10 +570,11 @@ object StreamingOps {
     * `Trigger.AvailableNow` runs exactly those before the query
     * terminates: the data batch, then the zero-input batch the watermark
     * advance schedules, which emits the finalized rows. The terminated
-    * query's progress must show that shape — checked on input rows, not
-    * on sink output, which is legitimately zero when the query's final
-    * filter drops every finalized row — or the replay throws rather than
-    * return a result that may be missing rows. */
+    * query's progress must show that shape, with a data batch of more
+    * than the sentinel's one row — checked on input rows, not on sink
+    * output, which is legitimately zero when the query's final filter
+    * drops every finalized row — or the replay throws rather than return
+    * a result that may be missing rows. */
   private[graft] def replayEventsAppend(s: SparkSession, dir: String,
       namePrefix: String)(build: DataFrame => DataFrame): DataFrame = {
     // Per-query state cardinality and the nanos read flag live in an
@@ -606,10 +605,11 @@ object StreamingOps {
       val inputRows = runToEnd(build(stream).writeStream
         .format("memory").queryName(name).outputMode("append"))
         .map(_.numInputRows)
-      if (!(inputRows.length == 2 && inputRows.head > 0 && inputRows(1) == 0))
+      // the data batch carries the sentinel row plus at least one event
+      if (!(inputRows.length == 2 && inputRows.head > 1 && inputRows(1) == 0))
         throw new IllegalStateException(s"replay $name ran micro-batches " +
           s"of ${inputRows.mkString("[", ", ", "]")} input rows, not one " +
-          "data batch and one zero-input finalize batch")
+          "data batch of events and one zero-input finalize batch")
       child.table(name)
     }
   }

@@ -20,8 +20,16 @@ object GraftColumnBridge {
     * session, so it registers the same builder post-hoc). */
   def registerFunction(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =
+    registry(spark).createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** The builder `name` is bound to in this session's registry, if any. */
+  def functionBuilder(spark: SparkSession, name: String)
+      : Option[Seq[Expression] => Expression] =
+    registry(spark).lookupFunctionBuilder(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+
+  private def registry(spark: SparkSession) =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** Apply a SparkSessionExtensions' injected functions to a fresh
     * registry — lets a spec verify a `spark.sql.extensions` entry point

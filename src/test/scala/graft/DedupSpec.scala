@@ -63,14 +63,6 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     assert(lsh === exact)
   }
 
-  test("df-cap drops hot shingles from the posting list") {
-    val hot = Seq.tabulate(5)(i => (i.toLong, "same same same same"))
-      .toDF("doc_id", "text")
-    val uncapped = Dedup.shinglePosting(hot).count()
-    val capped = Dedup.shinglePosting(hot, dfCap = Some(3)).count()
-    assert(uncapped > 0 && capped === 0)
-  }
-
   test("hot-shingle fallback path: pairs found via non-hot shingles, exact jaccard") {
     // shared filler makes its shingles hot (df=5 > cap=4); docs 1 and 2
     // also share unique content, so their pair survives candidate
@@ -303,8 +295,8 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
 
   test("prefix filter is lossless: matches the unfiltered exhaustive core at every threshold") {
     // richer corpus: near-dup pairs at several similarity levels plus a
-    // 6-doc identical group, so prefixes, length filter and the hot-key
-    // star all get exercised against the Σdf² exhaustive path
+    // 6-doc identical group, so prefixes and the length filter get
+    // exercised against a driver-side brute force over every pair
     val docs = (Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river"),
       (2L, "the quick brown fox jumps over the lazy cat near the river"),
@@ -315,15 +307,29 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
       (7L, "completely unrelated words in this particular document body")) ++
       Seq.tabulate(6)(i => (100L + i, "same exact duplicate text repeated verbatim here")))
       .toDF("doc_id", "text")
+    // distinct word 3-grams per doc, tokenized like the shingle kernel
+    val trigrams = docs.collect().map { r =>
+      val w = r.getString(1).split(" ").filter(_.nonEmpty)
+      r.getLong(0) -> w.sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    }.sortBy(_._1)
+    def bruteForce(t: Double) = (for {
+      i <- trigrams.indices; j <- i + 1 until trigrams.length
+      (a, sa) = trigrams(i); (b, sb) = trigrams(j)
+      common = (sa intersect sb).size
+      jac = common.toDouble / (sa.size + sb.size - common)
+      if jac >= t
+    } yield (a, b, BigDecimal(jac).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+      .toDouble)).toSet
     def asSet(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Double]("jaccard"))).toSet
-    for (t <- Seq(0.3, 0.5, 0.8)) {
-      val exhaustive = asSet(Dedup.ngramJaccardPairs(docs, threshold = t,
-        dfCap = None))
+    for (t <- Seq(0.05, 0.3, 0.5, 0.8)) {
+      val exhaustive = bruteForce(t)
       // sanity: the corpus actually produces pairs at this threshold
       assert(exhaustive.nonEmpty)
-      val prefix = asSet(Dedup.ngramJaccardPairs(docs, threshold = t))
-      assert(prefix === exhaustive, s"threshold $t")
+      assert(asSet(Dedup.ngramJaccardPairs(docs, threshold = t,
+        dfCap = None)) === exhaustive, s"uncapped, threshold $t")
+      assert(asSet(Dedup.ngramJaccardPairs(docs, threshold = t)) ===
+        exhaustive, s"capped, threshold $t")
     }
   }
 

@@ -15,6 +15,23 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
         s"$name not injected")
   }
 
+  test("GraftFunctions.register is idempotent: a repeat call re-binds nothing") {
+    import graft.functions.GraftFunctions
+    val fresh = spark.newSession()
+    val registry = fresh.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val names = GraftFunctions.builders.keys.toSeq.sorted
+    // a re-bind stores a new ExpressionInfo even for the same builder
+    def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    assert(infos.forall(_.isEmpty))
+    GraftFunctions.register(fresh)
+    val first = infos
+    for (n <- names) assert(GraftColumnBridge.functionBuilder(fresh, n)
+      .exists(_ eq GraftFunctions.builders(n)), n)
+    GraftFunctions.register(fresh)
+    assert(infos.zip(first).forall { case (a, b) => a.get eq b.get })
+  }
+
   test("SQL count_min + count_min_estimate through the registry match the Column API") {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)

@@ -539,6 +539,21 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("an events table written by Spark (a directory of part files) streams like the single file") {
+    val dir = TmpDirs.scratch("graft_events_dir")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "customer.parquet"),
+      dir.resolve("customer.parquet"))
+    Tables.events(spark, sf0001).repartition(2)
+      .write.parquet(dir.resolve("events.parquet").toString)
+    for (q <- Seq[(SparkSession, String) => DataFrame](
+        StreamingOps.qStreamTumbling, StreamingOps.qStreamEnrich)) {
+      def rows(d: String) = q(spark, d).collect().map(_.toSeq).toSeq
+      val file = rows(sf0001)
+      assert(file.nonEmpty)
+      assert(rows(dir.toString) === file)
+    }
+  }
+
   test("stream_upsert closes every directory handle it opens") {
     val fds = new java.io.File("/proc/self/fd")
     assume(fds.isDirectory, "needs procfs to count open descriptors")
