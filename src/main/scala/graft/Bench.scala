@@ -314,9 +314,7 @@ object Bench {
     // INSIDE the next query's timing window: round 7 showed the whole
     // q2/q3 family uniformly +0.5-0.9s merely because the new 6.8s q27
     // sorted immediately before them. The GC itself runs outside the
-    // window, so it costs wall-clock, not measured time. Opt out with
-    // SPARK_GRAFT_GC_BETWEEN=0.
-    val gcBetween = sys.env.getOrElse("SPARK_GRAFT_GC_BETWEEN", "1") != "0"
+    // window, so it costs wall-clock, not measured time.
     // The System.gc() call is synchronous, but its AFTERMATH is not:
     // the full GC enqueues Spark ContextCleaner work (weak-ref'd shuffle /
     // broadcast / RDD-cache cleanups from every query run so far), which
@@ -324,19 +322,15 @@ object Bench {
     // Measured round 11 on text_collocations (persist+broadcast heavy,
     // isolated, 7 iters, sf0.1): median 1.04s with bare gc vs 0.78s with
     // gc off — a ~0.25s per-sample tax that looked like a code regression
-    // for three rounds (the "plateau" in PERF_NOTES). A short settle sleep
+    // for three rounds (the "plateau" in PERF_NOTES). A 200 ms settle sleep
     // after the gc lets the cleaner drain OUTSIDE the window; it costs
     // wall-clock (queries × iters × settle), never measured time.
-    val gcSettleMs =
-      sys.env.getOrElse("SPARK_GRAFT_GC_SETTLE_MS", "200").toLong
     (1 to iters).foreach { _ =>
       val spark = makeSession(cpus)
       selected.foreach { case (name, fn) =>
         if (!failed.contains(name)) {
-          if (gcBetween) {
-            System.gc()
-            if (gcSettleMs > 0) Thread.sleep(gcSettleMs)
-          }
+          System.gc()
+          Thread.sleep(200L)
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).count()

@@ -27,7 +27,7 @@ object Plans {
     val names = args.lift(2)
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val spark = Bench.makeSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Bench.makeSession(Bench.cpus)
     Files.createDirectories(out)
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -28,7 +28,10 @@ import org.apache.spark.sql.functions._
   *     blowup and stall a 1000-executor shuffle. Hot buckets are not
   *     dropped — they degrade to STAR candidates around the bucket-min
   *     representative ([[splitHotKeysStar]]): O(bucket) edges that still
-  *     span the bucket, so clusters larger than the cap survive.
+  *     span the bucket, so clusters larger than the cap survive. The
+  *     bipartite joins (batch vs corpus, left vs right) share one band
+  *     join ([[crossBucketPairs]]) under the same rule, applied to each
+  *     side, degrading to the spanning cross set.
   *     Verification always uses the FULL feature sets, so reported
   *     Jaccard/cosine values are exact.
   *   - Connected components for cluster assignment is iterative min-label
@@ -207,6 +210,48 @@ object Dedup {
       .select(a, b)
     star.fold(selfCands)(st => selfCands.unionAll(st.toDF(a, b)))
       .distinct()
+  }
+
+  /** The bipartite LSH candidate block of [[incrementalNearDups]] and
+    * [[crossPairsCore]]: distinct (a, b) with `a` from `l` (columns `a`
+    * + `keys`) and `b` from `r` (`b` + `keys`) sharing a bucket, from a
+    * shuffle-hash band join (corpus-sized sides are never broadcast).
+    *
+    * The one bipartite hot-bucket rule, with `dfCap` set, is the self
+    * path's ([[splitHotKeysStar]]) applied to each side: a bucket is hot
+    * when EITHER side alone holds more than `cap` ids, so a cold bucket
+    * joins in full, at most cap² pairs — the self path's bound. A hot
+    * bucket degrades to the SPANNING cross set — l-min × every r member
+    * plus every l member × r-min: O(|L_b| + |R_b|) edges that verify
+    * every member of both sides against a representative of the other,
+    * so a mass-duplicated region stays flagged on both sides; only which
+    * partner flagged it degrades. */
+  private def crossBucketPairs(l: DataFrame, r: DataFrame, keys: Seq[String],
+      a: String, b: String, dfCap: Option[Int], what: String): DataFrame = {
+    def join(x: DataFrame, y: DataFrame) =
+      x.join(y.hint("shuffle_hash"), keys).select(a, b)
+    def side(df: DataFrame, id: String, n: String, rep: String) =
+      df.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as(n), min(col(id)).as(rep))
+    val cands = dfCap match {
+      case None => join(l, r)
+      case Some(cap) =>
+        val (hot, nHot) = materializeHot(
+          side(l, a, "nl", "rep_a").join(side(r, b, "nr", "rep_b"), keys)
+            .filter(greatest(col("nl"), col("nr")) > cap).drop("nl", "nr"))
+        if (nHot == 0) join(l, r)
+        else {
+          log.warn(s"$what: $nHot hot buckets (a side > $cap ids) " +
+            "reduced to spanning cross candidates")
+          val hotKeys = hot.select(keys.map(col): _*)
+          val cold = join(l.join(hotKeys, keys, "left_anti"),
+            r.join(hotKeys, keys, "left_anti"))
+          val starR = r.join(hot, keys).select(col("rep_a").as(a), col(b))
+          val starL = l.join(hot, keys).select(col(a), col("rep_b").as(b))
+          cold.unionByName(starR).unionByName(starL)
+        }
+    }
+    cands.distinct()
   }
 
   /** Exact-Jaccard verification of candidate (doc_a, doc_b) pairs.
@@ -495,14 +540,12 @@ object Dedup {
     * Same machinery as [[minhashLshCore]], asymmetric join: MinHash
     * band signatures over all docs (one pinned pass), split into corpus
     * and batch sides, candidates from the ids-only (band, sig)
-    * corpus⋈batch join — so the join output is bounded by
+    * corpus⋈batch join ([[crossBucketPairs]], whose hot-bucket guard
+    * degrades a bucket with more than `dfCap` ids on either side to the
+    * spanning cross set) — so the join output is bounded by
     * batch-adjacent collisions, never corpus² — then exact Jaccard
-    * verification on full shingle sets. Hot (band, sig) buckets (> cap
-    * rows across both sides) degrade to a star: each batch doc in the
-    * bucket pairs with the bucket's min CORPUS doc (one verified edge
-    * suffices for the drop decision; an all-batch hot bucket yields no
-    * cross edge by definition). Within-batch duplicates are a separate
-    * concern — run [[minhashLshPairs]] on the batch for those.
+    * verification on full shingle sets. Within-batch duplicates are a
+    * separate concern — run [[minhashLshPairs]] on the batch for those.
     * Output (corpus_doc_id, batch_doc_id, jaccard). */
   def incrementalNearDups(docs: DataFrame, isBatch: Column,
       threshold: Double = 0.8, n: Int = 3, numPerm: Int = 128,
@@ -513,34 +556,10 @@ object Dedup {
     val sh = Lineage.pin(hashedShingleDocs(docs, n), eager = false)
     val banded0 = minhashBandsFromShingles(sh, numPerm, bands)
     val banded = if (dfCap.isDefined) Lineage.pin(banded0) else banded0
-    val corpusB = banded.filter(!isBatch)
-    val batchB = banded.filter(isBatch)
-    def cross(c: DataFrame, b: DataFrame): DataFrame =
-      c.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-        .join(b.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
-          .hint("shuffle_hash"), Seq("band", "sig"))
-        .select("doc_a", "doc_b")
-    val cands = (dfCap match {
-      case None => cross(corpusB, batchB)
-      case Some(cap) =>
-        val (hot, nHot) = materializeHot(
-          banded.groupBy("band", "sig")
-            .agg(count(lit(1)).as("cnt"),
-              min(when(!isBatch, col("doc_id"))).as("rep"))
-            .filter(col("cnt") > cap).drop("cnt"))
-        if (nHot == 0) cross(corpusB, batchB)
-        else {
-          log.warn(s"incrementalNearDups: $nHot hot buckets (> $cap rows) " +
-            "reduced to batch-doc -> bucket-min-corpus-doc star edges")
-          val keys = hot.select("band", "sig")
-          val cold = cross(corpusB.join(keys, Seq("band", "sig"), "left_anti"),
-            batchB.join(keys, Seq("band", "sig"), "left_anti"))
-          val star = batchB.join(hot, Seq("band", "sig"))
-            .filter(col("rep").isNotNull)
-            .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-          cold.unionAll(star)
-        }
-    }).distinct()
+    def side(p: Column, id: String) = banded.filter(p).withColumnRenamed("doc_id", id)
+    val cands = crossBucketPairs(side(!isBatch, "doc_a"),
+      side(isBatch, "doc_b"), Seq("band", "sig"), "doc_a", "doc_b", dfCap,
+      "incrementalNearDups")
     verifyJaccard(cands, sh, threshold)
       .withColumnRenamed("doc_a", "corpus_doc_id")
       .withColumnRenamed("doc_b", "batch_doc_id")
@@ -816,10 +835,7 @@ object Dedup {
   def embeddingNearDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
       bands: Int = 48, rowsPerBand: Int = 14, dim: Int = 64,
       dfCap: Option[Int] = Some(DefaultDfCap)): DataFrame = {
-    val sketch = hyperplaneSketch(bands, rowsPerBand, dim)
-    val banded0 = embeddings
-      .select(col("vec_id"), posexplode(sketch(col("embedding"))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+    val banded0 = hyperplaneBands(embeddings, bands, rowsPerBand, dim)
     // Checkpoint only when the guard reads the per-call banded frame
     // twice (the materialized path skips this — parquet re-reads free).
     val banded = if (dfCap.isDefined) Lineage.pin(banded0) else banded0
@@ -831,13 +847,13 @@ object Dedup {
     * ([[qEmbeddingNearDup]]): hot-bucket guard → (band, key) candidate
     * self-join → sketch-prefiltered exact-cosine verification.
     *
-    * Hot-bucket guard, same shape as minhashLshCore: a dense embedding
-    * region (mass-duplicated vectors — the web-image/boilerplate case)
-    * puts >cap ids in one (band, key) bucket in EVERY band; the
-    * self-join there is O(bucket²) per band. Degrade hot buckets to
-    * star candidates around the bucket minimum — O(bucket) edges whose
-    * exact-cosine verification + connected components still recover
-    * the full duplicate group. */
+    * Hot-bucket guard, the self-join one of [[bucketPairs]]: a dense
+    * embedding region (mass-duplicated vectors — the web-image/
+    * boilerplate case) puts >cap ids in one (band, key) bucket in EVERY
+    * band; the self-join there is O(bucket²) per band. Hot buckets
+    * degrade to star candidates around the bucket minimum — O(bucket)
+    * edges whose exact-cosine verification + connected components still
+    * recover the full duplicate group. */
   private def bandedNearDupCore(banded: DataFrame, embeddings: DataFrame,
       threshold: Double, dfCap: Option[Int],
       sketches: Option[DataFrame]): DataFrame = {
@@ -848,8 +864,9 @@ object Dedup {
       .orderBy("vid_a", "vid_b")
   }
 
-  /** Seeded hyperplane-LSH sketch UDF: `bands` keys of `rowsPerBand`
-    * sign bits each over the first `dim` components. The SAME seed (42)
+  /** Seeded hyperplane-LSH band signatures, (vec_id, band, key): `bands`
+    * keys of `rowsPerBand` sign bits each over the first `dim`
+    * components of `embedding`, one UDF pass. The SAME seed (42)
     * on every call site, so two frames sketched independently land in
     * the same buckets — what makes the bipartite cross join below and
     * the self-join above interoperable. Flat row-major plane matrix + a
@@ -858,9 +875,10 @@ object Dedup {
     * and running them over a boxed Seq[Float] is ~100× slower than
     * over primitive arrays. The planes are built where the UDF runs
     * ([[SketchPlanes]]). */
-  private[graft] def hyperplaneSketch(bands: Int, rowsPerBand: Int, dim: Int) = {
+  private[graft] def hyperplaneBands(e: DataFrame, bands: Int,
+      rowsPerBand: Int, dim: Int): DataFrame = {
     val sp = new SketchPlanes(bands * rowsPerBand * dim)
-    udf { v: Seq[Float] =>
+    val sketch = udf { v: Seq[Float] =>
       val planes = sp.planes
       val x = new Array[Double](v.length)
       var k = 0
@@ -884,9 +902,11 @@ object Dedup {
       }
       out.toSeq
     }
+    e.select(col("vec_id"),
+      posexplode(sketch(col("embedding"))).as(Seq("band", "key")))
   }
 
-  /** [[hyperplaneSketch]]'s seeded planes, built lazily where the UDF
+  /** [[hyperplaneBands]]' seeded planes, built lazily where the UDF
     * runs: a task binary carries one Int, not 2.75 MB of planes at 512-d. */
   private final class SketchPlanes(n: Int) extends Serializable {
     @transient lazy val planes: Array[Double] = {
@@ -905,29 +925,28 @@ object Dedup {
     * (band, key) equi-join — never left × right — and survive an exact
     * cosine verification. Within-side pairs are never emitted.
     *
-    * Scale shape mirrors the self-join path: the band join shuffles
-    * (band, key, id)-only rows, shuffle-hash (corpus-sized sides are
-    * never broadcast), heavy embedding columns join back once per
-    * surviving candidate. At threshold 0.9 the 48×14 banding misses a
-    * true pair with p ≈ 0.003 (the documented LSH trade; lower
-    * thresholds need wider banding — this is a near-dup detector, not
-    * a general ANN join: see [[graft.operators.Similarity]] for top-k). */
+    * Scale shape mirrors the self-join path: the band join
+    * ([[crossBucketPairs]]) shuffles (band, key, id)-only rows,
+    * shuffle-hash, with its hot-bucket guard on `dfCap`; heavy
+    * embedding columns join back once per surviving candidate. At
+    * threshold 0.9 the 48×14 banding misses a true pair with p ≈ 0.003
+    * (the documented LSH trade; lower thresholds need wider banding —
+    * this is a near-dup detector, not a general ANN join: see
+    * [[graft.operators.Similarity]] for top-k). */
   def embeddingCrossPairs(left: DataFrame, right: DataFrame,
       threshold: Double = 0.9, bands: Int = 48, rowsPerBand: Int = 14,
       dim: Int = 64, dfCap: Option[Int] = Some(DefaultDfCap)): DataFrame = {
-    val sketch = hyperplaneSketch(bands, rowsPerBand, dim)
-    def bandedOf(df: DataFrame, idAs: String) = df
-      .select(col("vec_id").as(idAs), posexplode(sketch(col("embedding"))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-    val lb0 = bandedOf(left, "vid_left")
-    val rb0 = bandedOf(right, "vid_right")
-    val (lb, rb) =
-      if (dfCap.isDefined) (Lineage.pin(lb0), Lineage.pin(rb0))
-      else (lb0, rb0)
-    crossPairsCore(lb, rb, left, right, threshold, dfCap, sketches = None)
+    def bandedOf(df: DataFrame, idAs: String) = {
+      val b = hyperplaneBands(df, bands, rowsPerBand, dim)
+        .withColumnRenamed("vec_id", idAs)
+      if (dfCap.isDefined) Lineage.pin(b) else b
+    }
+    crossPairsCore(bandedOf(left, "vid_left"), bandedOf(right, "vid_right"),
+      left, right, threshold, dfCap, sketches = None)
   }
 
-  /** The post-banding half of [[embeddingCrossPairs]], shared by the
+  /** The post-banding half of [[embeddingCrossPairs]] (bipartite band
+    * join → sketch-prefiltered exact-cosine verification), shared by the
     * per-call path and the materialized-artifact path
     * ([[qEmbeddingCrossDecon]] — both sides of the decon split come
     * from the SAME corpus, so one write-once band/sketch table serves
@@ -936,44 +955,8 @@ object Dedup {
   private def crossPairsCore(lb: DataFrame, rb: DataFrame,
       left: DataFrame, right: DataFrame, threshold: Double,
       dfCap: Option[Int], sketches: Option[DataFrame]): DataFrame = {
-    // Bipartite hot-bucket guard: the join fanout of bucket b is
-    // |L_b|·|R_b|, so THAT product is what the cap bounds. A hot bucket
-    // degrades to the SPANNING cross set — left-min × every right
-    // member plus every left member × right-min: O(|L_b|+|R_b|) edges
-    // that still verify every member of both sides against a
-    // representative of the other (a mass-duplicated region stays
-    // flagged on both sides; only which partner flagged it degrades).
-    val cands = (dfCap match {
-      case None =>
-        lb.join(rb.hint("shuffle_hash"), Seq("band", "key"))
-          .select("vid_left", "vid_right")
-      case Some(cap) =>
-        val lc = lb.groupBy("band", "key")
-          .agg(count(lit(1)).as("nl"), min(col("vid_left")).as("rep_l"))
-        val rc = rb.groupBy("band", "key")
-          .agg(count(lit(1)).as("nr"), min(col("vid_right")).as("rep_r"))
-        val (hot, nHot) = materializeHot(
-          lc.join(rc, Seq("band", "key"))
-            .filter(col("nl") * col("nr") > cap)
-            .select("band", "key", "rep_l", "rep_r"))
-        if (nHot == 0)
-          lb.join(rb.hint("shuffle_hash"), Seq("band", "key"))
-            .select("vid_left", "vid_right")
-        else {
-          log.warn(s"embeddingCrossPairs: $nHot hot buckets " +
-            s"(|L|x|R| > $cap) reduced to spanning cross candidates")
-          val hotKeys = hot.select("band", "key")
-          val cold = lb.join(hotKeys, Seq("band", "key"), "left_anti")
-            .join(rb.join(hotKeys, Seq("band", "key"), "left_anti")
-              .hint("shuffle_hash"), Seq("band", "key"))
-            .select("vid_left", "vid_right")
-          val starR = rb.join(hot, Seq("band", "key"))
-            .select(col("rep_l").as("vid_left"), col("vid_right"))
-          val starL = lb.join(hot, Seq("band", "key"))
-            .select(col("vid_left"), col("rep_r").as("vid_right"))
-          cold.unionByName(starR).unionByName(starL)
-        }
-    }).distinct()
+    val cands = crossBucketPairs(lb, rb, Seq("band", "key"), "vid_left",
+      "vid_right", dfCap, "embeddingCrossPairs")
     verifyCosinePairs(cands, left, right, "vid_left", "vid_right", threshold,
         sketches)
       .orderBy("vid_left", "vid_right")
@@ -1346,9 +1329,7 @@ object Dedup {
         dir, "embeddings.parquet", LshTableVersion,
         s"b${bands}x${rowsPerBand}d$dim", "sketch/_SUCCESS") { tmp =>
       val e = Tables.embeddings(s, dir)
-      val sketch = hyperplaneSketch(bands, rowsPerBand, dim)
-      e.select(col("vec_id"), posexplode(sketch(col("embedding"))))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+      hyperplaneBands(e, bands, rowsPerBand, dim)
         .write.mode("overwrite").parquet(tmp.resolve("banded").toString)
       e.select(col("vec_id"), verifySketchUdf(col("embedding")).as("sk"))
         .write.mode("overwrite").parquet(tmp.resolve("sketch").toString)
@@ -1389,16 +1370,13 @@ object Dedup {
     * remaining 512-d curve: 4.06× at 100×). */
   def qEmbeddingCrossDecon(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val l = e.filter(col("vec_id") % 10 === 0)
-    val r = e.filter(col("vec_id") % 10 =!= 0)
+    val isBench = col("vec_id") % 10 === 0
+    val (l, r) = (e.filter(isBench), e.filter(!isBench))
     val (bands, rowsPerBand) = bandGeometry(math.max(l.count(), r.count()), 0.9)
     val (banded, sketches) = materializedLshTables(s, dir, bands, rowsPerBand)
-    val lb = banded.filter(col("vec_id") % 10 === 0)
-      .select(col("vec_id").as("vid_left"), col("band"), col("key"))
-    val rb = banded.filter(col("vec_id") % 10 =!= 0)
-      .select(col("vec_id").as("vid_right"), col("band"), col("key"))
-    crossPairsCore(lb, rb, l, r, threshold = 0.9,
-        dfCap = Some(DefaultDfCap), sketches = Some(sketches))
+    def side(p: Column, id: String) = banded.filter(p).withColumnRenamed("vec_id", id)
+    crossPairsCore(side(isBench, "vid_left"), side(!isBench, "vid_right"), l, r,
+        threshold = 0.9, dfCap = Some(DefaultDfCap), sketches = Some(sketches))
       .withColumnRenamed("vid_left", "vid_bench")
       .withColumnRenamed("vid_right", "vid_corpus")
   }

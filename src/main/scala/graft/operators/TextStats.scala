@@ -365,17 +365,12 @@ object TextStats {
       .orderBy("source")
   }
 
-  /** Registered query (`text_top_terms`), run with the TopKPerGroup
-    * rewrite installed on an ISOLATED child session (the q8d pattern —
-    * never on the caller's session, extraOptimizations are
-    * session-global): per-doc groups are corpus-sized at 100 TB, so the
-    * row_number window's exchange + per-partition SORT of the whole
-    * (doc, term, tf, df) table is the scale bottleneck (9.54× at the
-    * r12 100× stress, worst unfixed curve after text_rarity). The
-    * rewrite's partial phase bounds the doc_id shuffle to ≤ k rows per
-    * doc per input partition and sorts nothing. */
-  def qTopTerms(s0: SparkSession, dir: String): DataFrame =
-    topTerms(Tables.documents(s0, dir))
+  /** Registered query (`text_top_terms`): [[topTerms]] over
+    * `documents` in the caller's session, with the plain row_number
+    * top-k (the TopKPerGroup rewrite measured 3× slower here — see
+    * [[topTerms]]). */
+  def qTopTerms(s: SparkSession, dir: String): DataFrame =
+    topTerms(Tables.documents(s, dir))
 
   /** Registered query (`text_bm25`): 3-term BM25 retrieval, top 10. */
   def qBm25(s: SparkSession, dir: String): DataFrame =

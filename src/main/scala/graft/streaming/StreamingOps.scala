@@ -35,68 +35,74 @@ object StreamingOps {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** (min, max) of an INT64 column straight from one parquet file's
-    * footer statistics — the replay harnesses need exactly one scalar
-    * (max ts for the sentinel, min/max event_id for the chunk bounds)
-    * and were paying a Spark aggregation JOB per replay for it (guide
-    * §6: use the metadata the format already wrote). INT64 min/max
-    * stats are exact (no binary truncation). A TIMESTAMP column comes
-    * back in epoch MICROS whatever unit its footer annotation names, so
-    * both events vintages (TIMESTAMP(NANOS) / TIMESTAMP_NTZ-micros) give
-    * the same scalar. None when any row-group lacks stats or holds only
-    * nulls beyond the stated values — callers fall back to the
-    * aggregation, so a stats-less writer can never change a result. */
-  private[graft] def footerLongStats(spark: SparkSession, file: String,
+  /** The parquet files of a table path, listed on the driver: the path
+    * itself when it is one file, else the `.parquet` part files of
+    * Spark's directory layout (hidden `_`/`.` names skipped). */
+  private[graft] def parquetParts(path: String): Seq[java.nio.file.Path] = {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.isDirectory(p)) Seq(p)
+    else scala.util.Using.resource(java.nio.file.Files.newDirectoryStream(p,
+      "[!_.]*.parquet"))(_.asScala.toSeq)
+  }
+
+  /** (min, max) of an INT64 column straight from the parquet footer
+    * statistics of a table path, folded over its [[parquetParts]] — the
+    * replay harnesses need exactly one scalar (max ts for the sentinel,
+    * min/max event_id for the chunk bounds) and were paying a Spark
+    * aggregation JOB per replay for it (guide §6: use the metadata the
+    * format already wrote). INT64 min/max stats are exact (no binary
+    * truncation). A TIMESTAMP column comes back in epoch MICROS whatever
+    * unit its footer annotation names, so both events vintages
+    * (TIMESTAMP(NANOS) / TIMESTAMP_NTZ-micros) give the same scalar.
+    * None when any row-group lacks stats or no row-group holds a
+    * non-null value — callers fall back to the aggregation, so a
+    * stats-less writer can never change a result. */
+  private[graft] def footerLongStats(spark: SparkSession, path: String,
       column: String): Option[(Long, Long)] =
     try {
       import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
         TimestampLogicalTypeAnnotation}
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file),
-        spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        val toMicros: Long => Long =
-          schema.getType(schema.getFieldIndex(column))
-            .getLogicalTypeAnnotation match {
-            case t: TimestampLogicalTypeAnnotation => t.getUnit match {
-              case TimeUnit.NANOS => v => Math.floorDiv(v, 1000L)
-              case TimeUnit.MILLIS => v => v * 1000L
-              case TimeUnit.MICROS => identity
+      val ranges = parquetParts(path).flatMap { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString),
+          spark.sparkContext.hadoopConfiguration)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try {
+          val schema = r.getFooter.getFileMetaData.getSchema
+          val toMicros: Long => Long =
+            schema.getType(schema.getFieldIndex(column))
+              .getLogicalTypeAnnotation match {
+              case t: TimestampLogicalTypeAnnotation => t.getUnit match {
+                case TimeUnit.NANOS => v => Math.floorDiv(v, 1000L)
+                case TimeUnit.MILLIS => v => v * 1000L
+                case TimeUnit.MICROS => identity
+              }
+              case _ => identity
             }
-            case _ => identity
-          }
-        val blocks = r.getFooter.getBlocks.asScala
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        var any = false
-        var usable = true
-        blocks.foreach { b =>
-          if (usable) b.getColumns.asScala
-            .find(_.getPath.toDotString == column)
-            .foreach { c =>
+          r.getFooter.getBlocks.asScala.toSeq
+            .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == column))
+            .flatMap { c =>
               val st = c.getStatistics
-              if (st == null || st.isEmpty) usable = false // stats missing
-              else if (st.hasNonNullValue) {
-                (st.genericGetMin, st.genericGetMax) match {
-                  case (lo: java.lang.Long, hi: java.lang.Long) =>
-                    if (lo < mn) mn = lo
-                    if (hi > mx) mx = hi
-                    any = true
-                  case _ => usable = false // not an INT64 column
-                }
+              require(st != null && !st.isEmpty, s"$f: $column has no stats")
+              if (!st.hasNonNullValue) None
+              else (st.genericGetMin, st.genericGetMax) match {
+                case (lo: java.lang.Long, hi: java.lang.Long) =>
+                  Some((toMicros(lo), toMicros(hi)))
+                case _ => throw new IllegalArgumentException(
+                  s"$f: $column is not INT64")
               }
             }
-        }
-        if (usable && any) Some((toMicros(mn), toMicros(mx))) else None
-      } finally r.close()
+        } finally r.close()
+      }
+      if (ranges.isEmpty) None
+      else Some((ranges.map(_._1).min, ranges.map(_._2).max))
     } catch { case _: Exception => None }
 
   /** Child session for a replay harness, with [[graft.Tables.NanosFlag]]
     * set (the TIMESTAMP(NANOS) events vintage reads in it) and a
     * stateful-operator width SCALE-ADAPTIVE from the replayed events
-    * file's size: one state store per ~32 MB of input, floor 2
+    * table's size ([[replayBytes]]): one state store per ~32 MB of
+    * input, floor 2
     * ([[Lineage.width]] caps it at the parent's width and applies the
     * parent's [[Lineage.WidthKey]] override, which is how the
     * `Verify --perturb` jitter reaches these sessions — r19 review
@@ -112,23 +118,25 @@ object StreamingOps {
     * constant would be wrong in both directions (r21 charter): this
     * derives from input bytes, so a 100× replay widens on its own. */
   private[graft] def replayChild(s: SparkSession, dir: String): SparkSession = {
-    // Only a MISSING file falls back to 0 bytes (→ the floor width of
-    // 2), and loudly; any other I/O failure propagates — a blanket
-    // catch silently pinned every replay to the floor whenever the
-    // layout assumption broke (r21 ADVICE).
-    val bytes =
-      try java.nio.file.Files.size(java.nio.file.Paths.get(dir, "events.parquet"))
-      catch {
-        case e: java.nio.file.NoSuchFileException =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"replayChild: ${e.getMessage} missing — " +
-              "replay width falls to the floor of 2")
-          0L
-      }
-    val width = Lineage.width(s, math.max(2L, bytes / (32L << 20) + 1L))
+    val width = Lineage.width(s, math.max(2L, replayBytes(dir) / (32L << 20) + 1L))
     Lineage.child(s, graft.Tables.NanosFlag -> "true",
       "spark.sql.shuffle.partitions" -> width.toString)
   }
+
+  /** Bytes of `$dir/events.parquet`, one file or the sum of its part
+    * files ([[parquetParts]]). Only a MISSING table falls back to 0
+    * bytes (→ the floor width of 2), and loudly; any other I/O failure
+    * propagates — a blanket catch silently pinned every replay to the
+    * floor whenever the layout assumption broke (r21 ADVICE). */
+  private[graft] def replayBytes(dir: String): Long =
+    try parquetParts(s"$dir/events.parquet").map(java.nio.file.Files.size).sum
+    catch {
+      case e: java.nio.file.NoSuchFileException =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"replayChild: ${e.getMessage} missing — " +
+            "replay width falls to the floor of 2")
+        0L
+    }
 
   /** Open the events table as a stream — the one events stream reader
     * (the sentinel replay streams through it too). A one-name glob

@@ -252,6 +252,21 @@ class CorpusOpsSpec extends AnyFunSuite with SparkFixture {
     assert(inc.filter(col("jaccard") < 1.0).count() === 0)
   }
 
+  test("incrementalNearDups: a bucket with no side over the cap joins in full") {
+    // 14 corpus + 10 batch identical docs at cap 16: the bucket holds 24
+    // ids, but neither side alone holds more than 16, so every
+    // corpus x batch pair is a candidate and verifies at jaccard 1
+    val docs = Seq.tabulate(24)(i =>
+      (i.toLong, "alpha beta gamma delta epsilon zeta eta theta iota"))
+      .toDF("doc_id", "text")
+    val inc = Dedup.incrementalNearDups(docs, col("doc_id") >= 14,
+      dfCap = Some(16))
+    val got = inc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val all = for (c <- 0L until 14L; b <- 14L until 24L) yield (c, b)
+    assert(got === all.toSet)
+    assert(inc.filter(col("jaccard") < 1.0).count() === 0)
+  }
+
   test("sourceOverlap: hand-computed Jaccard on a 3-source fixture") {
     // srcA: shingles {a b c, b c d} ; srcB: {a b c, b c e} ; srcC: {x y z}
     val docs = Seq(

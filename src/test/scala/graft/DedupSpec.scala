@@ -273,6 +273,20 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     assert(got.length < 50, "the full cross product must not materialize")
   }
 
+  test("bipartite bucket with no side over the cap: every cross pair comes back") {
+    val rng = new scala.util.Random(5)
+    val base = Array.fill(64)(rng.nextGaussian().toFloat)
+    val left = (0 until 4).map(i => (i.toLong, base.clone()))
+      .toDF("vec_id", "embedding")
+    val right = (100 until 105).map(i => (i.toLong, base.clone()))
+      .toDF("vec_id", "embedding")
+    // |L|x|R| = 20 > cap 8, but max(|L|, |R|) = 5 is not → full join
+    val got = Dedup.embeddingCrossPairs(left, right, threshold = 0.99,
+      dfCap = Some(8)).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val all = for (l <- 0L until 4L; r <- 100L until 105L) yield (l, r)
+    assert(got.toSeq.sorted === all)
+  }
+
   test("connected components: chain 1-2, 2-7 merges into one cluster") {
     val pairs = Seq((1L, 2L), (2L, 7L), (3L, 4L)).toDF("doc_a", "doc_b")
     val cc = Dedup.connectedComponents(pairs).collect()

@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 class StreamingSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
@@ -552,6 +554,28 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       assert(file.nonEmpty)
       assert(rows(dir.toString) === file)
     }
+  }
+
+  test("replay probes read a directory of part files like the single file") {
+    val dir = TmpDirs.scratch("graft_events_parts")
+    val events = dir.resolve("events.parquet")
+    // TIMESTAMP_MICROS, as in the single file: Spark's default INT96 ts
+    // column carries no footer min/max, and the probe falls back
+    val micros = operators.Lineage.child(spark, Tables.NanosFlag -> "true",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    Tables.events(micros, sf0001).repartition(2).write.parquet(events.toString)
+    val file = s"$sf0001/events.parquet"
+    for (c <- Seq("ts", "event_id")) {
+      val stats = StreamingOps.footerLongStats(spark, file, c)
+      assert(stats.isDefined)
+      assert(StreamingOps.footerLongStats(spark, events.toString, c) === stats)
+    }
+    val parts = scala.util.Using.resource(java.nio.file.Files.list(events))(
+      _.iterator.asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .toSeq)
+    assert(parts.length === 2)
+    assert(StreamingOps.replayBytes(dir.toString) ===
+      parts.map(java.nio.file.Files.size).sum)
   }
 
   test("stream_upsert closes every directory handle it opens") {
