@@ -135,9 +135,16 @@ object Bench {
       .split(' ')(0).toDouble
     catch { case _: Exception => -1.0 }
 
-  private def esc(s: String): String = s.flatMap {
+  /** The one JSON string escaper (without the enclosing quotes):
+    * backslash, quote, and ALL control chars (< 0x20) — a tab or CR in
+    * an oracle SQL string would otherwise leave `oracle_sql.json`
+    * unparseable and its correctness check unrun. */
+  private[graft] def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }

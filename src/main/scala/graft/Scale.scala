@@ -5,7 +5,6 @@ import graft.streaming.StreamingOps
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** The scale harness: replicate the sf corpus with re-keyed ids
   * ([[replicate]]), run one measurement kind on the replicas, and print
@@ -89,13 +88,12 @@ object Scale {
     * source doc carries [[HotSentence]] in both modes. Replica `rep`'s ids
     * move by `rep × idStride`.
     *
-    * Batch tables are split across the session's parallelism: the sf
+    * Every table is split across the session's parallelism: the sf
     * testdata is one part file, and one replicated file is one read
-    * partition, so every pre-shuffle stage would run on one core.
-    * `events` is the stream rule: one file (the replay harnesses copy it
-    * as one), `ts` as NTZ (the plain-micros vintage), the same time range
-    * with more users, and `customer` (stream_enrich's static side) copied
-    * as is. */
+    * partition, so every pre-shuffle stage would run on one core (the
+    * replays stream either layout in place). `events` keeps `ts` as NTZ
+    * (the plain-micros vintage) and the same time range with more users,
+    * and `customer` (stream_enrich's static side) is copied as is. */
   def replicate(s: SparkSession, srcDir: String, scale: Int, outDir: String,
       tables: Seq[String], mode: String = "neardup", vecMult: Int = 1,
       idStride: Long = IdStride): Unit = {
@@ -148,22 +146,10 @@ object Scale {
           .withColumn("l_orderkey", rekey("l_orderkey"))
           .withColumn("l_suppkey", rekey("l_suppkey")))
       case "events" =>
-        val stage = Paths.get(outDir, "_stage_events")
-        Tables.events(s, srcDir).select(col("*"), rep)
+        write("events", replicas(Tables.events(s, srcDir))
           .withColumn("event_id", rekey("event_id"))
           .withColumn("user_id", rekey("user_id"))
-          .drop("rep")
-          .withColumn("ts", col("ts").cast("timestamp_ntz"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(stage.toString)
-        val parts = Files.list(stage)
-        try {
-          val part = parts.iterator.asScala.find(_.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part produced under $stage"))
-          Files.move(part, Paths.get(outDir, "events.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally parts.close()
-        TmpDirs.delete(stage)
+          .withColumn("ts", col("ts").cast("timestamp_ntz")))
         Files.copy(Paths.get(srcDir, "customer.parquet"),
           Paths.get(outDir, "customer.parquet"),
           StandardCopyOption.REPLACE_EXISTING)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Lineage
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQueryProgress, Trigger}
@@ -44,59 +44,6 @@ object StreamingOps {
     else scala.util.Using.resource(java.nio.file.Files.newDirectoryStream(p,
       "[!_.]*.parquet"))(_.asScala.toSeq)
   }
-
-  /** (min, max) of an INT64 column straight from the parquet footer
-    * statistics of a table path, folded over its [[parquetParts]] — the
-    * replay harnesses need exactly one scalar (max ts for the sentinel,
-    * min/max event_id for the chunk bounds) and were paying a Spark
-    * aggregation JOB per replay for it (guide §6: use the metadata the
-    * format already wrote). INT64 min/max stats are exact (no binary
-    * truncation). A TIMESTAMP column comes back in epoch MICROS whatever
-    * unit its footer annotation names, so both events vintages
-    * (TIMESTAMP(NANOS) / TIMESTAMP_NTZ-micros) give the same scalar.
-    * None when any row-group lacks stats or no row-group holds a
-    * non-null value — callers fall back to the aggregation, so a
-    * stats-less writer can never change a result. */
-  private[graft] def footerLongStats(spark: SparkSession, path: String,
-      column: String): Option[(Long, Long)] =
-    try {
-      import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
-        TimestampLogicalTypeAnnotation}
-      val ranges = parquetParts(path).flatMap { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString),
-          spark.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val schema = r.getFooter.getFileMetaData.getSchema
-          val toMicros: Long => Long =
-            schema.getType(schema.getFieldIndex(column))
-              .getLogicalTypeAnnotation match {
-              case t: TimestampLogicalTypeAnnotation => t.getUnit match {
-                case TimeUnit.NANOS => v => Math.floorDiv(v, 1000L)
-                case TimeUnit.MILLIS => v => v * 1000L
-                case TimeUnit.MICROS => identity
-              }
-              case _ => identity
-            }
-          r.getFooter.getBlocks.asScala.toSeq
-            .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == column))
-            .flatMap { c =>
-              val st = c.getStatistics
-              require(st != null && !st.isEmpty, s"$f: $column has no stats")
-              if (!st.hasNonNullValue) None
-              else (st.genericGetMin, st.genericGetMax) match {
-                case (lo: java.lang.Long, hi: java.lang.Long) =>
-                  Some((toMicros(lo), toMicros(hi)))
-                case _ => throw new IllegalArgumentException(
-                  s"$f: $column is not INT64")
-              }
-            }
-        } finally r.close()
-      }
-      if (ranges.isEmpty) None
-      else Some((ranges.map(_._1).min, ranges.map(_._2).max))
-    } catch { case _: Exception => None }
 
   /** Child session for a replay harness, with [[graft.Tables.NanosFlag]]
     * set (the TIMESTAMP(NANOS) events vintage reads in it) and a
@@ -293,14 +240,9 @@ object StreamingOps {
     * — 8 partitions measured ~3× faster than 32 with identical output.
     * The pinned width lives in a child session ([[replayChild]]), so
     * concurrent queries on the caller's session never observe it. */
-  def qStreamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val child = replayChild(s, dir)
-    val joined = streamStreamIntervalJoin(readEventsStream(child, dir))
-    val name = s"ssjoin_${System.nanoTime()}"
-    runToEnd(joined.writeStream.format("memory").queryName(name)
-      .outputMode("append"))
-    child.table(name).orderBy("p_id", "v_id")
-  }
+  def qStreamStreamJoin(s: SparkSession, dir: String): DataFrame =
+    runToMemory(streamStreamIntervalJoin(readEventsStream(replayChild(s, dir),
+      dir)), "ssjoin")._1.orderBy("p_id", "v_id")
 
   /** Stream-static enrichment join — the production dimension-join
     * pattern: each streaming event joined to a STATIC (batch) dimension
@@ -331,10 +273,7 @@ object StreamingOps {
       readEventsStream(child, dir).filter(col("event_id") % 20 === 0),
       dim, "user_id", "c_custkey")
       .select("event_id", "user_id", "c_mktsegment")
-    val name = s"enrich_${System.nanoTime()}"
-    runToEnd(enriched.writeStream.format("memory").queryName(name)
-      .outputMode("append"))
-    child.table(name).orderBy("event_id")
+    runToMemory(enriched, "enrich")._1.orderBy("event_id")
   }
 
   /** Streaming exact dedup at ingest: drop repeats of `keyCols` arriving
@@ -391,6 +330,17 @@ object StreamingOps {
       recordStateOps(progress)
       progress
     } finally q.stop()
+  }
+
+  /** Run `out` to the end of its input into an append-mode memory sink
+    * named `prefix_<nanoTime>` ([[runToEnd]]): the sink's table, in
+    * `out`'s session, and the run's progress. */
+  private def runToMemory(out: DataFrame, prefix: String)
+      : (DataFrame, Seq[StreamingQueryProgress]) = {
+    val name = s"${prefix}_${System.nanoTime()}"
+    val progress = runToEnd(out.writeStream.format("memory").queryName(name)
+      .outputMode("append"))
+    (out.sparkSession.table(name), progress)
   }
 
   /** Drive a streaming frame into a parquet FILE sink — the production
@@ -549,6 +499,14 @@ object StreamingOps {
       }
   }
 
+  /** The sentinel replay's event time, epoch micros: 9000-01-01T00:00Z,
+    * one constant instant past any real event ([[replayEventsAppend]]). */
+  private val SentinelMicros: Long =
+    java.time.Instant.parse("9000-01-01T00:00:00Z").getEpochSecond * 1000000L
+  /** 30 days before the sentinel: a real event at or past it fails the
+    * replay, so the sentinel's watermark closes every real window. */
+  private val HorizonMicros: Long = SentinelMicros - 30L * 86400L * 1000000L
+
   /** Lossless epoch-micros extraction from `java.sql.Timestamp`:
     * `getTime` already includes the integral millis of the nano field,
     * so only the sub-milli remainder of `getNanos` is added. */
@@ -563,62 +521,64 @@ object StreamingOps {
     *
     * Replay mechanics: the events table streams in place through
     * [[readEventsStream]], and a second file stream unions in ONE
-    * sentinel row 30 days past the last real event: a one-line JSON file
-    * in a scoped temp dir whose `ts` (epoch micros) joins the stream
-    * after normalization, so the sentinel is the same whatever vintage
-    * the table was written in. Nothing is copied and nothing is written
-    * through Spark. The initial watermark is 0, so both sources replay as
-    * ONE micro-batch with nothing late-dropped; at its end the watermark
-    * advances past every real window end and the engine's no-data batch
-    * emits all finalized windows to the sink. The sentinel's own
-    * window/session never closes, so the append output is exactly the
-    * real rows (callers still filter the sentinel keys defensively).
+    * sentinel row at a constant instant, 9000-01-01T00:00Z — the
+    * engine's form of the reference's constant `{-1,-1}` end-of-work
+    * task. It is a one-line JSON file in a scoped temp dir whose `ts`
+    * (epoch micros) joins the stream after normalization, so it is the
+    * same whatever vintage the table was written in, and nothing is read
+    * from the input to place it. Nothing is copied and nothing is
+    * written through Spark. Every real event must lie more than 30 days
+    * before the sentinel: an event at or past that horizon fails the
+    * replay's data batch loudly (a null `ts` passes through). The
+    * initial watermark is 0, so both sources replay as ONE micro-batch
+    * with nothing late-dropped; at its end the watermark advances past
+    * every real window end and the engine's no-data batch emits all
+    * finalized windows to the sink. The sentinel's own window/session
+    * never closes, so the append output is exactly the real rows
+    * (callers still filter the sentinel keys defensively).
     *
     * A replay is therefore exactly two micro-batches, and [[runToEnd]]'s
     * `Trigger.AvailableNow` runs exactly those before the query
     * terminates: the data batch, then the zero-input batch the watermark
     * advance schedules, which emits the finalized rows. The terminated
-    * query's progress must show that shape, with a data batch of more
-    * than the sentinel's one row — checked on input rows, not on sink
-    * output, which is legitimately zero when the query's final filter
-    * drops every finalized row — or the replay throws rather than return
-    * a result that may be missing rows. */
+    * query's progress must show that shape — checked on input rows, not
+    * on sink output, which is legitimately zero when the query's final
+    * filter drops every finalized row — or the replay throws rather than
+    * return a result that may be missing rows. A data batch of the
+    * sentinel alone means the events table is empty, a documented
+    * precondition (`IllegalArgumentException`); any other shape is an
+    * `IllegalStateException`. */
   private[graft] def replayEventsAppend(s: SparkSession, dir: String,
       namePrefix: String)(build: DataFrame => DataFrame): DataFrame = {
     // Per-query state cardinality and the nanos read flag live in an
     // isolated child session, as in qStreamStreamJoin.
     val child = replayChild(s, dir)
-    // max ts (epoch micros) from the table's FOOTER stats, falling back
-    // to an aggregation over the normalized table when stats are absent:
-    // one fewer Spark job per replay.
-    val maxTsMicros: Long = footerLongStats(child, s"$dir/events.parquet", "ts")
-      .map(_._2).getOrElse {
-        val maxRow = graft.Tables.events(child, dir).agg(max("ts")).head()
-        require(!maxRow.isNullAt(0),
-          s"replay: events table at $dir is empty — nothing to stream")
-        tsMicros(maxRow.getTimestamp(0))
-      }
     graft.TmpDirs.scoped("graft_stream_replay") { tmp =>
-      val sentinelTs = maxTsMicros + 30L * 86400L * 1000000L
       java.nio.file.Files.writeString(tmp.resolve("sentinel.json"),
-        s"""{"event_id":-1,"ts":$sentinelTs,"user_id":-1,""" +
+        s"""{"event_id":-1,"ts":$SentinelMicros,"user_id":-1,""" +
           """"event_type":"__sentinel__","value":0.0}""")
       val sentinel = child.readStream
         .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE")
         .json(tmp.toString)
         .withColumn("ts", timestamp_micros(col("ts")))
-      val stream = readEventsStream(child, dir)
-        .unionByName(sentinel, allowMissingColumns = true)
-      val name = s"${namePrefix}_${System.nanoTime()}"
-      val inputRows = runToEnd(build(stream).writeStream
-        .format("memory").queryName(name).outputMode("append"))
-        .map(_.numInputRows)
+      val horizon = timestamp_micros(lit(HorizonMicros))
+      val events = readEventsStream(child, dir).withColumn("ts",
+        when(col("ts") >= horizon, raise_error(concat(
+          lit("replay: event ts "), col("ts").cast("string"),
+          lit(" is within 30 days of the sentinel at 9000-01-01T00:00Z"))))
+          .otherwise(col("ts")))
+      val (out, progress) = runToMemory(
+        build(events.unionByName(sentinel, allowMissingColumns = true)),
+        namePrefix)
+      val inputRows = progress.map(_.numInputRows)
+      require(!inputRows.headOption.contains(1L),
+        s"replay: events table at $dir is empty — nothing to stream")
       // the data batch carries the sentinel row plus at least one event
       if (!(inputRows.length == 2 && inputRows.head > 1 && inputRows(1) == 0))
-        throw new IllegalStateException(s"replay $name ran micro-batches " +
+        throw new IllegalStateException(s"replay $namePrefix ran micro-batches " +
           s"of ${inputRows.mkString("[", ", ", "]")} input rows, not one " +
           "data batch of events and one zero-input finalize batch")
-      child.table(name)
+      out
     }
   }
 
@@ -779,25 +739,24 @@ object StreamingOps {
       val tablePath = tmp.resolve("table").toString
       val ev = graft.Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      // chunk bounds from the footer stats of the plain-INT64 event_id
-      // column (exact; one fewer aggregation job), agg
-      // fallback when stats are absent
-      val (lo, hi) = footerLongStats(s, s"$dir/events.parquet", "event_id")
-        .getOrElse {
-          val bounds = ev.agg(min("event_id"), max("event_id")).head()
-          require(!bounds.isNullAt(0),
-            "stream_upsert replay harness requires a non-empty events table " +
-              "(chunk bounds derive from min/max event_id)")
-          (bounds.getLong(0), bounds.getLong(1))
-        }
-      val span = hi - lo + 1
       // Seed v0: an init row per user — all overwritten by the stream.
+      // The seed write's scan also observes the chunk bounds, min/max
+      // event_id, so they cost no job of their own.
+      val bounds = Observation()
       graft.sources.VersionedTable.init(s, tablePath,
-        ev.select(col("user_id")).distinct()
+        ev.observe(bounds, min("event_id").as("lo"), max("event_id").as("hi"))
+          .select(col("user_id")).distinct()
           .withColumn("event_id", lit(0L))
           .withColumn("event_type", lit("init"))
           .withColumn("value", lit(0.0))
           .select("event_id", "user_id", "event_type", "value"))
+      // an empty scan reports no (or null) bounds
+      val b = bounds.get
+      require(b.get("lo").exists(_ != null),
+        "stream_upsert replay harness requires a non-empty events table " +
+          "(chunk bounds derive from min/max event_id)")
+      val (lo, hi) = (b("lo").asInstanceOf[Long], b("hi").asInstanceOf[Long])
+      val span = hi - lo + 1
       val chunked = ev.withColumn("chunk",
         expr(s"CAST(((event_id - $lo) * 4) DIV $span AS INT)"))
       val base = System.currentTimeMillis() - 3600000L
@@ -850,8 +809,9 @@ object StreamingOps {
     * operator as the batch form, with a watermark bounding session state
     * (merged sessions are emitted once, when the watermark passes their
     * close). Shares the batch query's gaps-and-islands oracle: the
-    * sentinel row is 30 days past the last real event, so every real
-    * session finalizes in the no-data batch, and the sentinel's own
+    * sentinel row lies at least 30 days past every real event (the
+    * replay's horizon guard), so every real session finalizes in the
+    * no-data batch, and the sentinel's own
     * session (user_id −1) never closes — filtered defensively anyway.
     *
     * NOTE (q11-family sum discipline audit, round 19): the
@@ -891,8 +851,8 @@ object StreamingOps {
     * `Timestamp.getTime` drops the fixture's microseconds, so every
     * emitted start read `…729000` vs the oracle `min(ts)`'s `…729045`.
     * Fixed by carrying epoch micros through [[SessionState]] and
-    * emitting `timestamp_micros` here. The
-    * sentinel user (−1) times out 30 days late and never emits;
+    * emitting `timestamp_micros` here. The sentinel user (−1) would
+    * time out only past its own 9000-01-01 event, and never emits;
     * filtered defensively anyway. State per user is ONE fixed-size
     * SessionState row, dropped on close — bounded by live users, never
     * by events. */

@@ -15,13 +15,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * filter that matched nothing, a fresh table) — this pins the whole
   * registry's behavior at once.
   *
-  * The sentinel replays are excluded from the sweep: their harness
-  * derives the watermark horizon from max(ts), which is a documented
-  * non-empty requirement of the REPLAY HARNESS (not of the streaming
-  * operators — StreamingSpec covers those directly on in-memory streams,
-  * including empty ones). A separate test pins that every sentinel
-  * replay fails exactly that requirement. The other streaming wrappers
-  * (interval join, enrich, upsert) need no horizon and join the sweep.
+  * The sentinel replays are excluded from the sweep: a replay whose
+  * data batch carries only its constant sentinel row has streamed an
+  * empty table, which fails a documented non-empty requirement of the
+  * REPLAY HARNESS (not of the streaming operators — StreamingSpec
+  * covers those directly on in-memory streams, including empty ones).
+  * A separate test pins that every sentinel replay fails exactly that
+  * requirement. The other streaming wrappers (interval join, enrich,
+  * upsert) need no sentinel and join the sweep.
   */
 class EmptyInputSpec extends AnyFunSuite with SparkFixture {
 

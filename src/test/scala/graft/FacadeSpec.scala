@@ -1,8 +1,6 @@
 package graft
 
 import graft.facade.{FirstCharPartitioner, MapReduceJob, WordCombiner}
-import org.apache.spark.ListenerBusTestAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class FacadeSpec extends AnyFunSuite with SparkFixture {
@@ -110,21 +108,13 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("word count into the reference layout runs one Spark job") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     val out = TmpDirs.scratch("graft_facade_jobs")
-    val lines = sc.parallelize(Seq("d d h", "h x d", "y d h"), 3)
-    ListenerBusTestAccess.drain(sc)
-    sc.addSparkListener(l)
-    try {
+    val lines = spark.sparkContext.parallelize(Seq("d d h", "h x d", "y d h"), 3)
+    val jobs = jobsDuring {
       MapReduceJob.writeReferenceLayout(
         MapReduceJob.wordCount(lines, 3), out.toString, "wc")
-      ListenerBusTestAccess.drain(sc)
-    } finally sc.removeSparkListener(l)
-    assert(jobs.get === 1)
+    }
+    assert(jobs.size === 1)
     val counts = out.toFile.listFiles().toSeq.flatMap { f =>
       scala.io.Source.fromFile(f).getLines()
         .map { l => val Array(w, c) = l.split(" "); w -> c.toLong }

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 import graft.operators.{Dedup, Graph, Lineage}
 
@@ -36,19 +34,9 @@ class LineageSpec extends AnyFunSuite with SparkFixture {
 
   /** The `spark.sql.shuffle.partitions` of every SQL job `f` runs (SQL
     * confs ride each job's local properties), whichever session ran it. */
-  private def jobWidths(f: => Unit): Set[String] = {
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.shuffle.partitions")))
-          .foreach(seen.add)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { f; org.apache.spark.ListenerBusTestAccess.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    seen.asScala.toSet
-  }
+  private def jobWidths(f: => Unit): Set[String] =
+    jobsDuring(f).flatMap(e => Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.shuffle.partitions")))).toSet
 
   /** Shuffle widths the frame's physical plan asks for. */
   private def plannedWidths(df: DataFrame): Set[Int] =

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[Scale.replicate]], the one replicator behind every `graft.Scale`
   * kind: replicas must be disjoint copies (row and distinct-id counts
   * scale exactly), distinct-mode rotation must stay legal past the
-  * vector width, and the events rule must leave one file over the
-  * source's time range. */
+  * vector width, and the events rule must leave an `events.parquet`
+  * table over the source's time range. */
 class ScaleSpec extends AnyFunSuite with SparkFixture {
 
   private val idCols = Seq(
@@ -47,11 +47,10 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
       64 * src.select("embedding").distinct().count())
   }
 
-  test("events: one events.parquet file, 3x the rows, the source's ts range") {
+  test("events: an events.parquet table, 3x the rows, the source's ts range") {
     val out = TmpDirs.scratch("graft_scale_spec").toString
     Scale.replicate(spark, sf0001, 3, out, Seq("events"))
-    val events = java.nio.file.Paths.get(out, "events.parquet")
-    assert(java.nio.file.Files.isRegularFile(events))
+    assert(streaming.StreamingOps.parquetParts(s"$out/events.parquet").nonEmpty)
     val listing = java.nio.file.Files.list(java.nio.file.Paths.get(out))
     val names = try listing.map(_.getFileName.toString).toArray.toSet
       finally listing.close()

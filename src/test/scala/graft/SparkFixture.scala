@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.ListenerBusTestAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for specs: one lazy session per suite, UTC,
   * small shuffle fan-out (matches build.sbt javaOptions), and the
@@ -25,4 +28,21 @@ trait SparkFixture { self: AnyFunSuite =>
   }
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** The start event of every Spark job `body` runs, on any session of
+    * this context: the bus is drained before the listener goes on and
+    * again before it comes off, so no job of `body` is missed and none
+    * from before it is counted. */
+  def jobsDuring(body: => Unit): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    }
+    ListenerBusTestAccess.drain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerBusTestAccess.drain(sc) }
+    finally sc.removeSparkListener(l)
+    jobs.asScala.toSeq
+  }
 }

@@ -528,10 +528,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val nanosFile = s"$nanosEventsDir/events.parquet"
     assert(Tables.eventsFile(spark, nanosFile).schema("ts").dataType ===
       org.apache.spark.sql.types.LongType)
-    // the footer stats, read through the NANOS annotation, are the same instants
-    val microsStats = StreamingOps.footerLongStats(spark, s"$sf0001/events.parquet", "ts")
-    assert(microsStats.isDefined)
-    assert(StreamingOps.footerLongStats(spark, nanosFile, "ts") === microsStats)
     for (q <- Seq[(SparkSession, String) => DataFrame](
         StreamingOps.qStreamTumbling, StreamingOps.qStreamSessionsFmgws)) {
       def rows(dir: String) = q(spark, dir).collect().map(_.toSeq).toSeq
@@ -559,23 +555,49 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("replay probes read a directory of part files like the single file") {
     val dir = TmpDirs.scratch("graft_events_parts")
     val events = dir.resolve("events.parquet")
-    // TIMESTAMP_MICROS, as in the single file: Spark's default INT96 ts
-    // column carries no footer min/max, and the probe falls back
-    val micros = operators.Lineage.child(spark, Tables.NanosFlag -> "true",
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
-    Tables.events(micros, sf0001).repartition(2).write.parquet(events.toString)
-    val file = s"$sf0001/events.parquet"
-    for (c <- Seq("ts", "event_id")) {
-      val stats = StreamingOps.footerLongStats(spark, file, c)
-      assert(stats.isDefined)
-      assert(StreamingOps.footerLongStats(spark, events.toString, c) === stats)
-    }
+    Tables.events(spark, sf0001).repartition(2).write.parquet(events.toString)
     val parts = scala.util.Using.resource(java.nio.file.Files.list(events))(
       _.iterator.asScala.filter(_.getFileName.toString.startsWith("part-"))
         .toSeq)
     assert(parts.length === 2)
     assert(StreamingOps.replayBytes(dir.toString) ===
       parts.map(java.nio.file.Files.size).sum)
+  }
+
+  test("sentinel replays run the same Spark jobs on an INT96 events table as on the fixture") {
+    // Spark's default writer: a directory whose `ts` is INT96, a column
+    // parquet writes no footer min/max for
+    val dir = TmpDirs.scratch("graft_events_int96")
+    val events = dir.resolve("events.parquet")
+    Tables.events(spark, sf0001).write.parquet(events.toString)
+    val footer = scala.util.Using.resource(
+      org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(
+            StreamingOps.parquetParts(events.toString).head.toString),
+          spark.sparkContext.hadoopConfiguration)))(_.getFooter)
+    val schema = footer.getFileMetaData.getSchema
+    assert(schema.getType(schema.getFieldIndex("ts")).asPrimitiveType
+      .getPrimitiveTypeName.name === "INT96")
+    for (q <- Seq[(SparkSession, String) => DataFrame](
+        StreamingOps.qStreamTumbling, StreamingOps.qStreamSessionsFmgws)) {
+      def jobs(d: String) = jobsDuring { q(spark, d).collect() }.size
+      jobs(sf0001) // warm-up
+      assert(jobs(dir.toString) === jobs(sf0001))
+    }
+  }
+
+  test("a sentinel replay throws on an event within 30 days of the sentinel") {
+    val dir = TmpDirs.scratch("graft_events_horizon")
+    val events = Tables.events(spark, sf0001)
+    val first = events.agg(min("event_id")).head().getLong(0)
+    events.withColumn("ts", when(col("event_id") === first,
+        lit(Timestamp.valueOf("8999-12-15 00:00:00"))).otherwise(col("ts")))
+      .write.parquet(dir.resolve("events.parquet").toString)
+    val e = intercept[Exception] {
+      StreamingOps.qStreamTumbling(spark, dir.toString).collect()
+    }
+    assert(e.getMessage.contains("is within 30 days of the sentinel"), e.getMessage)
   }
 
   test("stream_upsert closes every directory handle it opens") {
