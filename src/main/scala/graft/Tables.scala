@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType}
 
@@ -46,10 +49,21 @@ object Tables {
   }
 
   /** The events file at `path` as stored, read under [[NanosFlag]]: its
-    * schema (footer only, no job) is the vintage probe — `ts` is
-    * LongType for the nanos vintage, TIMESTAMP_NTZ for the micros one. */
-  def eventsFile(s: SparkSession, path: String): DataFrame =
-    nanosReader(s).read.parquet(path)
+    * schema is the vintage probe — `ts` is LongType for the nanos
+    * vintage, TIMESTAMP_NTZ for the micros one. The schema comes from one
+    * footer read on the driver (the first of
+    * [[graft.streaming.StreamingOps.parquetParts]]), converted as Spark's
+    * schema inference converts it, and the read takes it explicitly, so
+    * the probe starts no Spark job. */
+  def eventsFile(s: SparkSession, path: String): DataFrame = {
+    val r = nanosReader(s)
+    val part = new org.apache.hadoop.fs.Path(
+      graft.streaming.StreamingOps.parquetParts(path).head.toString)
+    val footer = scala.util.Using.resource(ParquetFileReader.open(
+      HadoopInputFile.fromPath(part, r.sessionState.newHadoopConf())))(_.getFooter)
+    r.read.schema(new ParquetToSparkSchemaConverter(r.sessionState.conf)
+      .convert(footer.getFileMetaData.getSchema)).parquet(path)
+  }
 
   /** `ts` as TimestampType from its stored type `tsType`: nanos-as-long
     * by integer division (a double-typed `/ 1000` would lose precision

@@ -1,7 +1,8 @@
 package graft.facade
 
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{Partitioner, SparkEnv}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.SerializationStream
 
 import scala.collection.mutable
 import scala.reflect.ClassTag
@@ -25,14 +26,21 @@ class FirstCharPartitioner(numReducers: Int) extends Partitioner {
     val s = key.toString
     require(s.nonEmpty, "FirstCharPartitioner cannot route an empty key " +
       "(the reference crashes on key.at(0) here too — thread_pool.cc:125)")
-    val m = s.charAt(0).toInt % numReducers
-    (if (m == 0) numReducers else m) - 1
+    FirstCharPartitioner.reducerOf(s.charAt(0), numReducers)
   }
   override def equals(other: Any): Boolean = other match {
     case p: FirstCharPartitioner => p.numPartitions == numPartitions
     case _ => false
   }
   override def hashCode: Int = numPartitions
+}
+
+private[graft] object FirstCharPartitioner {
+  /** The partition of a key whose first char is `first`, of `numReducers`. */
+  def reducerOf(first: Char, numReducers: Int): Int = {
+    val m = first.toInt % numReducers
+    (if (m == 0) numReducers else m) - 1
+  }
 }
 
 /** The MapReduce facade: the reference's pipeline —
@@ -43,33 +51,42 @@ class FirstCharPartitioner(numReducers: Int) extends Partitioner {
   *
   * Design notes for scale (this is what the reference's design could not
   * do):
+  *   - The shuffle is a sorted-run shuffle, the reference's own shape:
+  *     there every mapper writes one intermediate file per reducer,
+  *     `<job>-<mapperRank>-p<reducerID>.tmp` (thread_pool.cc:144-160), and
+  *     the reducer sorts what it reads. Here each combiner flush is
+  *     sorted by `Ordering[K2]` on the map side and written as one encoded
+  *     byte run per reducer it holds keys of; the map task emits
+  *     `(reducerId, run)` records, so the shuffle carries at most
+  *     map tasks × flushes × reducers records, however many pairs they
+  *     hold. The reducer merges its runs instead of sorting pairs.
+  *   - Spark's shuffle moves the runs (fetch, compression, re-execution
+  *     of a lost map output); the reference's `.tmp`-files-over-NFS
+  *     transport is not ported.
   *   - The in-map combiner is bounded, not the reference's O(n·distinct)
-  *     linear-searched parallel arrays. It spills nothing itself: it
-  *     flushes when it holds `maxCombinerEntries` keys, keeping memory
-  *     bounded regardless of input size. [[run]] combines with a hash
-  *     map, for any key type.
+  *     linear-searched parallel arrays: a flush holds at most
+  *     `maxCombinerEntries` keys, keeping memory bounded regardless of
+  *     input size. [[run]] combines with a hash map, for any key type;
+  *     with no `combineFn` a flush is a buffer of at most
+  *     `maxCombinerEntries` mapped pairs. It writes its runs through
+  *     `SparkEnv.get.serializer` streams.
   *   - [[MapReduceJob.wordCount]] combines with [[WordCombiner]], which
-  *     keeps no object per word: it scans each line by index, keeps the
-  *     keys in one char arena and their hashes, offsets and counts in
-  *     primitive arrays, and makes a `String` only when a flush emits the
-  *     key. It flushes at the same bound, so the shuffle carries the same
-  *     records.
-  *   - Each [[WordCombiner]] flush is emitted in key order (the reducer's
-  *     `Ordering[String]`), so every reducer's sort receives a few sorted
-  *     runs to merge rather than records in random order.
-  *   - The shuffle is Spark's (sort-based, spillable, fault-tolerant) —
-  *     the reference's `.tmp`-files-over-NFS shuffle is not ported.
-  *   - One tail, shared by [[run]] and [[MapReduceJob.wordCount]]:
-  *     `repartitionAndSortWithinPartitions` gives the reducer sorted input
-  *     (reference SortFunction), and the reduce phase streams over groups
-  *     of consecutive equal keys — no per-partition materialization, so a
-  *     single reducer partition larger than memory still works.
+  *     keeps no object per word (one char arena, primitive arrays) and
+  *     writes its runs straight from the arena in a varint codec, so its
+  *     map side makes no object per key either.
+  *   - One tail, shared by [[run]] and [[MapReduceJob.wordCount]]: a k-way
+  *     heap merge of the partition's runs by `Ordering[K2]` (reference
+  *     SortFunction), then a stream over groups of consecutive equal
+  *     keys into `reduceFn`. The merge holds runs in memory up to a fixed
+  *     budget and spills the rest to a task-local temp file, so a single
+  *     reducer partition larger than memory still works.
   *
   * @param mapFn     (K1,V1) → intermediate (K2,V2) pairs (reference MapFunction)
   * @param reduceFn  key + all values → output values (reference GroupReduceFunction)
   * @param combineFn optional associative pre-aggregation (reference's in-map
   *                  combining, thread_pool.cc:90-98)
-  * @param maxCombinerEntries keys the combiner holds before it flushes; positive
+  * @param maxCombinerEntries keys (pairs, with no `combineFn`) a flush
+  *                  holds; positive
   */
 class MapReduceJob[K1, V1, K2: ClassTag: Ordering, V2: ClassTag](
     mapFn: (K1, V1) => IterableOnce[(K2, V2)],
@@ -79,34 +96,38 @@ class MapReduceJob[K1, V1, K2: ClassTag: Ordering, V2: ClassTag](
   require(maxCombinerEntries > 0,
     s"maxCombinerEntries must be positive: $maxCombinerEntries")
 
-  def run(input: RDD[(K1, V1)], partitioner: Partitioner): RDD[(K2, V2)] = {
-    val mapped = input.flatMap { case (k, v) => mapFn(k, v) }
+  def run(input: RDD[(K1, V1)], partitioner: Partitioner): RDD[(K2, V2)] =
+    MapReduceJob.mergeReduce(
+      input.mapPartitions { it =>
+        flushes(it.flatMap { case (k, v) => mapFn(k, v) })
+          .flatMap(MapReduceJob.serializedRuns(_, partitioner))
+      },
+      partitioner.numPartitions, MapReduceJob.readSerialized[K2, V2], reduceFn)
 
-    // In-map combine: bounded hash map, flushed on overflow. Emitting
-    // partial sums early is correct because reduceFn re-merges per key.
-    val combined = combineFn match {
-      case None => mapped
-      case Some(merge) => mapped.mapPartitions { it =>
-        new Iterator[(K2, V2)] {
-          private val buf = mutable.HashMap.empty[K2, V2]
-          private var drain: Iterator[(K2, V2)] = Iterator.empty
-          private def fill(): Unit = {
-            while (drain.isEmpty && it.hasNext && buf.size < maxCombinerEntries) {
-              val (k, v) = it.next()
+  /** The map side's flushes, each sorted by `Ordering[K2]`. Emitting
+    * partial sums early is correct because reduceFn re-merges per key. */
+  private def flushes(mapped: Iterator[(K2, V2)]): Iterator[Array[(K2, V2)]] =
+    new Iterator[Array[(K2, V2)]] {
+      def hasNext: Boolean = mapped.hasNext
+      def next(): Array[(K2, V2)] = {
+        if (!hasNext) throw new NoSuchElementException("no pairs left to flush")
+        val flush = combineFn match {
+          case None =>
+            val buf = mutable.ArrayBuffer.empty[(K2, V2)]
+            while (buf.size < maxCombinerEntries && mapped.hasNext) buf += mapped.next()
+            buf.toArray
+          case Some(merge) =>
+            val buf = mutable.HashMap.empty[K2, V2]
+            while (buf.size < maxCombinerEntries && mapped.hasNext) {
+              val (k, v) = mapped.next()
               buf.update(k, buf.get(k).fold(v)(merge(_, v)))
             }
-            if (drain.isEmpty && (buf.size >= maxCombinerEntries || !it.hasNext)) {
-              drain = buf.toList.iterator
-              buf.clear()
-            }
-          }
-          def hasNext: Boolean = { fill(); drain.hasNext }
-          def next(): (K2, V2) = { fill(); drain.next() }
+            buf.toArray
         }
+        java.util.Arrays.sort(flush, Ordering.by[(K2, V2), K2](_._1))
+        flush
       }
     }
-    MapReduceJob.shuffleReduce(combined, partitioner, reduceFn)
-  }
 }
 
 object MapReduceJob {
@@ -114,16 +135,18 @@ object MapReduceJob {
   /** The in-map combiner's default bound, in keys. */
   private[graft] val MaxCombinerEntries = 1 << 20
 
-  /** Reference phases 3-7 (partition, shuffle, sort) in one shuffle, then
-    * a streaming group-reduce over runs of equal keys: the tail that
-    * [[MapReduceJob.run]] and [[wordCount]] share. */
-  private def shuffleReduce[K2: ClassTag: Ordering, V2: ClassTag](
-      combined: RDD[(K2, V2)], partitioner: Partitioner,
+  /** Reference phases 4-7 (shuffle, sort, group-reduce) over the map
+    * side's `(reducerId, run)` records, the tail that [[MapReduceJob.run]]
+    * and [[wordCount]] share: a pass-through shuffle to the reducer each
+    * run names, a merge of each reducer's runs ([[Runs.merge]], runs
+    * decoded by `decode`), then a streaming group-reduce over groups of
+    * equal keys. */
+  private def mergeReduce[K2: Ordering, V2](runs: RDD[(Int, Array[Byte])],
+      numReducers: Int, decode: RunInput => Iterator[(K2, V2)],
       reduceFn: (K2, Iterator[V2]) => IterableOnce[(K2, V2)]): RDD[(K2, V2)] =
-    combined
-      .repartitionAndSortWithinPartitions(partitioner)
+    new ShuffledRDD[Int, Array[Byte], Array[Byte]](runs, new Runs.PassThrough(numReducers))
       .mapPartitions { it =>
-        val in = it.buffered
+        val in = Runs.merge(it.map(_._2), decode).buffered
         new Iterator[(K2, V2)] {
           private var out: Iterator[(K2, V2)] = Iterator.empty
           private def advance(): Unit = {
@@ -143,6 +166,32 @@ object MapReduceJob {
           def next(): (K2, V2) = { advance(); out.next() }
         }
       }
+
+  /** One run per partition that `flush` holds keys of, in flush order,
+    * each written through its own `SparkEnv.get.serializer` stream. */
+  private def serializedRuns[K: ClassTag, V: ClassTag](flush: Array[(K, V)],
+      partitioner: Partitioner): Iterator[(Int, Array[Byte])] = {
+    val ser = SparkEnv.get.serializer.newInstance()
+    val bufs = new Array[RunBuffer](partitioner.numPartitions)
+    val streams = new Array[SerializationStream](partitioner.numPartitions)
+    flush.foreach { case (k, v) =>
+      val p = partitioner.getPartition(k)
+      if (streams(p) == null) {
+        bufs(p) = new RunBuffer
+        streams(p) = ser.serializeStream(bufs(p))
+      }
+      streams(p).writeKey(k).writeValue(v)
+    }
+    streams.indices.collect { case p if streams(p) != null =>
+      streams(p).close()
+      (p, bufs(p).toByteArray)
+    }.iterator
+  }
+
+  /** The pairs of a [[serializedRuns]] run. */
+  private def readSerialized[K, V](in: RunInput): Iterator[(K, V)] =
+    SparkEnv.get.serializer.newInstance().deserializeStream(in)
+      .asKeyValueIterator.asInstanceOf[Iterator[(K, V)]]
 
   /** Writes `key value\n` per record, UTF-8 whatever the JVM's default
     * charset, without building a line per record. */
@@ -276,11 +325,18 @@ object MapReduceJob {
     * (thread_pool.cc:58) exists so its last token is counted — the scan
     * counts it naturally, and empty tokens (which crash the reference's
     * partitioner) are dropped. The map side is [[WordCombiner]], flushed
-    * at [[MaxCombinerEntries]] keys in key order.
+    * at [[MaxCombinerEntries]] keys into one sorted run per reducer of
+    * [[FirstCharPartitioner]]'s assignment.
     */
   def wordCount(lines: RDD[String], numReducers: Int): RDD[(String, Long)] =
-    shuffleReduce[String, Long](
-      lines.mapPartitions(WordCombiner.flushes(_, MaxCombinerEntries).flatMap(_.iterator)),
-      new FirstCharPartitioner(numReducers),
-      (word, counts) => Iterator((word, counts.sum)))
+    wordCount(lines, numReducers, MaxCombinerEntries)
+
+  /** [[wordCount]] with its combiner flushed at `maxEntries` keys. */
+  private[graft] def wordCount(lines: RDD[String], numReducers: Int,
+      maxEntries: Int): RDD[(String, Long)] = {
+    require(numReducers > 0, s"numReducers must be positive: $numReducers")
+    mergeReduce[String, Long](
+      lines.mapPartitions(WordCombiner.runs(_, maxEntries, numReducers)),
+      numReducers, WordCombiner.readRun, (word, counts) => Iterator((word, counts.sum)))
+  }
 }

@@ -10,9 +10,12 @@ package graft.facade
   *     arena offset and count live in primitive arrays. Entries are dense
   *     and in insertion order, so a key's length is the next key's offset
   *     minus its own.
-  *   - [[flush]] sorts the keys in `Ordering[String]` order (UTF-16 code
-  *     units, shorter first on a shared prefix), makes one `String` per
-  *     key and empties the table, keeping its arrays for the next fill.
+  *   - [[flushRuns]] sorts the keys in `Ordering[String]` order (UTF-16
+  *     code units, shorter first on a shared prefix) and writes each
+  *     entry straight from the arena into the run of its key's reducer
+  *     ([[FirstCharPartitioner.reducerOf]] on the key's first char), so a
+  *     flush makes no `String`, tuple or boxed count per key. It empties
+  *     the table, keeping its arrays for the next fill.
   *
   * The sort packs each key's leading characters and its entry index into
   * one `long` (characters as `c + 1` in just enough bits for the largest
@@ -115,19 +118,21 @@ private[graft] final class WordCombiner(maxEntries: Int) {
     }
   }
 
-  /** The table's keys and counts in key order; empties the table. */
-  def flush(): Array[(String, Long)] = {
+  /** Writes the table's entries in key order into `runs`, each into
+    * `runs(r)` for its key's reducer `r` of `runs.length`; empties the
+    * table. Each run so receives its reducer's keys in key order. */
+  def flushRuns(runs: Array[RunBuffer]): Unit = {
     val order = sortedEntries()
-    val out = new Array[(String, Long)](n)
     var k = 0
     while (k < n) {
       val j = order(k)
-      out(k) = (new String(arena, starts(j), starts(j + 1) - starts(j)), counts(j))
+      val s = starts(j)
+      WordCombiner.writeEntry(runs(FirstCharPartitioner.reducerOf(arena(s), runs.length)),
+        arena, s, starts(j + 1) - s, counts(j))
       k += 1
     }
     java.util.Arrays.fill(slots, 0)
     n = 0
-    out
   }
 
   /** Entry indexes in key order. */
@@ -195,11 +200,56 @@ private[graft] object WordCombiner {
   /** Fibonacci hashing: the top bits of `h * Golden` pick the slot. */
   private val Golden = 0x9E3779B9
 
-  /** The flushes of a [[WordCombiner]] bounded at `maxEntries` keys over
-    * `lines`, each in key order. A flush is taken only when the table is
-    * full or the input is done. */
+  /** Appends one entry to a word run: the key's length, each of its
+    * chars, then its count, every one a varint (an ASCII char takes one
+    * byte). Order is decided on the decoded chars, so the encoding
+    * cannot change `Ordering[String]`. */
+  def writeEntry(out: RunBuffer, chars: Array[Char], from: Int, len: Int, count: Long): Unit = {
+    out.writeVarLong(len)
+    var k = 0
+    while (k < len) { out.writeVarLong(chars(from + k)); k += 1 }
+    out.writeVarLong(count)
+  }
+
+  /** The entries of a word run ([[writeEntry]]), in the order written. */
+  def readRun(in: RunInput): Iterator[(String, Long)] = new Iterator[(String, Long)] {
+    private var chars = new Array[Char](64)
+    def hasNext: Boolean = in.more
+    def next(): (String, Long) = {
+      val len = in.readVarLong().toInt
+      if (len > chars.length) chars = new Array[Char](math.max(len, chars.length * 2))
+      var k = 0
+      while (k < len) { chars(k) = in.readVarLong().toChar; k += 1 }
+      (new String(chars, 0, len), in.readVarLong())
+    }
+  }
+
+  /** The runs of a [[WordCombiner]] bounded at `maxEntries` keys over
+    * `lines`: per flush, one `(reducer, run)` for each of `numReducers`
+    * reducers that the flush holds keys of. A flush is taken only when
+    * the table is full or the input is done. */
+  def runs(lines: Iterator[String], maxEntries: Int,
+      numReducers: Int): Iterator[(Int, Array[Byte])] = {
+    val bufs = Array.fill(numReducers)(new RunBuffer)
+    fills(lines, maxEntries).flatMap { table =>
+      table.flushRuns(bufs)
+      bufs.indices.collect { case r if bufs(r).size > 0 =>
+        val run = bufs(r).toByteArray
+        bufs(r).reset()
+        (r, run)
+      }
+    }
+  }
+
+  /** The flushes of [[runs]] with one reducer, decoded: each flush's keys
+    * and counts in key order. */
   def flushes(lines: Iterator[String], maxEntries: Int): Iterator[Array[(String, Long)]] =
-    new Iterator[Array[(String, Long)]] {
+    runs(lines, maxEntries, 1).map { case (_, run) => readRun(new RunInput(run)).toArray }
+
+  /** The table, each time it is full or the input is done and it holds
+    * a key; the caller flushes it before asking for the next. */
+  private def fills(lines: Iterator[String], maxEntries: Int): Iterator[WordCombiner] =
+    new Iterator[WordCombiner] {
       private val table = new WordCombiner(maxEntries)
       private var line: String = null
       private var pos = 0
@@ -211,7 +261,7 @@ private[graft] object WordCombiner {
         }
         table.size > 0
       }
-      def next(): Array[(String, Long)] =
-        if (hasNext) table.flush() else Iterator.empty.next()
+      def next(): WordCombiner =
+        if (hasNext) table else Iterator.empty.next()
     }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.facade.{FirstCharPartitioner, MapReduceJob, WordCombiner}
+import graft.facade.{FirstCharPartitioner, MapReduceJob, Runs, WordCombiner}
 import org.scalatest.funsuite.AnyFunSuite
 
 class FacadeSpec extends AnyFunSuite with SparkFixture {
@@ -202,5 +202,70 @@ class FacadeSpec extends AnyFunSuite with SparkFixture {
         .zipWithIndex().map(_.swap),
       new FirstCharPartitioner(2)).collect().toMap
     assert(got === Map("a" -> -1L, "b" -> -1L, "c" -> -1L))
+  }
+
+  test("word count over many flushes: each reducer's output in key order, exact counts") {
+    val rng = new scala.util.Random(17)
+    // U+E000–U+FFFF sort above every surrogate in Ordering[String]
+    val pieces = Vector("a", "z", "é", "\uE000", "\uF8FF", "\uFFFD", "\uFFFF",
+      "\uD834\uDD1E", "\uD83D\uDE00", "\uDBFF\uDFFF")
+    val lines = Vector.fill(400)(Vector.fill(1 + rng.nextInt(8))(
+      Vector.fill(1 + rng.nextInt(3))(pieces(rng.nextInt(pieces.size))).mkString)
+      .mkString(" "))
+    val bound = 50
+    assert(WordCombiner.runs(lines.iterator, bound, 1).size > 10)
+    val parts = MapReduceJob.wordCount(
+      spark.sparkContext.parallelize(lines, 3), 5, bound).glom().collect()
+    val p = new FirstCharPartitioner(5)
+    parts.zipWithIndex.foreach { case (part, r) =>
+      val keys = part.map(_._1)
+      keys.iterator.zip(keys.iterator.drop(1)).foreach { case (a, b) =>
+        assert(Ordering[String].lt(a, b), s"reducer $r: $a then $b")
+      }
+      keys.foreach(k => assert(p.getPartition(k) === r))
+    }
+    assert(parts.flatten.toMap === lines.flatMap(_.split(" ").filter(_.nonEmpty))
+      .groupMapReduce(identity)(_ => 1L)(_ + _))
+  }
+
+  test("a merge past its budget spills, equals the in-memory merge, leaves no temp file") {
+    val rng = new scala.util.Random(5)
+    val lines = Vector.fill(300)(Vector.fill(1 + rng.nextInt(6))(
+      rng.alphanumeric.take(1 + rng.nextInt(3)).mkString + "\u00e9\uD834\uDD1E".take(rng.nextInt(4)))
+      .mkString(" "))
+    val runs = WordCombiner.runs(lines.iterator, 40, 1).map(_._2).toArray
+    assert(runs.length > 5)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def spillFiles() = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_merge_")).toSet
+    val before = spillFiles()
+    val inMemory = Runs.merge(runs.iterator, WordCombiner.readRun).toVector
+    assert(spillFiles() === before)
+    val spilled = Runs.merge(runs.iterator, WordCombiner.readRun, budget = 0)
+    assert((spillFiles() -- before).size === 1)
+    assert(spilled.toVector === inMemory)
+    assert(spillFiles() === before)
+    // a task that stops early: its completion listener deletes the file
+    val head = spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
+      Runs.merge(runs.iterator, WordCombiner.readRun, budget = 0).take(1)
+    }.collect()
+    assert(head.toSeq === inMemory.take(1))
+    assert(spillFiles() === before)
+  }
+
+  test("run with no combineFn merges several sorted buffer flushes per map task") {
+    val lines = Seq("d d d h h x", "d h x x", "y d", "b a a d", "e x d b", "h h")
+    val job = new MapReduceJob[Long, String, String, Long](
+      mapFn = (_, l) => l.split(" ").filter(_.nonEmpty).map(w => (w, 1L)),
+      reduceFn = (w, vs) => Iterator((w, vs.sum)),
+      maxCombinerEntries = 3) // a flush holds 3 pairs: several per map task
+    val parts = job.run(
+      spark.sparkContext.parallelize(lines, 2).zipWithIndex().map(_.swap),
+      new FirstCharPartitioner(3)).glom().collect()
+    parts.foreach { part =>
+      val keys = part.map(_._1).toSeq
+      assert(keys === keys.sorted.distinct)
+    }
+    assert(parts.flatten.toMap === lines.flatMap(_.split(" "))
+      .groupMapReduce(identity)(_ => 1L)(_ + _))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.facade.{FirstCharPartitioner, MapReduceJob, WordCombiner}
+import graft.facade.{FirstCharPartitioner, MapReduceJob, RunBuffer, Runs, WordCombiner}
 import graft.operators.Dedup
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
@@ -121,6 +121,27 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     }
     assert(flushes.flatten.groupMapReduce(_._1)(_._2)(_ + _) ===
       lines.flatMap(_.split(" ").filter(_.nonEmpty)).groupMapReduce(identity)(_ => 1L)(_ + _))
+  }
+
+  test("property: merging sorted word runs equals a driver-side groupMapReduce in key order") {
+    val genRun = Gen.listOf(Gen.zip(kernelWord, Gen.choose(1L, Long.MaxValue / 64)))
+      .map(_.take(12).sortBy(_._1))
+    // budget 0 spills every run, 64 spills some, the default none
+    check(Prop.forAll(Gen.listOf(genRun).map(_.take(6)),
+        Gen.oneOf(0L, 64L, Runs.MergeBudget)) { (runs, budget) =>
+      val bytes = runs.map { run =>
+        val out = new RunBuffer
+        run.foreach { case (w, c) => WordCombiner.writeEntry(out, w.toCharArray, 0, w.length, c) }
+        out.toByteArray
+      }
+      val merged = Runs.merge(bytes.iterator, WordCombiner.readRun, budget).toVector
+      // sum consecutive equal keys, as the reduce tail groups them
+      val grouped = merged.foldLeft(Vector.empty[(String, Long)]) {
+        case (acc :+ ((k, n)), (w, c)) if k == w => acc :+ ((k, n + c))
+        case (acc, e) => acc :+ e
+      }
+      grouped == runs.flatten.groupMapReduce(_._1)(_._2)(_ + _).toVector.sortBy(_._1)
+    }, n = 200)
   }
 
   test("property: packSequences equals a sequential driver-side fold") {

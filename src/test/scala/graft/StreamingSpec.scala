@@ -537,6 +537,20 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("the events vintage probe starts no Spark job, on either vintage or layout") {
+    import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+    val parts = TmpDirs.scratch("graft_events_probe").resolve("events.parquet")
+    Tables.events(spark, sf0001).repartition(2).write.parquet(parts.toString)
+    for ((path, want) <- Seq[(String, DataType)](
+        s"$sf0001/events.parquet" -> TimestampNTZType,
+        s"$nanosEventsDir/events.parquet" -> LongType,
+        parts.toString -> TimestampType)) {
+      var ts: DataType = null
+      assert(jobsDuring { ts = Tables.eventsFile(spark, path).schema("ts").dataType }.isEmpty, path)
+      assert(ts === want, path)
+    }
+  }
+
   test("an events table written by Spark (a directory of part files) streams like the single file") {
     val dir = TmpDirs.scratch("graft_events_dir")
     java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "customer.parquet"),
