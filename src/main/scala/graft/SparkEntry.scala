@@ -61,7 +61,7 @@ object SparkEntry {
     sources.ZOrder.zorderWrite(
       Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"),
       "user_id", "value", out)
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .filter(col("user_id").between(20, 60) && col("value").between(50.0, 150.0))
       .select("event_id", "user_id", "event_type", "value")
       .orderBy("event_id")

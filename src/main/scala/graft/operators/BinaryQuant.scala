@@ -162,7 +162,7 @@ object BinaryQuant {
         dir, "embeddings.parquet", CodesVersion) { tmp =>
       writeBinaryCodes(Tables.embeddings(s, dir), tmp.toString)
     }
-    s.read.parquet(idx.toString)
+    Tables.parquet(s, idx.toString)
   }
 
   /** Batch binary-quantized top-k: Hamming prefilter over the packed

@@ -1334,8 +1334,8 @@ object Dedup {
       e.select(col("vec_id"), verifySketchUdf(col("embedding")).as("sk"))
         .write.mode("overwrite").parquet(tmp.resolve("sketch").toString)
     }
-    (s.read.parquet(idx.resolve("banded").toString),
-      s.read.parquet(idx.resolve("sketch").toString))
+    (Tables.parquet(s, idx.resolve("banded").toString),
+      Tables.parquet(s, idx.resolve("sketch").toString))
   }
 
   /** dedup_embedding — band geometry tuned to the corpus row count

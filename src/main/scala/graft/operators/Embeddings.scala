@@ -117,7 +117,7 @@ object Embeddings {
   /** Read the int8 table back in kernel form (array<float> — ~half the
     * scan width of double, still exact for integer codes ≤ 127). */
   def readQuantizedCodes(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .select(col("vec_id"), col("qv").cast("array<float>").as("qv"))
 
   /** The materialized codes table for `dir`, building it on first use

@@ -673,7 +673,7 @@ object Multimodal {
             corruptUdf(col("bytes")).as("bytes")))
         .write.mode("overwrite").parquet(tmp.toString)
     }
-    s.read.parquet(idx.toString)
+    Tables.parquet(s, idx.toString)
   }
 
   /** Registered query (`mm_neardup`): perceptual near-dup pairs over

@@ -250,7 +250,7 @@ object SemanticDedup {
         .toDF("cid", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     }
-    s.read.parquet(idx.toString).orderBy("cid")
+    Tables.parquet(s, idx.toString).orderBy("cid")
       .collect().map(_.getSeq[Double](1).toArray)
   }
 
@@ -290,7 +290,7 @@ object SemanticDedup {
           cap = Int.MaxValue)
       out.write.mode("overwrite").parquet(tmp.toString)
     }
-    s.read.parquet(idx.toString)
+    Tables.parquet(s, idx.toString)
   }
 
   /** Registered query (`dedup_semantic`): the embeddings corpus with

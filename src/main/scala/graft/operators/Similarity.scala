@@ -437,7 +437,7 @@ object Similarity {
   def probeIvfIndex(s: SparkSession, path: String,
       centroids: Array[Array[Double]], qvec: Array[Double],
       excludeVecId: Long, k: Int = 5, nprobe: Int = 4): DataFrame =
-    probeTopK(s.read.parquet(path), centroids, qvec, excludeVecId, k, nprobe)
+    probeTopK(Tables.parquet(s, path), centroids, qvec, excludeVecId, k, nprobe)
 
   /** Batch probe of a materialized index: top-k for EVERY query in
     * `queries` = (query_id, qvec) ([[Retrieval.queryVectors]]) from ONE
@@ -452,7 +452,7 @@ object Similarity {
     val probePairs = probePairsFor(centroids, queries, nprobe)
     val allCids = probePairs.map(_._2).distinct.map(Int.box)
     batchProbeCore(
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("cid").isin(
           scala.collection.immutable.ArraySeq.unsafeWrapArray(allCids.toArray): _*)),
       probePairs, queries, k)

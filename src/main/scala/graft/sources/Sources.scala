@@ -121,7 +121,7 @@ object Sinks {
     val totalBytes = fs.getContentSummary(hadoopPath).getLength
     val nFiles = math.max(1,
       math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    s.read.parquet(srcPath).coalesce(nFiles)
+    graft.Tables.parquet(s, srcPath).coalesce(nFiles)
       .write.mode("overwrite").parquet(destPath)
     nFiles
   }

@@ -297,9 +297,17 @@ object VersionedTable {
     val m = readManifestData(spark, table, v)
     require(m.files.nonEmpty,
       s"version $v of $tablePath has an empty manifest")
-    spark.read
-      .option("mergeSchema", m.merge.toString)
-      .parquet(m.files.map(new Path(table, _).toString): _*)
+    readFiles(spark, table, m.files, m.merge)
+  }
+
+  /** The data `files` of `table`: Spark's footer-merging read when the
+    * version's `merge` flag is set, else [[graft.Tables.parquet]] (one
+    * footer on the driver, no schema job). */
+  private def readFiles(spark: SparkSession, table: Path, files: Seq[String],
+      merge: Boolean): DataFrame = {
+    val paths = files.map(new Path(table, _).toString)
+    if (merge) spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    else graft.Tables.parquet(spark, paths: _*)
   }
 
   /** Copy-on-write upsert against the CURRENT snapshot; commits and
@@ -320,9 +328,7 @@ object VersionedTable {
     val manifest = readManifestData(spark, table, v)
     val current = manifest.files
     val priorMerge = manifest.merge
-    val snapshot = spark.read
-      .option("mergeSchema", priorMerge.toString).parquet(
-        current.map(new Path(table, _).toString): _*)
+    val snapshot = readFiles(spark, table, current, priorMerge)
     val missing = snapshot.columns.filterNot(updates.columns.contains)
     require(missing.isEmpty,
       s"updates lack table columns ${missing.mkString(", ")} — supply them " +
@@ -416,9 +422,7 @@ object VersionedTable {
         // earlier evolution may itself lack columns the snapshot has
         // (null-cast them in), and rows the batch did not touch lack the
         // batch's added columns (allowMissingColumns null-fills those).
-        val touchedDf0 = spark.read
-          .option("mergeSchema", priorMerge.toString).parquet(
-            touched.toSeq.map(new Path(table, _).toString): _*)
+        val touchedDf0 = readFiles(spark, table, touched.toSeq, priorMerge)
         val touchedDf = snapshot.schema.fields.foldLeft(touchedDf0) {
           (df, f) =>
             if (df.columns.contains(f.name)) df
@@ -473,9 +477,7 @@ object VersionedTable {
     val removed = fromFiles.filterNot(toFiles.toSet)
     def readSide(files: Seq[String], merge: Boolean,
         fallbackV: Long): DataFrame =
-      if (files.nonEmpty)
-        spark.read.option("mergeSchema", merge.toString)
-          .parquet(files.map(new Path(table, _).toString): _*)
+      if (files.nonEmpty) readFiles(spark, table, files, merge)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         read(spark, tablePath, Some(fallbackV)).schema)
@@ -543,8 +545,7 @@ object VersionedTable {
     val totalBytes = small.map(_._2).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val staging = new Path(table, s"_stage_${java.util.UUID.randomUUID}")
-    spark.read.option("mergeSchema", priorMerge.toString)
-      .parquet(small.map(f => new Path(table, f._1).toString): _*)
+    readFiles(spark, table, small.map(_._1), priorMerge)
       .coalesce(nOut)
       .write.parquet(staging.toString)
     val packed = adoptStaged(spark, table, staging)

@@ -46,10 +46,10 @@ object StreamingOps {
   }
 
   /** Child session for a replay harness, with [[graft.Tables.NanosFlag]]
-    * set (the TIMESTAMP(NANOS) events vintage reads in it) and a
-    * stateful-operator width SCALE-ADAPTIVE from the replayed events
-    * table's size ([[replayBytes]]): one state store per ~32 MB of
-    * input, floor 2
+    * set (the TIMESTAMP(NANOS) events vintage reads in it), Spark's
+    * `FileSystem`-based checkpoint file manager, and a stateful-operator
+    * width SCALE-ADAPTIVE from the replayed events table's size
+    * ([[replayBytes]]): one state store per ~32 MB of input, floor 2
     * ([[Lineage.width]] caps it at the parent's width and applies the
     * parent's [[Lineage.WidthKey]] override, which is how the
     * `Verify --perturb` jitter reaches these sessions — r19 review
@@ -63,11 +63,27 @@ object StreamingOps {
     * — 2 is the floor because several replays chain two stateful
     * operators whose stores commit in parallel per partition. A
     * constant would be wrong in both directions (r21 charter): this
-    * derives from input bytes, so a 100× replay widens on its own. */
+    * derives from input bytes, so a 100× replay widens on its own.
+    *
+    * The checkpoint manager: Spark's default, the `FileContext` one,
+    * renames through `FileContext.rename`, which probes the destination
+    * for a symlink; Hadoop's local file system forks a `readlink` process
+    * per probe, hundreds per replay. The `FileSystem` manager renames
+    * with `FileSystem.rename` and probes no link. Spark prefers the
+    * `FileContext` manager because its rename is atomic with overwrite;
+    * the `FileSystem` manager's is atomic only where the file system's
+    * is. That is safe here: every replay checkpoint is a fresh temporary
+    * directory that one query writes (Spark's temporary checkpoint of a
+    * memory-sink run, or the `TmpDirs.scoped` tree of `stream_upsert`),
+    * and it goes when the run ends. Checkpoint checksums
+    * (`spark.sql.streaming.checkpoint.fileChecksum.enabled`) are left at
+    * Spark's default, so they stay on. */
   private[graft] def replayChild(s: SparkSession, dir: String): SparkSession = {
     val width = Lineage.width(s, math.max(2L, replayBytes(dir) / (32L << 20) + 1L))
     Lineage.child(s, graft.Tables.NanosFlag -> "true",
-      "spark.sql.shuffle.partitions" -> width.toString)
+      "spark.sql.shuffle.partitions" -> width.toString,
+      "spark.sql.streaming.checkpointFileManagerClass" -> ("org.apache.spark.sql." +
+        "execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
   }
 
   /** Bytes of `$dir/events.parquet`, one file or the sum of its part

@@ -551,6 +551,39 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("the events probe reads a Spark-written table's schema as Spark does, metadata included") {
+    val note = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("comment", "spark row metadata").build()
+    val path = TmpDirs.scratch("graft_events_meta").resolve("events.parquet").toString
+    val events = Tables.events(spark, sf0001)
+    events.withColumn("event_type", col("event_type").as("event_type", note))
+      .repartition(2).write.parquet(path)
+    val probed = Tables.eventsFile(spark, path).schema
+    assert(probed === Tables.nanosReader(spark).read.parquet(path).schema)
+    assert(probed("event_type").metadata === note)
+  }
+
+  test("replay children checkpoint through the FileSystem manager, checksums on") {
+    import org.apache.spark.sql.execution.streaming.checkpointing.{
+      CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    val child = StreamingOps.replayChild(spark, sf0001)
+    val ckpt = new org.apache.hadoop.fs.Path(
+      TmpDirs.scratch("graft_replay_ckpt").toUri)
+    assert(CheckpointFileManager.create(ckpt, child.sessionState.newHadoopConf())
+      .isInstanceOf[FileSystemBasedCheckpointFileManager])
+    assert(CheckpointFileManager.create(ckpt, spark.sessionState.newHadoopConf())
+      .getClass.getSimpleName === "FileContextBasedCheckpointFileManager")
+    val checksum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    assert(!child.conf.getAll.contains(checksum))
+    assert(child.conf.get(checksum) === "true")
+    // a sentinel replay through such a child keeps its two-batch shape
+    // check (it throws otherwise) and the batch rows
+    val streamed = StreamingOps.qStreamTumbling(spark, sf0001).collect().map(_.toSeq).toSeq
+    assert(streamed.nonEmpty)
+    assert(streamed === operators.Relational.q11TimeBucket(spark, sf0001)
+      .collect().map(_.toSeq).toSeq)
+  }
+
   test("an events table written by Spark (a directory of part files) streams like the single file") {
     val dir = TmpDirs.scratch("graft_events_dir")
     java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "customer.parquet"),
